@@ -15,6 +15,23 @@ keys, never a cross join. The exact Jaccard verify runs only on LSH
 survivors (tiny fraction of n²).
 
 All hashing is md5-derived so results are engine-portable and seed-free.
+
+Surviving twins and dispatches, each with its reason (a route that lost
+its A/B is deleted, not kept behind a flag; re-run any A/B with
+``tools/ab.py <entry>``):
+
+- banding ``impl="expr"`` (:func:`_use_arrow_banding`): the Arrow twin
+  emits long ids, so non-long id columns take the expression form; it
+  is also the bit-exact parity reference.
+- :func:`minhash_verified_pairs` ``fused``: a size dispatch on the
+  Catalyst estimate (:data:`VERIFIED_FUSED_MIN_INPUT_BYTES`) — the
+  fused route's construction-time job only pays off on large inputs.
+- :func:`minhash_drop_set` ``pass2_impl``: a priced route — pass-1
+  byproducts bound the pass-2 pair count, which picks skip, pair join
+  or bucket-local verify.
+- :func:`simhash` ``impl``: Arrow for full-width fingerprints, the
+  expression form for truncated ``bits`` and as the cross-engine
+  reference.
 """
 
 from __future__ import annotations
@@ -212,17 +229,6 @@ def _nonempty_sigs(
     return sigs
 
 
-#: Default implementation for the banded LSH builders. "arrow" routes
-#: through :func:`_banded_rows_arrow` — a mapInPandas twin computing the
-#: SAME md5-derived values (bit-identical: same UTF-8 md5 per shingle,
-#: same int64 permutation arithmetic, same decimal rendering into the
-#: band-slice md5), measured several× faster than the interpreted
-#: HOF aggregate (the signature fold never enters codegen — the same
-#: class of exception as text.repetition_stats, see CLAUDE.md). "expr"
-#: keeps the pure-expression form: the cross-engine-readable reference,
-#: the fallback for non-long id columns, and the parity-test twin.
-BANDED_IMPL = "arrow"
-
 #: minhash_drop_set pass-2 auto cutover: estimated rep-collapsed
 #: candidate pairs (Σ per failed bucket of distinct shingle-classes ×
 #: |failed in bucket| — exact via ``__classkey`` on the Arrow banding
@@ -231,13 +237,6 @@ BANDED_IMPL = "arrow"
 #: plain pair join wins on fixed stage overhead. See the dispatch
 #: comment in minhash_drop_set.
 PASS2_LOCAL_MIN_EST_PAIRS = 500_000
-
-#: minhash_drop_set input shape (r13): True fuses the banded rows and
-#: the shingle frame into ONE per-doc Arrow pass+cache (see the perdoc
-#: branch in :func:`minhash_drop_set`); False keeps the r12 two-pass
-#: shape. A module flag so interleaved A/B measurement and parity tests
-#: can flip it in-process; the fused default is the measured winner.
-DROP_SET_FUSED = True
 
 #: minhash_verified_pairs fused-route cutover (r14, VERDICT_r13 item 3):
 #: an input whose optimizer-ESTIMATED size reaches this takes the fused
@@ -589,10 +588,19 @@ def _banded_rows_arrow(
     ).mapInPandas(build, schema)
 
 
-def _use_arrow_banding(df: DataFrame, id_col: str, impl: str | None) -> bool:
+def _use_arrow_banding(df: DataFrame, id_col: str, impl: str = "arrow") -> bool:
+    """True when the banded LSH builders take :func:`_banded_rows_arrow`
+    — a mapInPandas twin computing the SAME md5-derived values
+    (bit-identical: same UTF-8 md5 per shingle, same int64 permutation
+    arithmetic, same decimal rendering into the band-slice md5),
+    measured several× faster than the interpreted HOF aggregate (the
+    signature fold never enters codegen — the same class of exception
+    as text.repetition_stats, see CLAUDE.md). The twin's output schema
+    is long ids, so a non-long ``id_col`` always takes the expression
+    form; ``impl="expr"`` forces it (the cross-engine-readable
+    reference and the parity-test twin)."""
     from pyspark.sql import types as T
 
-    impl = BANDED_IMPL if impl is None else impl
     return impl == "arrow" and isinstance(
         df.schema[id_col].dataType, T.LongType
     )
@@ -601,13 +609,13 @@ def _use_arrow_banding(df: DataFrame, id_col: str, impl: str | None) -> bool:
 def _banded(
     df: DataFrame, text_col: str, id_col: str,
     num_hashes: int, bands: int, k: int,
-    impl: str | None = None,
+    impl: str = "arrow",
     with_sig_key: bool = False,
 ) -> DataFrame:
     """(id, band, bucket) rows: each doc explodes to ``bands`` rows keyed
     by the md5 of that band's signature slice. Dispatches to the Arrow
-    twin by default (:data:`BANDED_IMPL`); ``impl="expr"`` forces the
-    expression form (always used for non-long id columns).
+    twin by default (:func:`_use_arrow_banding`); ``impl="expr"`` forces
+    the expression form (always used for non-long id columns).
     ``with_sig_key`` adds a per-doc ``__sigkey`` long (``_h64`` of the
     comma-joined full signature — see :func:`_banded_rows_arrow`); the
     Arrow twin ALSO emits ``__classkey`` (exact shingle-class identity,
@@ -662,7 +670,7 @@ def _banded(
 def _banded_with_buckets(
     df: DataFrame, text_col: str, id_col: str,
     num_hashes: int, bands: int, k: int,
-    impl: str | None = None,
+    impl: str = "arrow",
 ) -> DataFrame:
     """Like :func:`_banded`, but buckets are long-typed (the portable
     md5→conv hash over the SAME shared band-slice expressions) and each
@@ -790,14 +798,16 @@ def minhash_verified_pairs(
     """
     if fused is None:
         fused = (
-            _use_arrow_banding(df, id_col, None)
+            _use_arrow_banding(df, id_col)
             and _plan_size_bytes(df) >= VERIFIED_FUSED_MIN_INPUT_BYTES
         )
     if fused:
-        if not _use_arrow_banding(df, id_col, None):
+        if not _use_arrow_banding(df, id_col):
             raise ValueError(
-                "fused=True requires a long-typed id column (the per-doc "
-                "Arrow layout); use fused=False or 'auto' (None)"
+                f"fused=True requires a long-typed id column (the per-doc "
+                f"Arrow layout), but {id_col!r} is "
+                f"{df.schema[id_col].dataType.simpleString()}; use "
+                "fused=False or 'auto' (None)"
             )
         # Checkpoint ONLY the compact per-doc bucket proxy (id + bands
         # longs): the md5+permutation banding pass is the expensive
@@ -901,11 +911,11 @@ def _simhash_fp_arrow_udf():
     regime where Arrow UDFs beat built-ins 7× for
     text.repetition_stats. Early rounds measured the two EQUAL on this
     stage (per-token md5 dominating both); the r14 re-measurement
-    (VERDICT_r13 item 6, tools/measure_srp_simhash.py,
-    plans/r14/simhash_wide_ab.jsonl) has the Arrow pass winning every
-    interleaved round at every doc length tried — 0.54-0.71 vs
-    1.0-1.4 s on the real 5k-doc sf0.1 corpus, growing to ~2× at 400
-    words — so it is the default since r14 (see :func:`simhash`).
+    (VERDICT_r13 item 6, plans/r14/simhash_wide_ab.jsonl; re-run with
+    ``tools/ab.py simhash60`` / ``simhash400``) has the Arrow pass
+    winning every interleaved round at every doc length tried —
+    0.54-0.71 vs 1.0-1.4 s on the real 5k-doc sf0.1 corpus, growing to
+    ~2× at 400 words — so it is the default since r14 (see :func:`simhash`).
     Parity is pinned in tests; the expression twin remains the
     cross-engine reference."""
     import hashlib
@@ -958,12 +968,13 @@ def simhash(
 
     ``impl=None`` (default) routes full-width fingerprints through the
     Arrow twin (r14, VERDICT_r13 item 6): re-measured interleaved on
-    this epoch (tools/measure_srp_simhash.py + the real sf0.1 corpus,
-    plans/r14/simhash_wide_ab.jsonl), the Arrow pass wins at EVERY
-    tested shape — real 5k-doc/54-word corpus 0.54-0.71 vs 1.0-1.4 s
-    (4/4 rounds), 30k synthetic docs 0.8-1.0 vs 1.2-1.5 s at 60 words
-    up to 2.7-4.8 vs 6.4-8.8 s at 400 words — the r13 expr-wins reading
-    did not reproduce. ``impl="expr"`` keeps the pure-expression form
+    this epoch (synthetic docs + the real sf0.1 corpus,
+    plans/r14/simhash_wide_ab.jsonl; ``tools/ab.py simhash60`` /
+    ``simhash400``), the Arrow pass wins at EVERY tested shape — real
+    5k-doc/54-word corpus 0.54-0.71 vs 1.0-1.4 s (4/4 rounds), 30k
+    synthetic docs 0.8-1.0 vs 1.2-1.5 s at 60 words up to 2.7-4.8 vs
+    6.4-8.8 s at 400 words — the r13 expr-wins reading did not
+    reproduce. ``impl="expr"`` keeps the pure-expression form
     (the cross-engine-readable reference and the only form for
     truncated ``bits``); values are bit-identical, pinned by test."""
     if impl is None:
@@ -1830,7 +1841,7 @@ def minhash_drop_set(
             "'pairs' (or 'auto', which routes non-long ids to it)"
         )
     perdoc = None
-    if DROP_SET_FUSED and _use_arrow_banding(df, id_col, None):
+    if _use_arrow_banding(df, id_col):
         # ONE corpus scan+tokenize pass (r13): the per-doc Arrow frame
         # carries the shingle set, both identity keys, and every band
         # bucket, so the banded rows and the shingle frame are cheap
@@ -1857,6 +1868,7 @@ def minhash_drop_set(
         )
         sh = perdoc.select(F.col(id_col), F.col("__sh"))
     else:
+        # non-long ids: expression banding plus a separate shingle pass
         banded = _banded(
             df, text_col, id_col, num_hashes, bands, k, with_sig_key=True
         ).persist()

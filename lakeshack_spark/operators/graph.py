@@ -29,7 +29,9 @@ executor-loss resilience; local mode has no such loss model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from contextlib import contextmanager, nullcontext
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 #: connected_components' per-round propagate checkpoint takes the
@@ -44,6 +46,24 @@ from pyspark.sql import DataFrame, functions as F
 CC_AQEOFF_MIN_NODES = 10_000_000
 
 
+@contextmanager
+def _aqe_disabled(spark: SparkSession):
+    """Run the body with ``spark.sql.adaptive.enabled`` set to "false",
+    restoring the prior value in ``finally``. Wraps a checkpoint whose
+    LogicalRDD must keep its HashPartitioning: under AQE the adaptive
+    plan's final partitioning is not propagated and the checkpoint
+    reports UnknownPartitioning (measured), so downstream joins
+    re-shuffle it. The flip is session-global: plans compiled
+    concurrently on the same session during the body also see AQE off
+    — the graph operators run from a single driver thread."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
 def _symmetrized_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """Directed edge set: both orientations, no self loops, distinct —
     repartitioned by the join key BEFORE checkpointing, so every round's
@@ -52,16 +72,10 @@ def _symmetrized_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     corpus scale the rounds' repeated edge exchanges dominate the whole
     operator. Plan-asserted in tests/test_plans.py.
 
-    The checkpoint is taken with AQE disabled for just this query:
-    a Dataset checkpointed under AQE captures its LogicalRDD with
-    UnknownPartitioning (measured — the adaptive plan's final
-    partitioning is not propagated), which silently defeats the reuse;
-    with AQE off the LogicalRDD keeps HashPartitioning(src) and
-    AQE-planned downstream joins honor it (only the other side gets an
-    ENSURE_REQUIREMENTS exchange). The toggle is scoped to the
-    materialization and restored in ``finally``; plans compiled
-    concurrently on the same session during that window would also see
-    AQE off — this operator runs from a single driver thread."""
+    The checkpoint is taken under :func:`_aqe_disabled`: with AQE off
+    the LogicalRDD keeps HashPartitioning(src) and AQE-planned
+    downstream joins honor it (only the other side gets an
+    ENSURE_REQUIREMENTS exchange)."""
     e = pairs.select(
         F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
     )
@@ -70,10 +84,7 @@ def _symmetrized_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    spark = pairs.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _aqe_disabled(pairs.sparkSession):
         edges = sym.repartition(F.col("src")).localCheckpoint(eager=True)
         # Size the FIXED partitioning to the materialized edge count:
         # every round inherits it, and AQE cannot coalesce it away (that
@@ -92,8 +103,6 @@ def _symmetrized_edges(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
                 eager=True
             )
         return edges
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def connected_components(
@@ -185,8 +194,9 @@ def connected_components(
         # first halves that: measured interleaved A/B at 10M edges /
         # 5M nodes 91-127 s vs 102-148 s lazy (−11..−14%, and −32% at
         # 0.5M edges), exact tie on the 5k-node bench graph where the
-        # extra checkpoint job is overhead-free (tools/measure_cc.py).
-        # The checkpoint is taken with AQE disabled for just this query
+        # extra checkpoint job is overhead-free (``tools/ab.py cc``
+        # re-runs the AQE arms; the lazy arm is recorded in plans/r13).
+        # The checkpoint is taken under _aqe_disabled
         # (the _symmetrized_edges precedent, r14 / VERDICT_r13 item 4)
         # WHEN the node universe is large: under AQE the checkpointed
         # LogicalRDD reports Unknown partitioning and the jump
@@ -209,15 +219,12 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"), F.max("old").alias("old"))
         )
-        if scoped_aqe_off:
-            spark = prop_lazy.sparkSession
-            prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                propagated = prop_lazy.localCheckpoint(eager=True)
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        else:
+        scope = (
+            _aqe_disabled(prop_lazy.sparkSession)
+            if scoped_aqe_off
+            else nullcontext()
+        )
+        with scope:
             propagated = prop_lazy.localCheckpoint(eager=True)
         # jump: label <- label's label (pointer halving)
         lookup = propagated.select(
@@ -301,18 +308,13 @@ def pagerank(
     # Same AQE-off checkpoint scope as _symmetrized_edges so the
     # LogicalRDD keeps HashPartitioning(src) and rounds exchange only
     # the rank frame.
-    spark = pairs.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with _aqe_disabled(pairs.sparkSession):
         n_parts = edges.rdd.getNumPartitions()
         edges = (
             edges.join(deg, "src")
             .repartition(n_parts, F.col("src"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     universe = edges.select(F.col("src").alias("node")).distinct().localCheckpoint(
         eager=True
     )
@@ -509,7 +511,6 @@ def k_core(
     import time as _time
 
     edges = _symmetrized_edges(pairs, id_a, id_b)
-    spark = pairs.sparkSession
     n_rounds = rounds if rounds is not None else max_rounds
     for rnd in range(n_rounds):
         _t0 = _time.time()
@@ -534,14 +535,10 @@ def k_core(
         survivors = edges.join(keep, "src", "semi").join(
             keep.select(F.col("src").alias("dst")), "dst", "semi"
         )
-        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with _aqe_disabled(pairs.sparkSession):
             edges = survivors.repartition(F.col("src")).localCheckpoint(
                 eager=True
             )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
         if round_stats is not None:
             entry = {"round": rnd, "sec": round(_time.time() - _t0, 3)}
             if n_below is not None:

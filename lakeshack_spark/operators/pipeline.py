@@ -50,6 +50,35 @@ class CleanConfig:
     )
 
 
+def _prefilter(
+    docs: DataFrame, cfg: CleanConfig, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The stages before near-dedup, shared by :func:`clean_corpus` and
+    :func:`clean_report`: (filtered+masked corpus, its exact dedup).
+    Both frames are lazy; the second is built on the first."""
+    from lakeshack_spark.session import spread_small_input
+
+    # The quality trio's per-row expression trees serialize on one core
+    # when the corpus is one single-row-group file (measured ~9 s
+    # single-task at bench scale; see session.spread_small_input).
+    docs = spread_small_input(docs)
+    df = text.lang_id(docs, text_col)
+    df = text.quality_score(df, text_col)
+    df = text.repetition_stats(df, text_col)
+    pred = (
+        (F.col("n_words") >= cfg.min_words)
+        & (F.col("quality") >= cfg.min_quality)
+        & (F.col("max_word_frac") <= cfg.max_word_frac)
+        & (F.col("top2gram_frac") <= cfg.max_top2gram_frac)
+    )
+    if cfg.languages:
+        pred = pred & F.col("lang_pred").isin(list(cfg.languages))
+    df = df.filter(pred).select(*docs.columns, "lang_pred", "quality")
+    if cfg.mask_pii:
+        df = text.mask_pii(df, text_col)
+    return df, dedup.exact_dedup_rows(df, text_col, id_col)
+
+
 def clean_corpus(
     docs: DataFrame,
     cfg: CleanConfig = CleanConfig(),
@@ -100,27 +129,8 @@ def clean_corpus(
     non-profiled path is unchanged.
     """
     import time as _time
-    from lakeshack_spark.session import spread_small_input
 
-    # The quality trio's per-row expression trees serialize on one core
-    # when the corpus is one single-row-group file (measured ~9 s
-    # single-task at bench scale; see session.spread_small_input).
-    docs = spread_small_input(docs)
-    df = text.lang_id(docs, text_col)
-    df = text.quality_score(df, text_col)
-    df = text.repetition_stats(df, text_col)
-    pred = (
-        (F.col("n_words") >= cfg.min_words)
-        & (F.col("quality") >= cfg.min_quality)
-        & (F.col("max_word_frac") <= cfg.max_word_frac)
-        & (F.col("top2gram_frac") <= cfg.max_top2gram_frac)
-    )
-    if cfg.languages:
-        pred = pred & F.col("lang_pred").isin(list(cfg.languages))
-    df = df.filter(pred).select(*docs.columns, "lang_pred", "quality")
-    if cfg.mask_pii:
-        df = text.mask_pii(df, text_col)
-    df = dedup.exact_dedup_rows(df, text_col, id_col)
+    _, df = _prefilter(docs, cfg, text_col, id_col)
     if cfg.near_dedup:
         df = df.persist()
         if stage_stats is not None:
@@ -160,33 +170,14 @@ def clean_report(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> dict[str, int]:
-    """Per-stage survivor counts (runs the pipeline stage-by-stage; use on
+    """Per-stage survivor counts of :func:`clean_corpus`'s stages (use on
     samples or audits — each count is a job)."""
     counts: dict[str, int] = {"input": docs.count()}
-    df = text.repetition_stats(
-        text.quality_score(text.lang_id(docs, text_col), text_col), text_col
-    )
-    pred = (
-        (F.col("n_words") >= cfg.min_words)
-        & (F.col("quality") >= cfg.min_quality)
-        & (F.col("max_word_frac") <= cfg.max_word_frac)
-        & (F.col("top2gram_frac") <= cfg.max_top2gram_frac)
-    )
-    if cfg.languages:
-        pred = pred & F.col("lang_pred").isin(list(cfg.languages))
-    df = df.filter(pred).select(*docs.columns)
-    counts["after_quality_filters"] = df.count()
-    df = dedup.exact_dedup_rows(df, text_col, id_col)
-    counts["after_exact_dedup"] = df.count()
+    filtered, deduped = _prefilter(docs, cfg, text_col, id_col)
+    counts["after_quality_filters"] = filtered.count()
+    counts["after_exact_dedup"] = deduped.count()
     if cfg.near_dedup:
-        df = df.persist()
-        drops = dedup.minhash_drop_set(
-            df.select(id_col, text_col), text_col, id_col,
-            threshold=cfg.jaccard_threshold, **cfg.minhash_cfg,
-        )
-        cleaned = df.join(drops, id_col, "left_anti")
-        counts["after_near_dedup"] = cleaned.count()
-        # report returns only counts — release every cache we created
-        drops.unpersist()
-        df.unpersist()
+        out = clean_corpus(docs, cfg, text_col, id_col)
+        counts["after_near_dedup"] = out.count()
+        out.unpersist()  # report returns only counts
     return counts

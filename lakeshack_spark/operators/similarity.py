@@ -14,12 +14,27 @@ Two physical strategies behind one logical operator:
 
 All arithmetic is double-precision with a fixed fold order so results are
 reproducible across engines and runs. Since r13 the exact cosine family
-defaults to a BIT-IDENTICAL vectorized Arrow scorer
-(:data:`COSINE_SCORE_IMPL`; see :func:`_seq_block_dot` for the exactness
-argument) — higher-order-function folds never enter whole-stage codegen
-(they evaluate interpreted, CLAUDE.md), so "stay JVM-side" was costing
-~µs per array element; the expression twins remain behind ``impl="expr"``
-and parity is pinned to the last bit by tests.
+defaults to a BIT-IDENTICAL vectorized Arrow scorer (``impl="arrow"``;
+see :func:`_seq_block_dot` for the exactness argument) —
+higher-order-function folds never enter whole-stage codegen (they
+evaluate interpreted, CLAUDE.md), so "stay JVM-side" was costing ~µs per
+array element (the interpreted fold measured ~1.2 s just to assign
+2000×8 cells at sf0.1, where the Arrow pass is milliseconds per batch).
+Parity is pinned to the last bit by tests.
+
+Surviving twins and dispatches, each with its reason (re-run any A/B
+with ``tools/ab.py <entry>``):
+
+- cosine ``impl="expr"`` (:func:`cosine_topk`, :func:`ivf_assign`,
+  :func:`ivf_topk`): the bit-exact parity reference, the fallback for
+  non-long ids and oversized query batches, and
+  :func:`ivfpq_encode`'s oracle-gated form.
+- :func:`srp_signature` ``impl``: a dimension dispatch
+  (:data:`SRP_ARROW_MIN_DIM`) — Arrow wins from 64 dims, below that
+  the interpreted fold is small and keeps the expression form.
+- :func:`cosine_topk_pandas`: the rank-exact BLAS tier (final-ulp
+  inexact, so never behind the hash-gated entries) for query batches
+  up to :data:`COSINE_TOPK_MAX_QUERIES`.
 """
 
 from __future__ import annotations
@@ -58,19 +73,6 @@ def norm_d(a: Column) -> Column:
 
 def cosine_col(a: Column, b: Column) -> Column:
     return dot_d(a, b) / (norm_d(a) * norm_d(b))
-
-
-#: Default scoring implementation for the EXACT cosine family
-#: (``cosine_topk`` / ``ivf_assign`` / ``ivf_topk``): "arrow" routes the
-#: per-row fold work through a BIT-IDENTICAL vectorized NumPy pass
-#: (r13 optimization; see :func:`_seq_block_dot` for the exactness
-#: argument), "expr" keeps the interpreted higher-order-function fold.
-#: Values are equal to the last bit either way — the hash-gated oracle
-#: entries pass on both — so this is a pure physical-plan choice:
-#: HOF lambdas never enter whole-stage codegen (CLAUDE.md), and the
-#: interpreted fold measured ~1.2 s just to assign 2000×8 cells at
-#: sf0.1 where the Arrow pass is milliseconds per batch.
-COSINE_SCORE_IMPL = "arrow"
 
 
 def _seq_block_dot(A, Q):
@@ -339,7 +341,7 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str | None = None,
+    impl: str = "arrow",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -347,7 +349,7 @@ def cosine_topk(
     broadcast (queries are assumed ≪ candidates); ties broken by neighbor
     id so results are fully deterministic.
 
-    ``impl`` (default :data:`COSINE_SCORE_IMPL`): ``"arrow"`` scores each
+    ``impl`` (default ``"arrow"``): ``"arrow"`` scores each
     candidate batch against the collected query matrix in one vectorized
     NumPy pass that reproduces the expression fold BIT-EXACTLY
     (:func:`_seq_block_dot` — unlike :func:`cosine_topk_pandas`, which is
@@ -356,7 +358,6 @@ def cosine_topk(
     :data:`COSINE_TOPK_MAX_QUERIES` (driver-memory bound), when query
     dims are heterogeneous, or when ``id_col`` is not long-typed.
     Both paths feed the same two-stage per-query top-k."""
-    impl = COSINE_SCORE_IMPL if impl is None else impl
     if impl == "arrow":
         scored = _cosine_scores_vs_queries_arrow(
             vectors, queries, id_col, vec_col
@@ -594,7 +595,7 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "centroid",
-    impl: str | None = None,
+    impl: str = "arrow",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (by cosine), entirely
     map-side: returns the input plus ``cell``.
@@ -616,7 +617,7 @@ def ivf_assign(
     sequential IEEE-double fold as :func:`dot_d`, so cosine values are
     bit-identical to the previous in-plan computation.
 
-    ``impl`` (default :data:`COSINE_SCORE_IMPL`): ``"arrow"`` runs the
+    ``impl`` (default ``"arrow"``): ``"arrow"`` runs the
     argmax in a vectorized Arrow pass whose per-centroid cosines are
     BIT-IDENTICAL to the expression fold (:func:`_seq_block_dot`) with
     the same tie rule (equal sims → smallest cid) and the same
@@ -626,7 +627,6 @@ def ivf_assign(
     matmul bulk tier, final-ulp inexact), this twin is safe for the
     hash-gated entries.
     """
-    impl = COSINE_SCORE_IMPL if impl is None else impl
     entries = _centroid_entries(centroids, centroid_id_col, centroid_vec_col)
     if impl == "arrow":
         return _assign_cells_arrow(vectors, entries, vec_col)
@@ -785,7 +785,7 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str | None = None,
+    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: score only candidates whose IVF cell is among the
     query's ``nprobe`` nearest centroids. With ``nprobe >= n_centroids``
@@ -798,13 +798,12 @@ def ivf_topk(
     collected ONCE for both the assignment and the probe step — no
     crossJoin, no per-query window, no extra centroid-side jobs.
 
-    ``impl`` (default :data:`COSINE_SCORE_IMPL`): ``"arrow"`` routes the
+    ``impl`` (default ``"arrow"``): ``"arrow"`` routes the
     two O(n)-row fold workloads — cell assignment and candidate scoring
     — through bit-exact vectorized Arrow passes (:func:`_seq_block_dot`);
     probe-cell selection stays in-plan (O(queries) rows). ``"expr"``
     keeps every fold interpreted in the JVM. Identical values and ranks
     either way; non-long id columns always take ``"expr"``."""
-    impl = COSINE_SCORE_IMPL if impl is None else impl
     if impl == "arrow" and not isinstance(
         vectors.schema[id_col].dataType, T.LongType
     ):
@@ -897,8 +896,8 @@ def _srp_bits_arrow_udf(planes):
     regime: the expression form evaluates n_bits interpreted HOF folds
     of dim elements PER ROW (HOF lambdas never enter codegen), so its
     cost is ~µs × n_bits × dim, while one vectorized pass amortizes
-    across the batch. Measured interleaved
-    (tools/measure_srp_simhash.py, r14): the twin wins 10× at 256 dims,
+    across the batch. Measured interleaved (r14; re-run with
+    ``tools/ab.py srp256`` / ``srp64``): the twin wins 10× at 256 dims,
     5× at 64 dims × 200k rows, and still 0.43 vs 0.59 s at the 6k-row
     bench shape — srp_signature dispatches on dim
     (:data:`SRP_ARROW_MIN_DIM`)."""
@@ -924,8 +923,8 @@ def _srp_bits_arrow_udf(planes):
 #: srp_signature auto-dispatch cutover: at or above this embedding
 #: dimension the Arrow twin scores the sign bits (one vectorized pass
 #: per batch) instead of n_bits interpreted HOF folds per row. Measured
-#: interleaved at n_bits=64 (tools/measure_srp_simhash.py, r14,
-#: plans/r14/srp_wide_ab.jsonl): arrow wins every tested shape —
+#: interleaved at n_bits=64 (r14, ``tools/ab.py srp64`` / ``srp128`` /
+#: ``srp256``, plans/r14/srp_wide_ab.jsonl): arrow wins every tested shape —
 #: 200k vectors: 2.5 vs 25 s at 256 dims (10×), 1.2-1.6 vs 10-11 s at
 #: 128, 0.8-1.0 vs 4.7-5.5 s at 64; and still 0.43-0.46 vs 0.59-1.09 s
 #: at the 6k-row × 64-dim bench shape (4/4 rounds). Below 64 dims the

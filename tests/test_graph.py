@@ -418,7 +418,7 @@ def test_cc_materializes_propagated_each_round(spark, monkeypatch):
     aggregation (whose lineage holds the round's |E|join|V| edge join)
     must be EAGERLY checkpointed before the jump — left lazy, the
     subtree evaluates once per consumer inside one job (measured
-    −11..−32% at 0.5M-10M edges, tools/measure_cc.py). Pin: exactly TWO
+    −11..−32% at 0.5M-10M edges, plans/r13/cc_materialize_ab.txt). Pin: exactly TWO
     eager localCheckpoint calls per round on the round's 3-column
     (node, label, old) frames — propagated AND jumped; a reversion to
     the lazy shape drops it to one."""
@@ -463,3 +463,24 @@ def test_cc_aqeoff_dispatch_arms_agree(spark, monkeypatch):
     scoped = _labels(graph.connected_components(pairs))
     assert scoped == base
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev
+
+
+def test_aqe_disabled_restores_prior_value(spark):
+    """The one scoped AQE-off helper restores the session's prior value
+    when its body raises, and leaves an already-"false" session at
+    "false" (it must not reset it to the "true" default)."""
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key, "true")
+    try:
+        spark.conf.set(key, "true")
+        with pytest.raises(RuntimeError, match="body failed"):
+            with graph._aqe_disabled(spark):
+                assert spark.conf.get(key) == "false"
+                raise RuntimeError("body failed")
+        assert spark.conf.get(key) == "true"
+        spark.conf.set(key, "false")
+        with graph._aqe_disabled(spark):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)

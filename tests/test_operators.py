@@ -821,7 +821,7 @@ def test_verified_pairs_fused_equals_lazy(spark, docs):
     sdocs = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    with pytest.raises(ValueError, match="long-typed id"):
+    with pytest.raises(ValueError, match="long-typed id.*'doc_id' is string"):
         dedup.minhash_verified_pairs(sdocs, fused=True)
 
 

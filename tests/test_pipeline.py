@@ -69,11 +69,16 @@ def test_clean_keep_earliest_rule(spark, docs):
 
 
 def test_clean_report_counts_decrease(spark, docs):
-    rep = clean_report(docs, CleanConfig())
+    cfg = CleanConfig()
+    rep = clean_report(docs, cfg)
     assert rep["input"] >= rep["after_quality_filters"]
     assert rep["after_quality_filters"] >= rep["after_exact_dedup"]
     assert rep["after_exact_dedup"] >= rep["after_near_dedup"]
     assert rep["after_near_dedup"] > 0
+    # the report counts the pipeline's own stages, not a copy of them
+    out = clean_corpus(docs, cfg)
+    assert rep["after_near_dedup"] == out.count()
+    out.unpersist()
 
 
 def test_language_restriction(spark, docs):
