@@ -26,9 +26,6 @@ its A/B is deleted, not kept behind a flag; re-run any A/B with
 - :func:`minhash_verified_pairs` ``fused``: a size dispatch on the
   Catalyst estimate (:data:`VERIFIED_FUSED_MIN_INPUT_BYTES`) — the
   fused route's construction-time job only pays off on large inputs.
-- :func:`minhash_drop_set` ``pass2_impl``: a priced route — pass-1
-  byproducts bound the pass-2 pair count, which picks skip, pair join
-  or bucket-local verify.
 - :func:`simhash` ``impl``: Arrow for full-width fingerprints, the
   expression form for truncated ``bits`` and as the cross-engine
   reference.
@@ -229,15 +226,6 @@ def _nonempty_sigs(
     return sigs
 
 
-#: minhash_drop_set pass-2 auto cutover: estimated rep-collapsed
-#: candidate pairs (Σ per failed bucket of distinct shingle-classes ×
-#: |failed in bucket| — exact via ``__classkey`` on the Arrow banding
-#: path, a signature-keyed lower bound on the expression path) at or
-#: above this use the bucket-local prefix-filtered form; below it the
-#: plain pair join wins on fixed stage overhead. See the dispatch
-#: comment in minhash_drop_set.
-PASS2_LOCAL_MIN_EST_PAIRS = 500_000
-
 #: minhash_verified_pairs fused-route cutover (r14, VERDICT_r13 item 3):
 #: an input whose optimizer-ESTIMATED size reaches this takes the fused
 #: per-doc route (one Arrow tokenize+hash pass, eagerly
@@ -285,19 +273,16 @@ def _banded_rows_arrow(
     to the expression form otherwise). Bit-identical to the expression
     path — pinned by tests/test_operators.py parity tests.
 
-    ``with_sig_key`` (non-bucket layout only) adds two per-doc identity
-    columns used by :func:`minhash_drop_set`:
+    ``with_sig_key`` (non-bucket layout only) narrows ``bucket`` to the
+    ``_h64`` long and adds two per-doc identity columns:
 
     - ``__sigkey``: the md5→first-15-hex-digits long (= ``_h64``) of
       the comma-joined decimal rendering of the FULL signature — a
-      signature identity for the pass-2 routing estimate (identical
-      shingle sets ⇒ identical signatures ⇒ identical key);
+      signature identity (identical shingle sets ⇒ identical
+      signatures ⇒ identical key);
     - ``__classkey``: the exact shingle-class identity
       (:func:`_class_key_col`), rendered from the per-gram md5 digests
-      this builder already computes — so the class-rep collapse costs
-      no extra hashing here, where the expression form pays an
-      interpreted md5 per shingle (measured 0.8-1.5 s on the bench
-      corpus when pass 2 evaluated it from the shingle frame).
+      this builder already computes.
 
     ``perdoc_shingles`` (r13; requires ``with_sig_key``) switches the
     OUTPUT LAYOUT to one row per doc: ``(id, __sh, __sigkey,
@@ -641,12 +626,8 @@ def _banded(
         out_cols.append("__sigkey")
         # NO ``__classkey`` here, deliberately (ADVICE r9): on this
         # interpreted path ``_class_key_col`` is an md5 PER SHINGLE per
-        # doc — paying it for the WHOLE corpus at banding time costs
-        # more than the class collapse saves (a clean corpus pays it
-        # yet skips pass 2 entirely). :func:`_pass2_audience` computes
-        # it over just the pass-2 candidate audience instead (its
-        # no-classkey branch); the Arrow twin emits it at banding
-        # because the per-gram digests are already in hand there.
+        # doc; the Arrow twin emits it because the per-gram digests are
+        # already in hand there.
     # sig-key layout (drop-set private): long _h64 buckets, matching the
     # Arrow twin's r14 narrowing (see _banded_rows_arrow's schema
     # comment); the public bare layout keeps the md5-hex bucket.
@@ -1336,432 +1317,155 @@ def contamination_flags(
     )
 
 
-def minhash_first_candidates(
-    banded: DataFrame, id_col: str = "doc_id", with_rows: bool = False
-):
+def minhash_first_candidates(banded: DataFrame, id_col: str = "doc_id"):
     """Each doc's bucket-min candidates: for every band, the smallest id
     in the doc's bucket (when below its own) — distinct (id_b, id_a)
     rows, AT MOST ``bands`` per doc. JOIN-FREE by construction (a window
     min over the bucket), which is the property that makes keep-earliest
     dedup linear in docs instead of quadratic in cluster size; pinned by
-    a plan test asserting no Join node.
-
-    All bucket-mins (not just the global smallest) are kept: on corpora
-    whose buckets mix true near-dups with look-alikes (shared vocabulary,
-    sub-threshold Jaccard), a single candidate per doc almost always
-    fails verification and pushes everything into the pairwise fallback —
-    measured 4984/4991 failures on the bench corpus. Up to ``bands``
-    candidates keeps pass 1 O(docs × bands) while catching any dup that
-    is ITS bucket's minimum in at least one band.
-
-    ``with_rows=True`` additionally returns the pre-distinct per-band
-    rows ``(id_col, band, bucket, id_a, __bsz)`` — ``__bsz`` is the
-    bucket's size from the SAME window pass (no extra shuffle), so
-    Σ ``__bsz`` over a doc's rows upper-bounds its pass-2 candidate
-    count (each qualifying bucket contributes at most |bucket| smaller
-    ids). :func:`minhash_drop_set` prices its pass-2 route from that
-    byproduct instead of paying a dedicated estimate job, and (r14)
-    :func:`_pass2_audience` scopes pass 2 from these cached rows instead
-    of re-deriving the failed docs' bucket membership from ``banded``:
-    a failed doc's banded rows MISSING here are exactly the buckets it
-    is the minimum of, and a bucket where the failed doc is the minimum
-    cannot hold any smaller-id candidate — dropping those rows loses no
-    pass-2 pair (both pass-2 forms require ``a.id < b.id`` within the
-    shared bucket)."""
+    a plan test asserting no Join node."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket")
-    marked = banded.withColumn("__bucket_min", F.min(id_col).over(w))
-    if with_rows:
-        marked = marked.withColumn("__bsz", F.count(F.lit(1)).over(w))
-    rows = marked.filter(F.col("__bucket_min") < F.col(id_col))
-    first = rows.select(
-        F.col(id_col).alias("id_b"), F.col("__bucket_min").alias("id_a")
-    ).distinct()
-    if not with_rows:
-        return first
-    return first, rows.select(
-        F.col(id_col),
-        F.col("band"),
-        F.col("bucket"),
-        F.col("__bucket_min").alias("id_a"),
-        F.col("__bsz"),
-    )
-
-
-def _tier1_pair_estimate(banded, fb_buckets, failed_docs, id_col) -> int:
-    """ONE-job rep-collapsed pair estimate for the drop-set auto route:
-    Σ per failed bucket of distinct shingle-classes × failures there.
-    Exact when the banded rows carry ``__classkey`` (Arrow banding —
-    the production path for long ids); a ``__sigkey``-keyed lower bound
-    otherwise (forced expression banding — see the dispatch comment in
-    :func:`minhash_drop_set`). A separate function so the routing rules
-    that must SKIP it (non-long ids, explicit routes, tier-0 small/zero
-    bounds) are pinnable by monkeypatch."""
-    est_key = (
-        "__classkey" if "__classkey" in banded.columns else "__sigkey"
-    )
-    failed_ids = failed_docs.select(
-        F.col("id_b").alias(id_col), F.lit(1).alias("__f")
-    )
     return (
-        banded.join(fb_buckets, ["band", "bucket"], "left_semi")
-        .join(failed_ids, id_col, "left")
-        .groupBy("band", "bucket")
-        .agg(
-            F.sum("__f").alias("__nf"),
-            F.count_distinct(est_key).alias("__bcls"),
-        )
-        .agg(F.sum(F.col("__nf") * F.col("__bcls")))
-        .collect()[0][0]
-        or 0
-    )
-
-
-def _pass2_audience(banded, sh, failed_docs, id_col, cand_rows=None):
-    """Shared pass-2 scoping: the failed docs' banded rows, the buckets
-    they occupy, and the shingle-class representatives of every doc in
-    those buckets.
-
-    ``cand_rows`` (r14): the persisted pass-1 window byproduct
-    ``(id, band, bucket, id_a, __bsz)``. When given, ``fb`` and
-    ``fb_buckets`` are PROJECTIONS of that cache instead of a fresh
-    ``banded`` semi-join lineage — the failed docs' qualifying rows were
-    already computed by the pass-1 window, so pass 2's scoping jobs read
-    cached rows rather than re-deriving the (band, bucket) membership.
-    Exactness: the rows cand_rows lacks (a failed doc's rows in buckets
-    it is the MINIMUM of) cannot contribute a pass-2 pair — both forms
-    require a smaller-id partner in the shared bucket, and none exists
-    below the bucket minimum (see :func:`minhash_first_candidates`).
-
-    Class collapse: an identical shingle SET (not just identical text —
-    e.g. word-order rotations of a template under k=1) ⇒ identical
-    minhash signature, identical buckets, and identical Jaccard against
-    every doc, so the class's min id (which is provably also every
-    bucket-min it appears in) stands in exactly for the whole class:
-    (rep, b) verifies iff (any member, b) verifies, and rep < b follows
-    from rep ≤ member < b. Without this collapse a failed doc whose
-    bucket holds an m-doc duplicate cluster meets m candidates (measured
-    6.7M pairs from 4228 failures against a planted 2000-doc cluster);
-    with it, one per bucket — pass 2 scales with failures × distinct
-    shingle-classes per bucket, never cluster size.
-
-    Class key = md5 over the sorted PER-SHINGLE md5s: hex digests are
-    fixed-alphabet, so the comma join cannot collide however weird the
-    tokens are (a raw-text join with any separator is ambiguous the
-    moment a token contains it). An md5 collision merging two classes
-    is the only residual failure mode — negligible vs the constructible
-    separator ambiguity.
-
-    Reps are computed only over docs that share a bucket with a failed
-    doc — pass 2's only audience. Members of one class occupy identical
-    buckets, so if any member is in a failed bucket the class's GLOBAL
-    min is too: the restricted min equals the global min, exactly. With
-    zero failures this whole branch aggregates nothing.
-    """
-    if cand_rows is not None:
-        fb = cand_rows.join(
-            failed_docs.select(F.col("id_b").alias(id_col)),
-            id_col,
-            "left_semi",
-        ).select(id_col, "band", "bucket")
-    else:
-        fb = banded.join(
-            failed_docs.select(F.col("id_b").alias(id_col)),
-            id_col,
-            "left_semi",
-        )
-    fb_buckets = fb.select("band", "bucket").distinct()
-    if "__classkey" in banded.columns:
-        # the banding pass already rendered the class key from the gram
-        # digests it computes anyway — grouping the persisted banded
-        # rows replaces an interpreted md5 PER SHINGLE over the shingle
-        # frame (measured 0.8-1.5 s on the bench corpus). Duplicate
-        # rows per doc (one per band) do not move the min.
-        reps = (
-            banded.join(fb_buckets, ["band", "bucket"], "left_semi")
-            .groupBy("__classkey")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
-        )
-        return fb, fb_buckets, reps
-    cand_docs = (
-        banded.join(fb_buckets, ["band", "bucket"], "left_semi")
-        .select(id_col)
+        banded.withColumn("__bucket_min", F.min(id_col).over(w))
+        .filter(F.col("__bucket_min") < F.col(id_col))
+        .select(F.col(id_col).alias("id_b"), F.col("__bucket_min").alias("id_a"))
         .distinct()
     )
-    reps = (
-        sh.join(cand_docs, id_col, "left_semi")
-        .groupBy(_class_key_col(F.col("__sh")).alias("__sk"))
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return fb, fb_buckets, reps
 
 
-def _drop_set_pass2_pairs(
-    banded, sh, verified, fb, reps, first, id_col, threshold
-):
-    """Pass 2, pair-join form (the r6/r7 shape, kept as the parity
-    reference for the local form): bucket-equi candidate join restricted
-    to failed docs' buckets against class reps, size-ratio prefiltered,
-    distinct, then the exact-Jaccard verify join.
+def _bucket_verify_group(ids, shs, threshold):
+    """One bucket of the drop-set walk (module-level so it is directly
+    unit-testable against a brute-force reference — see test_operators):
+    ``ids`` in ascending order, ``shs`` their shingle sets. Returns the
+    ids with at least one EARLIER member whose exact Jaccard is
+    ``>= threshold`` — keep-earliest within the bucket. Pure Python,
+    deterministic; exact for ``threshold > 0`` (the operator's sets are
+    never empty, which makes it exact for any threshold there).
 
-    Size prefilter inside the bucket join: J ≤ min(|a|,|b|)/max(|a|,|b|),
-    so pairs whose shingle-set sizes differ beyond the threshold ratio
-    can never verify — two int columns filter them BEFORE the distinct
-    shuffle and the array-bearing verify join (measured on the bench
-    corpus: 5.05M → 1.94M pass-2 pairs, verify 15.8 s → 2.9 s). The
-    1e-9 slack only ever keeps extra pairs; a filtered pair is exactly
-    a failed verification, and its id_b is already a failed doc by
-    construction, so the drop set is unchanged — still pinned equal to
-    minhash_verified_pairs' distinct id_b set.
-
-    No broadcast hint: failures are small BY CONSTRUCTION (LSH false
-    positives), but a hint would outlive that assumption on adversarial
-    data — AQE picks broadcast from the runtime size.
-
-    ``fb`` / ``reps`` are the audience frames from
-    :func:`_pass2_audience`, computed once by the caller and shared with
-    the local form. ``reps=None`` skips the class collapse entirely —
-    the caller routes here only when the candidate-pair bound is already
-    small, where evaluating the class keys (an md5 per shingle) costs
-    more than the handful of duplicate verifies it would save; the
-    candidate superset changes nothing in the drop set (the invariant
-    is ∃ a verified earlier match, and every pair is exactly verified).
-    """
-    zcol = sh.select(F.col(id_col), F.size("__sh").alias("__z"))
-    cand_side = (
-        banded if reps is None else banded.join(reps, id_col, "left_semi")
-    )
-    banded_reps = cand_side.join(zcol, id_col)
-    fb_z = fb.join(zcol, id_col)
-    rest = (
-        banded_reps.alias("a")
-        .join(
-            fb_z.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & (
-                F.least(F.col("a.__z"), F.col("b.__z")).cast("double")
-                >= (F.lit(threshold) - F.lit(1e-9))
-                * F.greatest(F.col("a.__z"), F.col("b.__z"))
-            ),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-        .join(first, ["id_b", "id_a"], "left_anti")  # already tried
-    )
-    return (
-        verified(rest).filter(F.col("__j") >= threshold).select("id_b").distinct()
-    )
-
-
-def _bucket_verify_group(ids, flags, shs, threshold):
-    """One bucket's exact prefix-filtered verify (the local pass-2 core,
-    module-level so it is directly unit-testable against a brute-force
-    reference — see test_operators): returns the failed ids with at
-    least one verified (J >= threshold) smaller-id rep in this bucket.
-    Pure Python, deterministic."""
+    - A set equal to an earlier member's is dropped at once (J = 1);
+      every later doc then meets only the first member of each distinct
+      set (its class representative) — J depends on the set alone, and
+      the representative is the class's smallest id.
+    - Each new class first tries the bucket's min id (the bucket-min
+      candidate, which verifies for most near-duplicates), then probes a
+      prefix-filter inverted index of the earlier representatives
+      (Bayardo/Chaudhuri prefix principle): order the bucket's tokens by
+      (class frequency, token); for J(a, b) >= t the order-minimal shared
+      token lies in BOTH prefixes of length |s| − ⌈t·|s|⌉ + 1, so probing
+      b's prefix cannot miss a qualifying earlier a.
+    - Every probe is confirmed with the integer |∩|/|∪| double quotient,
+      bit-identical to the expression verify of
+      :func:`minhash_verified_pairs`."""
     import math
 
-    sets: dict = {}
-    rep_ids: list = []
-    failed_ids: list = []
-    for i, rep_flag, arr in zip(ids, flags, shs):
-        if i not in sets:
-            sets[i] = set(arr)
-        if rep_flag:
-            rep_ids.append(i)
+    dropped = []
+    first_of: dict = {}
+    reps: list = []  # (id, set) of each distinct set's first member
+    for i, arr in zip(ids, shs):
+        s = frozenset(arr)
+        if s in first_of:
+            if s and threshold <= 1.0:
+                dropped.append(i)
         else:
-            failed_ids.append(i)
+            first_of[s] = i
+            reps.append((i, s))
     freq: dict = {}
-    for i in sets:
-        for t in sets[i]:
+    for _, s in reps:
+        for t in s:
             freq[t] = freq.get(t, 0) + 1
-    rank = {
-        t: r
-        for r, t in enumerate(
-            sorted(freq, key=lambda t: (freq[t], t))
-        )
-    }
+    rank = {t: r for r, t in enumerate(sorted(freq, key=lambda t: (freq[t], t)))}
 
     def prefix(s):
-        # Slack mirrors the size filter's: the verify accepts
-        # inter/union >= threshold in DOUBLE space, so a pair whose true
-        # Jaccard is epsilon below threshold can still verify when the
-        # quotient rounds up to the threshold double (e.g. t=0.07,
-        # |inter|=7, |union|=100). The prefix proof assumes the verify's
-        # minimum intersection, so it must use the SAME relaxed bound:
-        # ceil(t*n - 1e-9) only ever LENGTHENS the prefix (never admits
-        # a miss), and makes prefix coverage consistent with every pair
-        # the double-precision verify can accept.
+        # The verify accepts inter/union >= threshold in DOUBLE space, so
+        # a pair whose true Jaccard is epsilon below the threshold can
+        # still verify when the quotient rounds up (t=0.07, |∩|=7,
+        # |∪|=100). ceil(t·n − 1e-9) only ever LENGTHENS the prefix, which
+        # keeps it consistent with every pair the verify can accept.
         n = len(s)
-        p = n - math.ceil(threshold * n - 1e-9) + 1
+        p = max(n - math.ceil(threshold * n - 1e-9) + 1, 0)
         return sorted(s, key=rank.__getitem__)[:p]
 
+    def verifies(sa, sb):
+        na, nb = len(sa), len(sb)
+        # J <= min/max of the set sizes: size-refuted pairs skip the
+        # intersection (the 1e-9 slack only sends extra pairs to it)
+        if min(na, nb) < threshold * max(na, nb) - 1e-9:
+            return False
+        inter = len(sa & sb)
+        union = na + nb - inter
+        return union > 0 and inter / union >= threshold
+
     inv: dict = {}
-    for a in set(rep_ids):
-        sa = sets[a]
-        if not sa:
-            continue
-        for t in prefix(sa):
-            inv.setdefault(t, []).append(a)
-    dropped = []
-    for b in set(failed_ids):
-        sb = sets[b]
-        nb = len(sb)
-        if nb == 0:
-            continue
-        tried: set = set()
-        hit = False
-        for t in prefix(sb):
-            for a in inv.get(t, ()):
-                if a >= b or a in tried:
-                    continue
-                tried.add(a)
-                sa = sets[a]
-                na = len(sa)
-                if min(na, nb) < threshold * max(na, nb) - 1e-9:
-                    continue
-                inter = len(sa & sb)
-                union = na + nb - inter
-                if union > 0 and inter / union >= threshold:
-                    hit = True
-                    break
+    for pos, (b, sb) in enumerate(reps):
+        pb = prefix(sb)
+        hit = pos > 0 and verifies(reps[0][1], sb)
+        tried = {0}
+        for t in pb:
             if hit:
                 break
+            for a in inv.get(t, ()):
+                if a not in tried:
+                    tried.add(a)
+                    if verifies(reps[a][1], sb):
+                        hit = True
+                        break
         if hit:
             dropped.append(b)
+        for t in pb:
+            inv.setdefault(t, []).append(pos)
     return dropped
 
 
-def _drop_set_pass2_local(banded, sh, fb, fb_buckets, reps, id_col, threshold):
-    """Pass 2, bucket-local prefix-filtered form (default since r8): the
-    pair-join form materializes |reps|×|failed| rows per bucket before
-    anything can refute them — a single degenerate mega-bucket (a
-    common band signature, e.g. short texts under k=1) yielded 6.19M
-    raw pairs → 1.94M distinct → verify on the bench corpus, ~7 s of
-    pure pair plumbing. This form never materializes pairs: it groups
-    the (reps ∪ failed) bucket membership by (band, bucket) and runs an
-    exact AllPairs-style prefix-filtered verify INSIDE each group
-    (applyInPandas), emitting only dropped ids.
-
-    Exactness (the pinned invariant — drop set ≡ minhash_verified_pairs'
-    distinct id_b — is preserved):
-
-    - Candidate coverage: a qualifying pair shares ≥1 bucket, and both
-      members appear in that bucket's group (candidate side collapsed to
-      class reps exactly as the pair form — `_pass2_audience`).
-    - Prefix filter (Bayardo/Chaudhuri prefix principle): order the
-      bucket's tokens by (local frequency, token); for J(a,b) ≥ t the
-      intersection is non-empty and its order-minimal token m satisfies
-      pos_a(m) ≤ |a| − ⌈t·|a|⌉ + 1 (all earlier a-tokens are outside b,
-      and |∩| ≥ t·|b| ⟹ ... ≥ ⌈t·|a|⌉ later a-tokens are shared), same
-      for b — so m lies in BOTH prefixes, and probing b's prefix against
-      an inverted index of rep prefixes cannot miss a qualifying pair.
-      Any consistent per-group order is correct; local frequency
-      ascending puts each doc's rarest tokens in its prefix, which is
-      what makes dissimilar pairs collide almost never.
-    - Verification is the exact Jaccard on the exact shingle sets
-      (arrays are distinct by construction): integer |∩| and |∪| then
-      one double division — bit-identical to the expression path.
-    - Early exit per failed doc (stop at first verified match) changes
-      nothing: the drop set is an ∃, not a pair list.
-    - The pair form's ``first`` left-anti ("already tried" — each failed
-      doc's pass-1 first candidate) is deliberately OMITTED here: a
-      failed doc is in pass 2 precisely because its pass-1 verify with
-      that first candidate FAILED, and the local verify is the exact
-      same integer-|∩|/|∪| double quotient, so re-probing that pair
-      can only fail again. The anti-join is a pair-form optimization
-      (it shrinks a materialized pair list), not a correctness
-      requirement; here the pair never materializes, and the retried
-      probe is one set-intersection inside a group that was shuffled
-      anyway.
-
-    Scale: the shuffle is O(failed-bucket membership) rows (each with
-    one shingle array), never pairs; per-group work is index build +
-    near-constant probes per failed doc. The degenerate bucket that
-    cost 6.19M pairs costs |bucket| index entries. One group runs on
-    one core — but so did the SMJ join partition for that bucket in the
-    pair form; the local form does strictly less work there. Skew
-    bound: pass 2's audience is failures (LSH false positives), so
-    group count and size scale with failure rate, not corpus size.
-
-    Physical form: NOT groupBy().applyInPandas — per-group pandas
-    overhead is ~ms and a failure-heavy corpus has tens of thousands of
-    (band, bucket) groups (measured: 10.5k groups cost ~20 s of pure
-    group plumbing on 27k rows). Instead the membership is hash-
-    repartitioned on (band, bucket), sorted within partitions, and ONE
-    mapInPandas pass walks the key runs with carry-over across Arrow
-    batch boundaries (a bucket may straddle two batches of the same
-    partition; partitions arrive whole and in order per task, so
-    consecutive-run grouping is exact).
-
-    ``fb`` / ``fb_buckets`` / ``reps`` come precomputed (and persisted)
-    from the caller via :func:`_pass2_audience`.
-    """
-    import math
-
+def _drop_set_walk(banded: DataFrame, sh: DataFrame, id_col: str, threshold: float):
+    """The drop set's one bucket-local walk (lazy; may repeat an id
+    across buckets): the light ``(id, band, bucket)`` rows of buckets
+    with at least two members get their shingle sets attached, are
+    hash-partitioned on (band, bucket) and sorted by id within each
+    bucket, and ONE mapInPandas pass runs :func:`_bucket_verify_group`
+    per bucket. Singleton buckets — most of them — leave at the window,
+    before any shingle array moves. A bucket may straddle two Arrow
+    batches of one partition; partitions arrive whole and in order per
+    task, so the walk carries the open bucket across the boundary."""
+    from pyspark.sql import Window
     from pyspark.sql import types as T
 
-    rep_rows = (
-        banded.join(reps, id_col, "left_semi")
-        .join(fb_buckets, ["band", "bucket"], "left_semi")
-        .select("band", "bucket", F.col(id_col).alias("__id"),
-                F.lit(True).alias("__is_rep"))
+    w = Window.partitionBy("band", "bucket")
+    shared = (
+        banded.select(id_col, "band", "bucket")
+        .withColumn("__bsz", F.count(F.lit(1)).over(w))
+        .filter(F.col("__bsz") >= 2)
+        .drop("__bsz")
     )
-    fail_rows = fb.select(
-        "band", "bucket", F.col(id_col).alias("__id"),
-        F.lit(False).alias("__is_rep"),
+    par = max(banded.sparkSession.sparkContext.defaultParallelism, 1)
+    members = (
+        shared.join(sh, id_col)
+        .repartition(par, "band", "bucket")
+        .sortWithinPartitions("band", "bucket", id_col)
     )
-    member = rep_rows.unionByName(fail_rows).join(
-        sh.select(F.col(id_col).alias("__id"), "__sh"), "__id"
-    )
-    par = banded.sparkSession.sparkContext.defaultParallelism
-    member = member.repartition(max(par, 1), "band", "bucket").sortWithinPartitions(
-        "band", "bucket"
-    )
+    schema = T.StructType([T.StructField(id_col, sh.schema[id_col].dataType)])
 
-    out_schema = T.StructType([T.StructField("id_b", T.LongType(), False)])
-
-    def run_partition(batches):
+    def walk(batches):
         import pandas as pd
 
-        dropped_all: list = []
-        cur_key = None
-        cur_ids: list = []
-        cur_flags: list = []
-        cur_shs: list = []
+        dropped: set = set()
+        key, ids, shs, dtype = None, [], [], None
         for pdf in batches:
-            for band, bucket, i, flag, arr in zip(
-                pdf["band"], pdf["bucket"], pdf["__id"],
-                pdf["__is_rep"], pdf["__sh"],
+            dtype = pdf[id_col].dtype
+            for band, bucket, i, arr in zip(
+                pdf["band"], pdf["bucket"], pdf[id_col], pdf["__sh"]
             ):
-                key = (band, bucket)
-                if key != cur_key:
-                    if cur_ids:
-                        dropped_all.extend(
-                            _bucket_verify_group(cur_ids, cur_flags, cur_shs, threshold)
-                        )
-                    cur_key = key
-                    cur_ids, cur_flags, cur_shs = [], [], []
-                cur_ids.append(int(i))
-                cur_flags.append(bool(flag))
-                cur_shs.append(arr)
-        if cur_ids:
-            dropped_all.extend(_bucket_verify_group(cur_ids, cur_flags, cur_shs, threshold))
-        yield pd.DataFrame({"id_b": pd.Series(dropped_all, dtype="int64")})
+                if (band, bucket) != key:
+                    dropped.update(_bucket_verify_group(ids, shs, threshold))
+                    key, ids, shs = (band, bucket), [], []
+                ids.append(i)
+                shs.append(arr)
+        dropped.update(_bucket_verify_group(ids, shs, threshold))
+        if dtype is not None:
+            yield pd.DataFrame({id_col: pd.Series(list(dropped), dtype=dtype)})
 
-    return (
-        member.mapInPandas(run_partition, out_schema)
-        .select("id_b")
-        .distinct()
-    )
+    return members.mapInPandas(walk, schema)
 
 
 def minhash_drop_set(
@@ -1772,57 +1476,44 @@ def minhash_drop_set(
     bands: int = 8,
     k: int = 1,
     threshold: float = 0.9,
-    pass2_impl: str = "auto",
     stage_stats: list | None = None,
 ) -> DataFrame:
     """The near-dedup DROP SET — ids that have at least one verified
     (Jaccard ≥ threshold) near-duplicate with a SMALLER id — without
-    verifying every candidate pair.
+    materializing a single candidate pair.
 
     ``minhash_verified_pairs`` materializes every candidate pair; a bucket
     holding a duplicate cluster of m docs contributes m²/2 of them — at
     web scale a single million-doc template cluster alone would be 5·10¹¹
-    pairs. Keep-earliest dedup only needs "∃ earlier verified match", and
-    the FIRST candidate to try is available without any self-join:
-
-    - Pass 1: per (band, bucket), one window computes the bucket's min
-      id; each doc verifies against its DISTINCT bucket-mins (at most
-      ``bands``). That is O(docs × bands) rows end to end — no pair set
-      is ever materialized.
-    - Pass 2: docs with no verified bucket-min match fall back to an
-      exact verify RESTRICTED to those docs' buckets. ``pass2_impl``:
-      ``"auto"`` (default) prices the route from pass-1 byproducts —
-      zero failures skip pass 2 outright; a small tier-0 pair bound
-      (Σ bucket sizes over the failed docs' candidate rows) picks the
-      pair join with the class collapse skipped; a large bound runs the
-      one-job class-distinct estimate (:func:`_tier1_pair_estimate` —
-      exact via ``__classkey`` on the Arrow banding path, ``__sigkey``
-      lower bound otherwise; skipped outright for non-long ids, which
-      always take pairs) to choose between ``"pairs"``
-      (:func:`_drop_set_pass2_pairs`, class-rep collapsed) and
-      ``"local"`` (:func:`_drop_set_pass2_local`, bucket-local
-      prefix-filtered, long ids only); any verified match drops the
-      doc.
+    pairs. Keep-earliest dedup only needs "∃ earlier verified match in a
+    shared bucket", which each bucket answers on its own: banding (the
+    Arrow per-doc frame for long ids, expression banding plus
+    :func:`shingles_col` otherwise) is followed by ONE bucket-local walk
+    (:func:`_drop_set_walk`) that checks every doc of every multi-member
+    bucket against that bucket's earlier members only.
 
     The result is EXACTLY the distinct ``id_b`` set of
-    ``minhash_verified_pairs`` (pinned by test): pass 1's candidate is
-    sufficient when it verifies, pass 2 exhausts the rest. Measured 45 s
-    → 8 s on the 30k-doc bench corpus (965k verified pairs collapsed to
-    ~25k verifies). Returns a one-column DataFrame named ``id_col``,
-    eagerly materialized and persisted (its heavyweight inputs are
+    ``minhash_verified_pairs`` (pinned by test): a candidate pair there
+    is two docs sharing a (band, bucket) with ``id_a < id_b``, and the
+    walk visits each bucket's members in id order. Within a bucket,
+    identical shingle sets verify with J = 1 and stand in for each other
+    (so a cluster of m copies costs m set lookups, never m² verifies);
+    every other earlier representative that could reach the threshold
+    shares a prefix token with the doc, and every hit is the same
+    integer-|∩|/|∪| double check (see :func:`_bucket_verify_group`).
+    Returns a one-column DataFrame named ``id_col`` (its input type),
+    eagerly materialized and persisted (the per-doc banding cache is
     unpersisted before return) — callers unpersist it when done.
 
     ``stage_stats``: pass a list to receive ``(stage, wall_sec)`` tuples
     at the operator's job boundaries (the clean_corpus/round_stats
-    convention) — ``banding_materialize`` (the tokenize+hash pass +
-    cache pin), ``pass1_verify`` (bucket-min window + exact verify),
-    ``route:<impl>`` (the pricing collects, tagged with the route
-    picked) and ``pass2_result`` (fallback verify + result pin).
-    ``None`` (default) adds zero work and zero extra jobs.
+    convention) — ``banding_materialize`` (the Arrow tokenize+hash pass
+    and its cache pin; plan construction only on the expression path,
+    which is consumed once and not cached) and ``bucket_walk`` (window,
+    shingle attach, walk and result pin). ``None`` (default) adds zero
+    work and zero extra jobs.
     """
     import time as _time
-
-    from pyspark.sql import types as T
 
     _t0 = _time.time()
 
@@ -1832,225 +1523,34 @@ def minhash_drop_set(
             stage_stats.append((name, round(_time.time() - _t0, 3)))
         _t0 = _time.time()
 
-    id_is_long = isinstance(df.schema[id_col].dataType, T.LongType)
-    if pass2_impl == "local" and not id_is_long:
-        # the local form's mapInPandas contract is long ids (int64
-        # output schema + int() coercion in the group walk)
-        raise ValueError(
-            "pass2_impl='local' requires a long-typed id column; use "
-            "'pairs' (or 'auto', which routes non-long ids to it)"
-        )
     perdoc = None
     if _use_arrow_banding(df, id_col):
-        # ONE corpus scan+tokenize pass (r13): the per-doc Arrow frame
-        # carries the shingle set, both identity keys, and every band
-        # bucket, so the banded rows and the shingle frame are cheap
-        # PROJECTIONS of the one cache (posexplode unpacks in-row, no
-        # shuffle) — where the r12 shape paid two full tokenize+hash
-        # passes (Arrow banding + expression shingles) and two eager
-        # counts. The shingle sets here are sorted distinct grams;
-        # every consumer is order-insensitive (sizes, array_intersect
-        # sizes, sorted class digests, Python sets — see
-        # :func:`_banded_rows_arrow`).
+        # ONE corpus scan+tokenize pass: the per-doc Arrow frame carries
+        # the shingle set and every band bucket, so the banded rows and
+        # the shingle frame are PROJECTIONS of the one cache (posexplode
+        # unpacks in-row, no shuffle). Eager count: both branches read
+        # it, and an unmaterialized cache re-computes the tokenize+hash
+        # lineage per branch (CLAUDE.md).
         perdoc = _banded_rows_arrow(
             df, text_col, id_col, num_hashes, bands, k,
             with_buckets=False, with_sig_key=True, perdoc_shingles=True,
         ).persist()
-        perdoc.count()  # eager: many downstream branches — an
-        # unmaterialized cache re-computes the tokenize+hash lineage per
-        # branch inside one job (measured 172 s vs 36 s on the bench
-        # corpus for the old banded frame)
+        perdoc.count()
         banded = perdoc.select(
-            F.col(id_col),
-            F.col("__sigkey"),
-            F.col("__classkey"),
-            F.posexplode("__buckets").alias("band", "bucket"),
+            F.col(id_col), F.posexplode("__buckets").alias("band", "bucket")
         )
         sh = perdoc.select(F.col(id_col), F.col("__sh"))
     else:
-        # non-long ids: expression banding plus a separate shingle pass
+        # non-long ids: expression banding plus a separate shingle pass,
+        # each consumed once by the walk
         banded = _banded(
             df, text_col, id_col, num_hashes, bands, k, with_sig_key=True
-        ).persist()
-        banded.count()  # eager: 4 downstream branches — an unmaterialized
-        # cache re-computes the signature per branch inside one job (measured
-        # 172 s vs 36 s on the bench corpus)
-        # The shingle-set frame feeds both sides of BOTH verify joins plus the
-        # size column — five consumers, each of which would re-tokenize the
-        # whole corpus (the same no-CSE trap as banded). One cached copy is a
-        # few MB of string arrays; eager count for the same reason as above.
-        sh = df.select(
-            F.col(id_col), shingles_col(text_col, k).alias("__sh")
-        ).persist()
-        sh.count()
+        )
+        sh = df.select(F.col(id_col), shingles_col(text_col, k).alias("__sh"))
     _stat("banding_materialize")
-    _, cand_rows = minhash_first_candidates(banded, id_col, with_rows=True)
-    # Persist the per-band candidate rows and derive the distinct pair
-    # set FROM the cache: v1's job then materializes cand_rows as a side
-    # effect, so the tier-0 estimate below reads cached rows instead of
-    # re-running the (band, bucket) window over the whole banded frame.
-    cand_rows = cand_rows.persist()
-    first = cand_rows.select(
-        F.col(id_col).alias("id_b"), F.col("id_a")
-    ).distinct()
-
-    def verified(pairs: DataFrame) -> DataFrame:
-        # |union| = |a|+|b|-|∩| (shingle arrays are sets): per-side sizes
-        # replace the per-pair array_union — identical jaccard values.
-        a = sh.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__sh").alias("__sa"),
-            F.size("__sh").alias("__za"),
-        )
-        b = sh.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__sh").alias("__sb"),
-            F.size("__sh").alias("__zb"),
-        )
-        j = pairs.join(a, "id_a").join(b, "id_b")
-        inter = F.size(F.array_intersect("__sa", "__sb"))
-        union = F.col("__za") + F.col("__zb") - inter
-        jac = F.when(
-            (inter >= 0) & (union > 0), inter.cast("double") / union
-        ).otherwise(F.lit(0.0))
-        return j.select("id_a", "id_b", jac.alias("__j"))
-
-    # ONE aggregation splits pass-1 outcomes — the best verified Jaccard
-    # per doc — where the r8 form paid two distinct shuffles plus an
-    # anti-join for the same dropped/failed partition of v1's docs. v1
-    # itself is NOT persisted (r14): per_doc is its only consumer, so
-    # the old v1.persist+count paid a cache write and a full extra job
-    # barrier to materialize rows read exactly once. Eagerly counting
-    # per_doc instead materializes the verify ONCE inside this job
-    # (cand_rows materializes as a side effect, so every later consumer
-    # — the tier-0 bound, `first` in pass 2 — reads cache) and the
-    # multi-consumer fan-out (dropped1 + failed_docs) reads the per-doc
-    # cache, per the CLAUDE.md branch-recomputation rule.
-    v1 = verified(first)
-    per_doc = (
-        v1.groupBy("id_b").agg(F.max("__j").alias("__jmax")).persist()
-    )
-    per_doc.count()
-    _stat("pass1_verify")
-    dropped1 = per_doc.filter(F.col("__jmax") >= threshold).select("id_b")
-    # Docs with candidates but no verified bucket-min match.
-    failed_docs = per_doc.filter(F.col("__jmax") < threshold).select("id_b")
-    # Pass-2 audience computed ONCE and shared by the estimator and both
-    # forms (fb/fb_buckets are projections of the cand_rows cache —
-    # see _pass2_audience). Everything stays LAZY unless a branch
-    # actually consumes a frame more than once: an earlier cut eagerly
-    # persisted fb/reps and ran a rep-collapsed estimate up front, and
-    # those 3 extra small jobs cost a measured ~1.5-2 s on the common
-    # small-failure shape (7.0-7.5 s vs 5.6 s explicit pairs).
-    fb, fb_buckets, reps = _pass2_audience(
-        banded, sh, failed_docs, id_col, cand_rows
-    )
-    extra_persists = [per_doc, cand_rows]
-    collapse = True
-    if pass2_impl == "auto":
-        # Tier 0, nearly free: Σ bucket sizes over the failed docs'
-        # qualifying band rows — a pass-1 window byproduct (__bsz from
-        # the SAME (band, bucket) window that computed the bucket min),
-        # so the bound costs one small aggregate over already-persisted
-        # lineage, not a dedicated bucket-membership job. Each
-        # qualifying bucket contributes at most |bucket| smaller-id
-        # candidates, so the sum upper-bounds the UNCOLLAPSED pass-2
-        # pair count: a small bound routes straight to the pair join
-        # with the class collapse skipped too (reps=None — evaluating
-        # an md5 per shingle to collapse a ~2k-pair audience cost more
-        # than the duplicate verifies it saved; measured ~2-3 s of
-        # estimate + class-key stages on the pipeline's low-failure
-        # shape).
-        raw_bound = (
-            cand_rows.join(
-                failed_docs.select(F.col("id_b").alias(id_col)),
-                id_col,
-                "left_semi",
-            )
-            .agg(F.sum("__bsz"))
-            .collect()[0][0]
-            or 0
-        )
-        if raw_bound == 0:
-            # zero failed docs, exactly: a failed doc always owns at
-            # least one candidate row whose bucket holds it AND a
-            # smaller id (__bsz >= 2), so the bound is 0 iff the pass-2
-            # audience is empty — skip its whole job chain (a clean
-            # corpus otherwise paid ~1-2 s of empty-frame stages).
-            pass2_impl = "none"
-        elif raw_bound < PASS2_LOCAL_MIN_EST_PAIRS:
-            pass2_impl = "pairs"
-            collapse = False
-    if pass2_impl == "auto" and not id_is_long:
-        # Tier 1 only arbitrates between the long-only local form and
-        # the pair join; a non-long id column always takes pairs, so
-        # the estimate job (a full aggregate over banded + a collect)
-        # would be pure waste (ADVICE r9) — route directly.
-        pass2_impl = "pairs"
-    if pass2_impl == "auto":
-        # Tier 1 (only when tier 0 is large), ONE small job: the
-        # rep-collapsed pair count per failed bucket is
-        # distinct-classes × failures, all in one aggregate. On the
-        # Arrow banding path the rows carry ``__classkey`` (exact
-        # shingle-class identity, free there — the per-gram digests
-        # are already computed), so the estimate is EXACT per bucket
-        # (VERDICT r9 #6; measured cost parity with the sig-key
-        # aggregate: 5-trial medians 0.66 s vs 0.69 s on a 200k-doc
-        # dup-dense corpus — the string-vs-long distinct agg does not
-        # register above run noise). A banded
-        # frame without the column (forced expression banding — ADVICE
-        # r9 dropped the per-shingle md5 class key from that
-        # interpreted path) falls back to ``__sigkey``: identical
-        # shingle sets have identical signatures, so sig_est ≤ the
-        # exact count, an UNDERESTIMATE when distinct classes collide
-        # on all num_hashes values (a J=0.97 pair shares all 32 mins
-        # with p ≈ 0.38; measured 16.0M vs 23.7M exact) — a mis-route
-        # there is a bounded perf choice, never correctness. Either
-        # way the regimes route as designed: a planted look-alike
-        # mega-cluster is ONE class (est small → pairs), a genuine
-        # mega-bucket of distinct classes keeps distinct keys
-        # (est large → local).
-        est = _tier1_pair_estimate(banded, fb_buckets, failed_docs, id_col)
-        pass2_impl = (
-            "local" if est >= PASS2_LOCAL_MIN_EST_PAIRS else "pairs"
-        )
-    _stat(f"route:{pass2_impl}")
-    if pass2_impl == "none":
-        dropped2 = None
-    elif pass2_impl == "pairs":
-        dropped2 = _drop_set_pass2_pairs(
-            banded, sh, verified, fb, reps if collapse else None, first,
-            id_col, threshold,
-        )
-    else:
-        # the local form consumes fb twice (fail_rows + the fb_buckets
-        # chain) — since r14 fb is a PROJECTION of the cand_rows cache
-        # (a cache read + one broadcast semi join per consumer), so the
-        # old persist+count job bought nothing; reps has exactly ONE
-        # consumer per form (the estimator no longer reads it), so it
-        # stays lazy
-        dropped2 = _drop_set_pass2_local(
-            banded, sh, fb, fb_buckets, reps, id_col, threshold
-        )
-    merged = (
-        dropped1 if dropped2 is None else dropped1.unionByName(dropped2)
-    )
-    result = (
-        merged.distinct().select(F.col("id_b").alias(id_col)).persist()
-    )
-    # Materialize the (one-column) drop set eagerly so the big
-    # intermediates can be released NOW: banded is O(docs × bands) rows
-    # and the per-doc/cand_rows caches carry shingle/window lineage —
-    # leaving them cached leaks executor memory across invocations in a
-    # long-lived session. The returned frame is persisted; callers
-    # unpersist it when done.
+    result = _drop_set_walk(banded, sh, id_col, threshold).distinct().persist()
     result.count()
-    _stat("pass2_result")
+    _stat("bucket_walk")
     if perdoc is not None:
         perdoc.unpersist()
-    else:
-        banded.unpersist()
-        sh.unpersist()
-    for frame in extra_persists:
-        frame.unpersist()
     return result

@@ -106,9 +106,9 @@ def clean_corpus(
       schema re-inlines them into every downstream consumer; the
       near-dedup self-join then recompiles and re-executes them per side.
     - The dedup survivor set is ``persist()``-ed before near-dedup: the
-      pair join consumes it three times (both self-join sides + the final
-      anti-join), and without a materialization point each consumer
-      re-runs the whole upstream pipeline. At 100 TB this materialization
+      drop set and the final anti-join both consume it, and without a
+      materialization point each consumer re-runs the whole upstream
+      pipeline. At 100 TB this materialization
       is the natural stage boundary a real pipeline writes to storage
       anyway.
 
@@ -124,7 +124,7 @@ def clean_corpus(
     tuples for the three job boundaries — ``survivors_materialize``
     (scan + quality trio + PII + exact dedup, pinned eagerly here ONLY
     when profiling, so the drop-set wall reads cache instead of folding
-    the upstream in), ``drop_set`` (the multi-pass LSH discovery), and
+    the upstream in), ``drop_set`` (banding plus the bucket walk), and
     ``anti_join_materialize``. ``None`` (default) adds zero work — the
     non-profiled path is unchanged.
     """
@@ -142,8 +142,10 @@ def clean_corpus(
             t0 = _time.time()
         # Drop-set (not all-pairs) discovery: a corpus with big duplicate
         # clusters has ~cluster² verified pairs but only needs one
-        # verified earlier-match per doc — minhash_drop_set verifies
-        # O(docs), a measured 20× on the 30k-doc bench corpus.
+        # verified earlier-match per doc — minhash_drop_set answers it
+        # in one walk over the LSH buckets (identical sets by lookup,
+        # the rest through a prefix-filtered index of each bucket's
+        # earlier docs) and never materializes a candidate pair.
         drops = dedup.minhash_drop_set(
             df.select(id_col, text_col), text_col, id_col,
             threshold=cfg.jaccard_threshold, **cfg.minhash_cfg,

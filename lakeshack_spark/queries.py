@@ -4456,8 +4456,8 @@ def embedding_near_dup(spark, sf_dir):
 def minhash_drop_set_docs(spark, sf_dir):
     """The SCALE-path near-dedup operator under the hash gate: the drop
     set (ids with a verified J ≥ 0.9 match at a smaller id) computed
-    WITHOUT materializing candidate pairs — one bucket-min candidate per
-    doc, shingle-class fallback for LSH false positives — must equal the
+    WITHOUT materializing candidate pairs — one walk per LSH bucket
+    checking each doc against the bucket's earlier docs — must equal the
     all-pairs SQL oracle's distinct id_b set exactly (recall bound
     1−2e-8 at 16 bands, see minhash_dedup_verified)."""
     docs = (

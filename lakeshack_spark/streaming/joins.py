@@ -42,11 +42,13 @@ def interval_join(
     the click, within the attribution window".
 
     Right-side columns (including its ``time_col``) come back with
-    ``right_suffix`` appended; the key appears once. ``max_gap`` and
-    ``watermark`` are Spark interval strings ("30 minutes"). For
-    streaming inputs the watermark is REQUIRED on both sides (Spark
-    rejects an unbounded stream-stream inner join otherwise) and bounds
-    the join state; on batch frames it is a no-op.
+    ``right_suffix`` appended; the key appears once. The right key is
+    renamed like the rest before the join, so two filters of one frame
+    join on distinct attributes, not on a trivially true ``k == k``.
+    ``max_gap`` and ``watermark`` are Spark interval strings ("30
+    minutes"). For streaming inputs the watermark is REQUIRED on both
+    sides (Spark rejects an unbounded stream-stream inner join
+    otherwise) and bounds the join state; on batch frames it is a no-op.
     """
     l = left
     r = right
@@ -55,19 +57,13 @@ def interval_join(
             l = l.withWatermark(time_col, watermark)
         if r.isStreaming:
             r = r.withWatermark(time_col, watermark)
-    r = r.select(
-        [
-            F.col(c).alias(c + right_suffix) if c != key_col else F.col(c)
-            for c in r.columns
-        ]
-    )
+    r = r.select([F.col(c).alias(c + right_suffix) for c in r.columns])
+    rk = key_col + right_suffix
     rt = F.col(time_col + right_suffix)
     lt = F.col(time_col)
     cond = (
-        (l[key_col] == r[key_col])
+        (l[key_col] == F.col(rk))
         & (rt > lt)
         & (rt <= lt + F.expr(f"INTERVAL {max_gap}"))
     )
-    joined = l.join(r, cond, "inner")
-    # the key column exists on both sides post-join; keep one
-    return joined.drop(r[key_col])
+    return l.join(r, cond, "inner").drop(rk)

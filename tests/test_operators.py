@@ -905,10 +905,9 @@ def test_banded_sig_key_parity_and_semantics(spark, docs):
     equal for identical shingle sets regardless of token order /
     duplication (k=1), distinct for different sets. ``__classkey`` is
     Arrow-only since ADVICE r9 (the expression twin's per-shingle md5
-    cost the whole corpus at banding time; _pass2_audience computes it
-    over just the candidate audience) — its rendering parity with the
-    expression-side ``_class_key_col`` is pinned directly here so the
-    deferred fallback stays class-identical."""
+    cost the whole corpus at banding time) — its rendering parity with
+    the expression-side ``_class_key_col`` is pinned directly here so
+    the two class identities stay equal."""
     frame = spark.createDataFrame(
         [
             (1, "alpha beta gamma"),
@@ -942,7 +941,7 @@ def test_banded_sig_key_parity_and_semantics(spark, docs):
     assert cls[1] == cls[2] != cls[3]
     # cross-twin class-key rendering parity: the expression-side
     # _class_key_col over the shingle frame must equal Arrow's
-    # __classkey doc-for-doc (what _pass2_audience's fallback relies on)
+    # __classkey doc-for-doc
     sh = frame.select(
         F.col("doc_id"), dedup.shingles_col("text", 1).alias("__sh")
     )
@@ -1020,112 +1019,45 @@ def test_banded_perdoc_fused_layout_parity(spark, docs):
             assert got_sh == want_sh
 
 
-def test_minhash_drop_set_auto_routes_match_forms(spark, docs, monkeypatch):
-    """The auto estimator (single sig-collapsed job since r9) must
-    produce the same drop set whichever branch it picks; force BOTH
-    branches through the auto path by monkeypatching the cutover."""
-    kw = dict(num_hashes=8, bands=4, k=1, threshold=0.5)
-    want = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(docs, pass2_impl="pairs", **kw).collect()
-    }
-    monkeypatch.setattr(dedup, "PASS2_LOCAL_MIN_EST_PAIRS", 1)  # → local
-    got_local = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(docs, pass2_impl="auto", **kw).collect()
-    }
-    monkeypatch.setattr(dedup, "PASS2_LOCAL_MIN_EST_PAIRS", 10**18)  # → pairs
-    got_pairs = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(docs, pass2_impl="auto", **kw).collect()
-    }
-    assert got_local == got_pairs == want and len(want) > 0
-
-
-def test_minhash_drop_set_zero_failures_skips_pass2(spark, monkeypatch):
-    """raw_bound == 0 iff the pass-2 audience is empty (a failed doc
-    always has a candidate row with bucket size >= 2) — the auto route
-    must then skip BOTH pass-2 forms entirely and still return the
-    exact drop set (pass-1 verifies every exact-duplicate candidate)."""
-
-    def _boom(*a, **k):
-        raise AssertionError("pass 2 must not run with zero failures")
-
-    monkeypatch.setattr(dedup, "_drop_set_pass2_pairs", _boom)
-    monkeypatch.setattr(dedup, "_drop_set_pass2_local", _boom)
+def test_minhash_drop_set_exact_duplicates(spark):
+    """Exact-duplicate copies drop and their earliest copy stays, on a
+    corpus where every candidate is an exact duplicate."""
     df = spark.createDataFrame(
         [(i, f"w{i}a w{i}b w{i}c") for i in range(6)]
         + [(100 + i, f"w{i}a w{i}b w{i}c") for i in range(3)],
         "doc_id long, text string",
     )
-    got = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(df, num_hashes=8, bands=4, k=1).collect()
-    }
+    drops = dedup.minhash_drop_set(df, num_hashes=8, bands=4, k=1)
+    got = {r.doc_id for r in drops.collect()}
+    drops.unpersist()
     assert got == {100, 101, 102}
 
 
 def test_minhash_drop_set_string_ids(spark):
     """Non-long id columns route through the expression banding twin
-    and must never reach the local pass-2 form (its mapInPandas
-    contract is int64 ids): auto works end-to-end, explicit 'local'
-    refuses with a pointed error."""
-    df = spark.createDataFrame(
-        [("a", "x y z w"), ("b", "x y z w"), ("c", "p q r s")],
-        "doc_id string, text string",
-    )
-    got = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(df, num_hashes=8, bands=4, k=1).collect()
-    }
-    assert got == {"b"}
-    with pytest.raises(ValueError, match="long-typed id"):
-        dedup.minhash_drop_set(df, num_hashes=8, bands=4, k=1, pass2_impl="local")
+    and the walk: the drop set keeps the input's id type, and a
+    near-duplicate that does not verify stays."""
+    from pyspark.sql import types as T
 
-
-def test_minhash_drop_set_string_ids_skip_tier1_estimate(
-    spark, monkeypatch
-):
-    """ADVICE r9: tier 1 only arbitrates local-vs-pairs and non-long
-    ids can never take local — the estimate job (full aggregate over
-    banded + collect) must not run for them even when tier-0's bound
-    is large. Near-dup (not identical) docs fail pass 1 in a shared
-    bucket, so tier-0 is nonzero; the cutover is forced to 1 so any
-    tier-1 call would flip the route (and the boom catches it)."""
-
-    def _boom(*a, **k):
-        raise AssertionError("tier-1 estimate must not run for string ids")
-
-    monkeypatch.setattr(dedup, "_tier1_pair_estimate", _boom)
-    monkeypatch.setattr(dedup, "PASS2_LOCAL_MIN_EST_PAIRS", 1)
-    real_pairs = dedup._drop_set_pass2_pairs
-    calls = []
-
-    def _spy(*a, **k):
-        calls.append(1)
-        return real_pairs(*a, **k)
-
-    monkeypatch.setattr(dedup, "_drop_set_pass2_pairs", _spy)
-    # threshold 0.95 > J(a,b)=J(a,c)=10/11: every bucket-min verify
-    # FAILS, so tier-0's bound is nonzero and (cutover=1) cannot route
-    # early — old code would now run the tier-1 estimate (boom); the
-    # guard must route straight to the pair form instead.
     base = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"
     df = spark.createDataFrame(
-        [("a", base), ("b", base + " extra1"), ("c", base + " extra2")],
+        [
+            ("a", "x y z w"),
+            ("b", "x y z w"),
+            ("c", "p q r s"),
+            ("d", base),
+            ("e", base + " extra1"),  # J = 10/11 with d
+        ],
         "doc_id string, text string",
     )
-    got = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(
-            df, num_hashes=8, bands=4, k=1, threshold=0.95
-        ).collect()
-    }
-    assert got == set()  # nothing verifies at 0.95
-    assert calls, (
-        "pass-2 pairs never ran — the corpus produced no pass-1 "
-        "failures, so the tier-1 skip was not exercised"
-    )
+    for threshold, want in ((0.9, {"b", "e"}), (0.95, {"b"})):
+        drops = dedup.minhash_drop_set(
+            df, num_hashes=8, bands=4, k=1, threshold=threshold
+        )
+        assert isinstance(drops.schema["doc_id"].dataType, T.StringType)
+        got = {r.doc_id for r in drops.collect()}
+        drops.unpersist()
+        assert got == want, threshold
 
 
 def test_banded_non_long_id_falls_back_to_expr(spark):
@@ -1139,59 +1071,70 @@ def test_banded_non_long_id_falls_back_to_expr(spark):
     assert len(rows) == 8  # 2 docs × 4 bands
 
 
+def _keep_earliest_drops(ids, shs, threshold):
+    """Brute-force reference of one bucket: ids with an earlier member
+    whose Jaccard (integer |∩|/|∪| double, 0 on an empty union) is at
+    least ``threshold``."""
+    want = []
+    for pos, b in enumerate(ids):
+        sb = set(shs[pos])
+        for sa in map(set, shs[:pos]):
+            inter = len(sa & sb)
+            union = len(sa) + len(sb) - inter
+            if union > 0 and inter / union >= threshold:
+                want.append(b)
+                break
+    return want
+
+
 @given(
     data=st.lists(
         st.tuples(
-            st.booleans(),  # is_rep
+            st.integers(-50, 50),  # id (negative ids included)
             st.sets(st.sampled_from("abcdefgh"), max_size=6),  # shingles
         ),
         min_size=0,
         max_size=12,
+        unique_by=lambda d: d[0],
     ),
-    threshold=st.sampled_from([0.3, 0.5, 0.8, 0.9, 1.0]),
+    threshold=st.sampled_from([0.07, 0.3, 0.5, 0.8, 0.9, 1.0]),
 )
 def test_bucket_verify_group_property(data, threshold):
-    """The prefix-filtered bucket verify (pure Python, no Spark) must
-    equal a brute-force all-pairs reference on arbitrary bucket
-    contents: tiny token universe ('a'..'h') forces heavy overlap,
-    duplicate sets, empties, and rep/failed role mixes."""
-    ids = list(range(len(data)))
-    flags = [d[0] for d in data]
+    """The bucket walk's per-bucket core (pure Python, no Spark) must
+    equal brute-force keep-earliest on arbitrary bucket contents: the
+    tiny token universe ('a'..'h') forces heavy overlap, identical sets,
+    empty sets and near-misses; ids are negative as well as positive."""
+    data = sorted(data)
+    ids = [d[0] for d in data]
     shs = [sorted(d[1]) for d in data]
-    got = sorted(
-        dedup._bucket_verify_group(ids, flags, shs, threshold)
+    got = sorted(dedup._bucket_verify_group(ids, shs, threshold))
+    assert got == sorted(_keep_earliest_drops(ids, shs, threshold)), (
+        data, threshold,
     )
-    sets = {i: set(s) for i, s in zip(ids, shs)}
-    want = []
-    for b, fl in zip(ids, flags):
-        if fl:
-            continue  # only failed rows can be dropped
-        sb = sets[b]
-        hit = False
-        for a, fa in zip(ids, flags):
-            if not fa or a >= b:
-                continue  # candidates are smaller-id reps
-            sa = sets[a]
-            inter = len(sa & sb)
-            union = len(sa) + len(sb) - inter
-            if union > 0 and inter / union >= threshold:
-                hit = True
-                break
-        if hit:
-            want.append(b)
-    assert got == sorted(want), (data, threshold)
+
+
+def test_bucket_verify_group_identical_and_empty_sets():
+    """Identical non-empty sets drop with J = 1; identical EMPTY sets
+    never verify (empty union); the earliest copy always stays."""
+    shs = [["a", "b"], [], ["a", "b"], [], ["b", "a"], ["c"]]
+    ids = [-3, -1, 0, 2, 5, 9]
+    assert dedup._bucket_verify_group(ids, shs, 0.9) == [0, 5]
+    assert dedup._bucket_verify_group(ids, shs, 0.9) == _keep_earliest_drops(
+        ids, shs, 0.9
+    )
 
 
 def test_bucket_verify_group_prefix_boundary_sweep():
-    """Deterministic sweep over the advisor-enumerated boundary classes:
-    every (threshold, union size) where the true Jaccard
-    (⌈t·n⌉−1)/n sits BELOW t yet rounds up to the t double — i.e. the
-    verify accepts a pair whose intersection is one below the prefix
-    proof's integer minimum. For each such class, build the minimal
-    witness (rep = the shared tokens, failed doc = shared + unique
-    filler, shared tokens ranked last by local frequency) and require
-    the slacked prefix to catch the drop. The hypothesis property test
-    cannot reach these (its sets are ≤6 tokens)."""
+    """Deterministic sweep over the double-rounding boundary classes:
+    every (threshold, union size) where the true Jaccard (⌈t·n⌉−1)/n
+    sits BELOW t yet rounds up to the t double — i.e. the verify accepts
+    a pair whose intersection is one below the prefix proof's integer
+    minimum. For each such class, build the minimal witness (rep = the
+    shared tokens, later doc = shared + unique filler, shared tokens
+    ranked last by local frequency) behind an unrelated bucket-min doc,
+    so only the prefix probe — not the bucket-min check — can find it,
+    and require the slacked prefix to catch the drop. The hypothesis
+    property test cannot reach these (its sets are ≤6 tokens)."""
     import math
 
     cases = 0
@@ -1206,76 +1149,83 @@ def test_bucket_verify_group_prefix_boundary_sweep():
             shared = [f"s{i}" for i in range(inter)]
             unique = [f"u{i}" for i in range(n - inter)]
             got = dedup._bucket_verify_group(
-                [0, 1],
-                [True, False],  # rep (= shared subset), failed doc
-                [sorted(shared), sorted(shared + unique)],
+                [0, 1, 2],
+                [["z"], sorted(shared), sorted(shared + unique)],
                 t,
             )
-            assert got == [1], (t, n, inter)
+            assert got == [2], (t, n, inter)
             cases += 1
     assert cases >= 3  # the sweep actually exercised boundary classes
 
 
 def test_bucket_verify_group_prefix_boundary():
     """ADVICE r8 (medium): the verify accepts inter/union >= threshold in
-    DOUBLE space, so at threshold=0.07 a 7-token rep that is a subset of
-    a 100-token failed doc verifies (7/100 rounds to the 0.07 double),
+    DOUBLE space, so at threshold=0.07 a 7-token set that is a subset of
+    a 100-token later doc verifies (7/100 rounds to the 0.07 double),
     yet the UNSLACKED prefix p = n - ceil(t*n) + 1 = 93 excludes all 7
     shared tokens (they rank last — local frequency 2 vs 1 for the 93
     unique tokens), silently missing the drop. The slacked prefix
-    ceil(t*n - 1e-9) admits it."""
+    ceil(t*n - 1e-9) admits it. The bucket min (id 0) shares nothing,
+    so the bucket-min check cannot stand in for the prefix probe."""
     shared = [f"s{i}" for i in range(7)]
     unique = [f"u{i}" for i in range(93)]
-    ids = [0, 1]
-    flags = [True, False]  # rep, failed
-    shs = [sorted(shared), sorted(shared + unique)]
-    assert dedup._bucket_verify_group(ids, flags, shs, 0.07) == [1]
+    shs = [["z"], sorted(shared), sorted(shared + unique)]
+    assert dedup._bucket_verify_group([0, 1, 2], shs, 0.07) == [2]
     # sanity: the pair really does verify in double space
     assert 7 / 100 >= 0.07
 
 
+def _verified_drop_set(docs, **kw):
+    pairs = dedup.minhash_verified_pairs(docs, **kw)
+    return {r.id_b for r in pairs.select("id_b").distinct().collect()}
+
+
 def test_drop_set_local_carryover_across_arrow_batches(spark, docs):
-    """The local pass 2 walks sorted (band, bucket) runs across Arrow
-    batch boundaries; a bucket straddling two batches must still verify
-    as ONE group. Force tiny batches so nearly every group straddles,
-    and pin the result against the pair form."""
+    """The bucket-local walk runs over sorted (band, bucket) runs across
+    Arrow batch boundaries; a bucket straddling two batches must still
+    verify as ONE bucket. Force tiny batches so nearly every bucket
+    straddles, and pin the result against the pairwise drop set."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
+    kw = dict(num_hashes=8, bands=4, k=1, threshold=0.5)
     try:
         spark.conf.set(key, "3")
-        kw = dict(num_hashes=8, bands=4, k=1, threshold=0.5)
-        local = {
-            r.doc_id
-            for r in dedup.minhash_drop_set(
-                docs, pass2_impl="local", **kw
-            ).collect()
-        }
-        pairs = {
-            r.doc_id
-            for r in dedup.minhash_drop_set(
-                docs, pass2_impl="pairs", **kw
-            ).collect()
-        }
-        assert local == pairs and len(local) > 0
+        drops = dedup.minhash_drop_set(docs, **kw)
+        got = {r.doc_id for r in drops.collect()}
+        drops.unpersist()
     finally:
         spark.conf.set(key, old)
+    want = _verified_drop_set(docs, **kw)
+    assert got == want and len(want) > 0
 
 
-def test_minhash_drop_set_pass2_local_equals_pairs(spark, docs):
-    """The r8 bucket-local prefix-filtered pass 2 returns EXACTLY the
-    pair-join form's drop set (both under a low threshold + few hashes
-    so pass 2 actually fires: more LSH collisions, fewer pass-1
-    verifications)."""
+def test_minhash_drop_set_walk_equals_verified_pairs_low_threshold(spark, docs):
+    """Under a low threshold and few hashes (many LSH collisions, most
+    of them sub-threshold look-alikes) the walk returns EXACTLY the
+    pairwise drop set."""
     kw = dict(num_hashes=8, bands=4, k=1, threshold=0.5)
-    local = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(docs, pass2_impl="local", **kw).collect()
-    }
-    pairs = {
-        r.doc_id
-        for r in dedup.minhash_drop_set(docs, pass2_impl="pairs", **kw).collect()
-    }
-    assert local == pairs and len(local) > 0
+    drops = dedup.minhash_drop_set(docs, **kw)
+    got = {r.doc_id for r in drops.collect()}
+    drops.unpersist()
+    want = _verified_drop_set(docs, **kw)
+    assert got == want and len(want) > 0
+
+
+def test_minhash_drop_set_job_count(spark, docs):
+    """Job-count pin: banding plus one bucket walk stays within 12 Spark
+    jobs (11 on this fixture), counted through a job group."""
+    sc = spark.sparkContext
+    group = "test_minhash_drop_set_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        drops = dedup.minhash_drop_set(
+            docs, num_hashes=32, bands=8, k=1, threshold=0.9
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    drops.unpersist()
+    assert 0 < n_jobs <= 12, n_jobs
 
 
 def test_contamination_matches_duckdb_oracle(spark, docs):

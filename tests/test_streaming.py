@@ -158,6 +158,50 @@ def test_interval_join_stream_matches_batch(spark, events_stream_dir):
     assert got == want and len(want) > 0
 
 
+def test_interval_join_self_join_exact_pairs(spark):
+    """Two filters of ONE frame joined on the key (the
+    ``interval_join_click_purchase`` shape): the key predicate must
+    compare the two sides' distinct attributes — a trivially true
+    ``user_id == user_id`` would also pair users 1 and 2 below. The
+    pairs must equal a direct evaluation of the interval rule."""
+    import datetime as dt
+
+    from lakeshack_spark.streaming.joins import interval_join
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, 10, "click", 0),
+        (2, 11, "click", 1),
+        (1, 12, "purchase", 5),
+        (2, 13, "purchase", 6),
+        (1, 14, "purchase", 40),  # beyond 30 minutes after the click
+        (2, 15, "purchase", 1),  # not strictly after the click
+        (1, 16, "click", 20),
+    ]
+    ev = spark.createDataFrame(
+        [(u, e, k, t0 + dt.timedelta(minutes=m)) for u, e, k, m in rows],
+        "user_id long, event_id long, event_type string, ts_utc timestamp",
+    )
+
+    def side(kind):
+        return ev.filter(F.col("event_type") == kind).select(
+            "user_id", "event_id", "ts_utc"
+        )
+
+    out = interval_join(
+        side("click"), side("purchase"), "user_id", "30 minutes", watermark=None
+    )
+    assert out.columns == ["user_id", "event_id", "ts_utc", "event_id_r", "ts_utc_r"]
+    got = sorted((r.user_id, r.event_id, r.event_id_r) for r in out.collect())
+    want = sorted(
+        (uc, ec, ep)
+        for uc, ec, kc, mc in rows
+        for up, ep, kp, mp in rows
+        if kc == "click" and kp == "purchase" and uc == up and mc < mp <= mc + 30
+    )
+    assert got == want == [(1, 10, 12), (1, 16, 14), (2, 11, 13)]
+
+
 def test_stateful_running_user_stats(spark, events_stream_dir):
     """applyInPandasWithState (streaming) converges to the same final
     per-user stats as the batch pass; with multiple micro-batches the

@@ -32,12 +32,11 @@ Entries:
 - ``verified_fused``: minhash_verified_pairs ``fused=False`` vs
   ``fused=True`` over ``n`` 15-word hash-derived docs, every 50th an
   exact duplicate of its predecessor (default 1M).
-- ``dropset``: minhash_drop_set ``pass2_impl`` auto / pairs / local at
-  its default parameters, with its stage profile, over the benchmark's
-  ``n`` documents (30-word vocabulary, k=1 mega-buckets) plus a planted
-  cluster of 2n/5 copies of one doc (default 5000; the parity rows hold
-  the whole cluster).
-- ``dropset_pipeline``: the same legs on clean_corpus's near-dedup
+- ``dropset``: minhash_drop_set's stage profile (one leg) at its
+  default parameters over the benchmark's ``n`` documents (30-word
+  vocabulary, k=1 mega-buckets) plus a planted cluster of 2n/5 copies
+  of one doc (default 5000).
+- ``dropset_pipeline``: the same profile on clean_corpus's near-dedup
   input — the survivors of its prefilter over the benchmark's ``n``
   documents, at ``CleanConfig().minhash_cfg`` (k=2; default 2500).
 - ``pipeline``: clean_corpus's stage profile (one leg) over the
@@ -164,7 +163,7 @@ def _vectors(spark: SparkSession, n: int, dim: int) -> DataFrame:
 def _planted_cluster(spark: SparkSession, n: int) -> DataFrame:
     """The benchmark's documents plus 2n/5 copies of doc 0 (the shape
     of 2000 copies on a 5k-doc corpus). Negative ids for the copies: the
-    parity subset holds the whole cluster, and keep-earliest keeps a
+    warm-up subset holds the whole cluster, and keep-earliest keeps a
     copy, not doc 0."""
     docs = _bench_docs(spark, n).select("doc_id", "text")
     copies = spark.range(max(2 * n // 5, 2)).select(
@@ -208,10 +207,8 @@ def _verified_leg(fused: bool) -> Leg:
     return lambda df, _: minhash_verified_pairs(df, fused=fused)
 
 
-def _dropset_leg(pass2_impl: str, **params) -> Leg:
-    return lambda df, stats: minhash_drop_set(
-        df, pass2_impl=pass2_impl, stage_stats=stats, **params
-    )
+def _dropset_leg(**params) -> Leg:
+    return lambda df, stats: minhash_drop_set(df, stage_stats=stats, **params)
 
 
 def _pipeline_leg(df: DataFrame, stats: list) -> DataFrame:
@@ -225,8 +222,6 @@ def _vectors_of(dim: int) -> Callable[[SparkSession, int], DataFrame]:
 def _docs_of(n_words: int) -> Callable[[SparkSession, int], DataFrame]:
     return lambda spark, n: _docs(spark, n, n_words)
 
-
-_PASS2 = ("auto", "pairs", "local")
 
 ENTRIES: dict[str, Entry] = {
     "cc": Entry(
@@ -251,12 +246,10 @@ ENTRIES: dict[str, Entry] = {
         {"lazy": _verified_leg(False), "fused": _verified_leg(True)},
         1_000_000,
     ),
-    "dropset": Entry(
-        _planted_cluster, {i: _dropset_leg(i) for i in _PASS2}, 5_000
-    ),
+    "dropset": Entry(_planted_cluster, {"drop_set": _dropset_leg()}, 5_000),
     "dropset_pipeline": Entry(
         _survivors,
-        {i: _dropset_leg(i, **CleanConfig().minhash_cfg) for i in _PASS2},
+        {"drop_set": _dropset_leg(**CleanConfig().minhash_cfg)},
         data.DOCS,
     ),
     "pipeline": Entry(_bench_docs, {"clean_corpus": _pipeline_leg}, data.DOCS),

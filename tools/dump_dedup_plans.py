@@ -1,12 +1,11 @@
 """Capture .explain('formatted') for the dedup-family internal lineages
-the r14 optimization touches (plan-only, nothing executed) — the
-registered entries wrapping them either collect() internally
-(minhash_drop_set_docs) or hide the interesting subtree behind the
-result projection, so dump_plans.py can't show the shapes that matter.
+(plan-only, nothing executed) — the registered entries wrapping them
+either collect() internally (minhash_drop_set_docs) or hide the
+interesting subtree behind the result projection, so dump_plans.py
+can't show the shapes that matter.
 
 Writes, under --out (default plans/r14) with --suffix:
-  minhash_drop_set_pass1<sfx>.txt   pass-1 candidate rows + shingle frame
-  drop_set_pass2_audience<sfx>.txt  fb / fb_buckets / tier-1 estimate frames
+  minhash_drop_set_walk<sfx>.txt    the drop set's bucket walk
   minhash_dedup_verified<sfx>.txt   the lazy verified-pairs plan (300 docs)
   minhash_verified_fused<sfx>.txt   the fused verified-pairs plan (if the
                                     code version has it; skipped otherwise)
@@ -49,68 +48,22 @@ def main() -> None:
             fh.write(text)
         print(f"wrote {path} ({len(text)} chars)")
 
-    # ---- pass-1 lineage (the shapes minhash_drop_set derives from its
-    # one persisted per-doc frame; captured unpersisted — at runtime the
-    # subtrees below the posexplode/projection read the cache) ----------
+    # ---- the drop set's bucket walk over its one persisted per-doc
+    # frame (captured unpersisted — at runtime the subtrees below the
+    # posexplode/projection read the cache) --------------------------
     perdoc = dedup._banded_rows_arrow(
         docs, "text", "doc_id", 32, 8, 1,
         with_buckets=False, with_sig_key=True, perdoc_shingles=True,
     )
     banded = perdoc.select(
-        F.col("doc_id"),
-        F.col("__sigkey"),
-        F.col("__classkey"),
-        F.posexplode("__buckets").alias("band", "bucket"),
+        F.col("doc_id"), F.posexplode("__buckets").alias("band", "bucket")
     )
     sh = perdoc.select("doc_id", "__sh")
-    _, cand_rows = dedup.minhash_first_candidates(
-        banded, "doc_id", with_rows=True
-    )
     write(
-        "minhash_drop_set_pass1",
-        "== drop_set pass-1 candidate rows (band,bucket window over the\n"
-        "   posexplode of the per-doc frame; reads the perdoc cache at\n"
-        "   runtime) ==\n\n"
-        + formatted_plan(cand_rows)
-        + "\n\n== the shingle frame (projection of the same pass) ==\n\n"
-        + formatted_plan(sh),
-    )
-
-    # ---- pass-2 audience + tier-1 estimate frames ----------------------
-    failed_docs = sh.select(F.col("doc_id").alias("id_b")).limit(10)
-    try:
-        fb, fb_buckets, reps = dedup._pass2_audience(
-            banded, sh, failed_docs, "doc_id", cand_rows
-        )
-    except TypeError:  # pre-r14 signature (no cand_rows argument)
-        fb, fb_buckets, reps = dedup._pass2_audience(
-            banded, sh, failed_docs, "doc_id"
-        )
-    failed_ids = failed_docs.select(
-        F.col("id_b").alias("doc_id"), F.lit(1).alias("__f")
-    )
-    tier1 = (
-        banded.join(fb_buckets, ["band", "bucket"], "left_semi")
-        .join(failed_ids, "doc_id", "left")
-        .groupBy("band", "bucket")
-        .agg(
-            F.sum("__f").alias("__nf"),
-            F.count_distinct(
-                "__classkey" if "__classkey" in banded.columns else "__sigkey"
-            ).alias("__bcls"),
-        )
-        .agg(F.sum(F.col("__nf") * F.col("__bcls")))
-    )
-    write(
-        "drop_set_pass2_audience",
-        "== fb (failed docs' pass-2 rows) ==\n\n"
-        + formatted_plan(fb)
-        + "\n\n== fb_buckets ==\n\n"
-        + formatted_plan(fb_buckets)
-        + "\n\n== reps (class collapse) ==\n\n"
-        + formatted_plan(reps)
-        + "\n\n== tier-1 estimate aggregate ==\n\n"
-        + formatted_plan(tier1),
+        "minhash_drop_set_walk",
+        "== drop_set bucket walk (bucket-size window, shingle attach,\n"
+        "   (band, bucket) repartition + sort, one mapInPandas) ==\n\n"
+        + formatted_plan(dedup._drop_set_walk(banded, sh, "doc_id", 0.9)),
     )
 
     # ---- verified pairs: the headline 300-doc lazy plan ----------------
