@@ -20,9 +20,10 @@ Surviving twins and dispatches, each with its reason (a route that lost
 its A/B is deleted, not kept behind a flag; re-run any A/B with
 ``tools/ab.py <entry>``):
 
-- banding ``impl="expr"`` (:func:`_use_arrow_banding`): the Arrow twin
-  emits long ids, so non-long id columns take the expression form; it
-  is also the bit-exact parity reference.
+- :func:`_perdoc_bands` ``impl="expr"`` (:func:`_use_arrow_banding`):
+  the one banding builder's Arrow arm emits long ids, so non-long id
+  columns take the expression arm; it is also the bit-exact parity
+  reference for the Arrow arm.
 - :func:`minhash_verified_pairs` ``fused``: a size dispatch on the
   Catalyst estimate (:data:`VERIFIED_FUSED_MIN_INPUT_BYTES`) — the
   fused route's construction-time job only pays off on large inputs.
@@ -126,20 +127,6 @@ def _permutation_params(num_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
-def _class_key_col(sh_col) -> Column:
-    """Shingle-CLASS identity: md5 over the comma-joined SORTED full
-    per-shingle md5 hex digests of ``sh_col``. Hex digests are
-    fixed-alphabet, so the comma join cannot collide however weird the
-    tokens are; an md5 collision merging two classes is the only
-    residual failure mode. The Arrow banding twin renders the identical
-    byte string from the digests it already computes per gram."""
-    return F.md5(
-        F.concat_ws(
-            ",", F.array_sort(F.transform(sh_col, F.md5))
-        ).cast("binary")
-    )
-
-
 def minhash_signature(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_hashes: int = 32, k: int = 3, keep_shingles: bool = False,
@@ -196,8 +183,9 @@ def minhash_signature(
 
 def _band_value_exprs(num_hashes: int, bands: int) -> list[Column]:
     """One comma-joined string expression per band over the ``sig``
-    column — the SINGLE source of band-slice construction, shared by both
-    banding layouts so their bucket semantics can never drift."""
+    column — the SINGLE source of band-slice construction on the
+    expression arm of :func:`_perdoc_bands`; its Arrow arm renders the
+    same comma-joined decimal string."""
     rows_per_band = num_hashes // bands
     return [
         F.concat_ws(
@@ -253,114 +241,82 @@ def _plan_size_bytes(df: DataFrame) -> int:
         return 0
 
 
-def _banded_rows_arrow(
-    df: DataFrame, text_col: str, id_col: str,
-    num_hashes: int, bands: int, k: int, with_buckets: bool,
-    with_sig_key: bool = False,
-    perdoc_shingles: bool = False,
-    perdoc_buckets: bool = False,
-) -> DataFrame:
-    """Arrow twin of :func:`_banded` / :func:`_banded_with_buckets`:
-    tokenize (single-space split, exactly ``F.split(text, " ")``
-    semantics incl. empty tokens), distinct word k-grams, one md5-derived
-    31-bit base hash per shingle, the (a·x+b) mod 2³¹−1 permutation min
-    per signature slot in vectorized int64 (products stay < 2⁶², no
-    overflow), then the per-band bucket over the comma-joined decimal
-    rendering of the slice — md5 hex (``with_buckets=False``) or the
-    md5→first-15-hex-digits long (``True``, = ``_h64``). NULL texts and
-    docs with fewer than k tokens drop, matching the n_shingles > 0
-    filter. Requires a long-typed id column (the dispatchers fall back
-    to the expression form otherwise). Bit-identical to the expression
-    path — pinned by tests/test_operators.py parity tests.
-
-    ``with_sig_key`` (non-bucket layout only) narrows ``bucket`` to the
-    ``_h64`` long and adds two per-doc identity columns:
-
-    - ``__sigkey``: the md5→first-15-hex-digits long (= ``_h64``) of
-      the comma-joined decimal rendering of the FULL signature — a
-      signature identity (identical shingle sets ⇒ identical
-      signatures ⇒ identical key);
-    - ``__classkey``: the exact shingle-class identity
-      (:func:`_class_key_col`), rendered from the per-gram md5 digests
-      this builder already computes.
-
-    ``perdoc_shingles`` (r13; requires ``with_sig_key``) switches the
-    OUTPUT LAYOUT to one row per doc: ``(id, __sh, __sigkey,
-    __classkey, __buckets)`` where ``__sh`` is the doc's distinct-gram
-    SET (sorted — every consumer is order-insensitive: sizes,
-    ``array_intersect`` sizes, sorted class digests, Python sets) and
-    ``__buckets[b]`` is band b's bucket hex. :func:`minhash_drop_set`
-    persists THIS frame once and derives both its banded rows
-    (``posexplode``) and its shingle frame (projection) from the one
-    cache — the corpus is scanned and tokenized ONCE instead of twice,
-    one eager count instead of two, and the per-doc layout stores the
-    sig/class keys once instead of once per band."""
+def _use_arrow_banding(df: DataFrame, id_col: str, impl: str = "arrow") -> bool:
+    """True when :func:`_perdoc_bands` takes its Arrow arm — a
+    mapInPandas pass computing the SAME md5-derived values as the
+    expression arm (bit-identical: same UTF-8 md5 per shingle, same
+    int64 permutation arithmetic, same decimal rendering into the
+    band-slice md5), measured several× faster than the interpreted HOF
+    aggregate (the signature fold never enters codegen — the same class
+    of exception as text.repetition_stats, see CLAUDE.md). The Arrow
+    arm's output schema is long ids, so a non-long ``id_col`` always
+    takes the expression arm; ``impl="expr"`` forces it (the
+    cross-engine-readable reference and the parity-test twin)."""
     from pyspark.sql import types as T
 
-    if with_sig_key and with_buckets:
-        raise ValueError("with_sig_key is only supported without buckets")
-    if perdoc_shingles and not with_sig_key:
-        raise ValueError("perdoc_shingles requires with_sig_key")
-    if perdoc_buckets and (with_buckets or with_sig_key or perdoc_shingles):
-        raise ValueError("perdoc_buckets is a standalone layout")
+    return impl == "arrow" and isinstance(
+        df.schema[id_col].dataType, T.LongType
+    )
+
+
+def _perdoc_bands(
+    df: DataFrame, text_col: str, id_col: str,
+    num_hashes: int, bands: int, k: int,
+    hex_buckets: bool = False,
+    with_shingles: bool = False,
+    impl: str = "arrow",
+) -> DataFrame:
+    """The one banding frame every LSH consumer reads: one row per doc
+    with at least one shingle, ``(id, __buckets[, __sh])``.
+
+    ``__buckets[b]`` is band b's bucket — the md5 of the comma-joined
+    decimal rendering of the band's signature slice
+    (:func:`_band_value_exprs`), as the full md5 hex
+    (``hex_buckets=True``; :func:`minhash_index`'s materialized,
+    engine-portable index schema) or as the ``_h64`` long (default; an
+    8-byte shuffle key — a truncation collision can only MERGE buckets,
+    i.e. only ever ADD candidate pairs, and every consumer verifies its
+    candidates exactly). ``with_shingles`` adds ``__sh``, the doc's
+    distinct-gram SET, sorted (every consumer is order-insensitive).
+    NULL texts and docs with fewer than k tokens drop, matching the
+    ``n_shingles > 0`` filter. :func:`_band_rows` and
+    :func:`_lsh_candidates` unpack the buckets with ``posexplode``.
+
+    The Arrow arm (long ids, :func:`_use_arrow_banding`) tokenizes
+    exactly like ``F.split(text, " ")`` (empty tokens included), hashes
+    each distinct gram once to its 31-bit base hash and takes the
+    (a·x+b) mod 2³¹−1 permutation min per signature slot in vectorized
+    int64 (products stay < 2⁶², no overflow). It is bit-identical to
+    the expression arm, pinned by tests/test_operators.py."""
+    if not _use_arrow_banding(df, id_col, impl):
+        sigs = _nonempty_sigs(
+            df, text_col, id_col, num_hashes, k, keep_shingles=with_shingles
+        )
+        bucket_of = F.md5 if hex_buckets else _h64
+        cols = [
+            F.col(id_col),
+            F.array(
+                *[bucket_of(v) for v in _band_value_exprs(num_hashes, bands)]
+            ).alias("__buckets"),
+        ]
+        if with_shingles:
+            cols.append(F.array_sort("__sh").alias("__sh"))
+        return sigs.select(*cols)
+
+    from pyspark.sql import types as T
+
     params = _permutation_params(num_hashes)
     rpb = num_hashes // bands
     M = _MERSENNE31
-    if perdoc_buckets:
-        # ONE compact row per doc: just the _h64 long band buckets —
-        # the cheapest materializable proxy of the banding pass (r14,
-        # the fused minhash_verified_pairs route checkpoints this; the
-        # heavyweight shingle sets deliberately do NOT ride it — a
-        # checkpointed row is deserialized WHOLE by every consumer, so
-        # fat rows re-pay their bytes per read while the verify-side
-        # tokenize is a cheap codegen split the lazy shape already
-        # runs).
-        fields = [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("__buckets", T.ArrayType(T.LongType()), False),
-        ]
-    elif perdoc_shingles:
-        fields = [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("__sh", T.ArrayType(T.StringType()), False),
-            T.StructField("__sigkey", T.LongType(), False),
-            T.StructField("__classkey", T.StringType(), False),
-            T.StructField("__buckets", T.ArrayType(T.LongType()), False),
-        ]
-    elif with_buckets:
-        fields = [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("__bkts", T.ArrayType(T.LongType()), False),
-            T.StructField("band", T.IntegerType(), False),
-            T.StructField("bucket", T.LongType(), False),
-        ]
-    else:
-        # The drop-set-private sig-key layout (r14) narrows ``bucket``
-        # to the 60-bit ``_h64`` long — every one of minhash_drop_set's
-        # (band, bucket) exchanges then moves an 8-byte long instead of
-        # a 32-char hex string (guide §2.3 narrower types; a truncation
-        # collision can only MERGE buckets, i.e. only ever ADDS
-        # candidate pairs, and every candidate is exactly verified, so
-        # the drop set is unchanged — the same argument that lets
-        # minhash_lsh_pairs use _h64 buckets against its all-pairs
-        # oracle). The public layout (minhash_index) keeps the full
-        # md5-hex bucket: it is a materialized, engine-portable index
-        # schema, not an internal shuffle key.
-        fields = [
-            T.StructField(id_col, T.LongType()),
-            *(
-                [
-                    T.StructField("__sigkey", T.LongType(), False),
-                    T.StructField("__classkey", T.StringType(), False),
-                ]
-                if with_sig_key
-                else []
-            ),
-            T.StructField("band", T.IntegerType(), False),
-            T.StructField(
-                "bucket", T.LongType() if with_sig_key else T.StringType()
-            ),
-        ]
+    bucket_type = T.StringType() if hex_buckets else T.LongType()
+    fields = [
+        T.StructField(id_col, T.LongType()),
+        T.StructField("__buckets", T.ArrayType(bucket_type), False),
+    ]
+    if with_shingles:
+        fields.append(
+            T.StructField("__sh", T.ArrayType(T.StringType()), False)
+        )
     schema = T.StructType(fields)
 
     def build(batches):
@@ -371,20 +327,18 @@ def _banded_rows_arrow(
 
         A = np.array([a for a, _ in params], dtype=np.int64)
         Bv = np.array([b for _, b in params], dtype=np.int64)
-        # Memoization, r13 (pure speedups — every value computed exactly
-        # as before, just not twice). ``gmemo`` maps a gram to its
-        # (digest-hex, int63 base hash): with k=1 the grams are distinct
-        # WORDS and documents share most of their vocabulary, so the
-        # per-gram md5 (the builder's hot cost, ~1 µs/call) collapses to
-        # one call per distinct gram. Task-lived, capped (clear-on-
-        # overflow, Zipf keeps the head hot) so a huge all-distinct
-        # vocabulary can't grow executor memory unboundedly. ``tmemo``
-        # maps a full text to its per-doc outputs: duplicate clusters —
-        # the exact shape this operator exists for — repeat identical
-        # texts thousands of times, and every output (buckets, sigkey,
-        # classkey) is text-determined, id-independent. BATCH-lived: its
-        # keys are references into strings the current Arrow batch holds
-        # anyway, so it adds zero retained memory.
+        # Two memos, pure speedups (every value computed exactly as
+        # without them). ``gmemo`` maps a gram to its base hash: with
+        # k=1 the grams are distinct WORDS and documents share most of
+        # their vocabulary, so the per-gram md5 (the builder's hot cost,
+        # ~1 µs/call) collapses to one call per distinct gram.
+        # Task-lived, capped (clear-on-overflow, Zipf keeps the head hot)
+        # so a huge all-distinct vocabulary can't grow executor memory
+        # unboundedly. ``tmemo`` maps a full text to its per-doc outputs:
+        # duplicate clusters repeat identical texts thousands of times,
+        # and every output is text-determined, id-independent.
+        # BATCH-lived: its keys are references into strings the current
+        # Arrow batch holds anyway, so it adds zero retained memory.
         gmemo: dict = {}
 
         def gram_hash(g):
@@ -393,177 +347,61 @@ def _banded_rows_arrow(
                 if len(gmemo) >= 262144:
                     gmemo.clear()
                 dig = hashlib.md5(g.encode("utf-8")).hexdigest()
-                got = (dig, int(dig[:15], 16) % M)
+                got = int(dig[:15], 16) % M
                 gmemo[g] = got
             return got
+
+        def bucket(vals):
+            dig = hashlib.md5(
+                ",".join(str(int(v)) for v in vals).encode("utf-8")
+            ).hexdigest()
+            return dig if hex_buckets else int(dig[:15], 16)
 
         for pdf in batches:
             tmemo: dict = {}
             ids: list = []
-            bandl: list = []
-            buckets: list = []
-            bkts_col: list = []
-            sigkeys: list = []
-            classkeys: list = []
+            bkts: list = []
             shs: list = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 if not isinstance(text, str):
                     continue  # NULL text: expression path drops it too
                 hit = tmemo.get(text)
-                if hit is not None:
-                    did = int(did)
-                    if perdoc_buckets:
-                        ids.append(did)
-                        bkts_col.append(hit)
-                    elif perdoc_shingles:
-                        sh_list, bvals, sk, ck = hit
-                        ids.append(did)
-                        shs.append(sh_list)
-                        sigkeys.append(sk)
-                        classkeys.append(ck)
-                        bkts_col.append(bvals)
-                    elif with_buckets:
-                        bk = hit
-                        for b in range(bands):
-                            ids.append(did)
-                            bandl.append(b)
-                            buckets.append(bk[b])
-                            bkts_col.append(bk)
+                if hit is None:
+                    toks = text.split(" ")
+                    if len(toks) < k:
+                        continue  # zero shingles
+                    if k == 1:
+                        grams = set(toks)
                     else:
-                        bvals, sk, ck = hit
-                        for b in range(bands):
-                            ids.append(did)
-                            bandl.append(b)
-                            buckets.append(bvals[b])
-                            if with_sig_key:
-                                sigkeys.append(sk)
-                                classkeys.append(ck)
-                    continue
-                toks = text.split(" ")
-                if len(toks) < k:
-                    continue  # zero shingles
-                if k == 1:
-                    grams = set(toks)
-                else:
-                    grams = {
-                        " ".join(toks[i : i + k])
-                        for i in range(len(toks) - k + 1)
-                    }
-                if with_sig_key:
-                    # keep the full digests: the class key reuses them
-                    digs = []
-                    xs = np.empty(len(grams), dtype=np.int64)
-                    for i, g in enumerate(grams):
-                        dig, x = gram_hash(g)
-                        digs.append(dig)
-                        xs[i] = x
-                else:
+                        grams = {
+                            " ".join(toks[i : i + k])
+                            for i in range(len(toks) - k + 1)
+                        }
                     xs = np.fromiter(
-                        (gram_hash(g)[1] for g in grams),
+                        (gram_hash(g) for g in grams),
                         dtype=np.int64,
                         count=len(grams),
                     )
-                sig = ((xs[:, None] * A[None, :] + Bv[None, :]) % M).min(
-                    axis=0
-                )
-                svals = [
-                    ",".join(
-                        str(int(v)) for v in sig[b * rpb : (b + 1) * rpb]
+                    sig = ((xs[:, None] * A[None, :] + Bv[None, :]) % M).min(
+                        axis=0
                     )
-                    for b in range(bands)
-                ]
-                did = int(did)
-                if with_buckets or perdoc_buckets:
-                    bk = [
-                        int(
-                            hashlib.md5(s.encode("utf-8")).hexdigest()[:15],
-                            16,
-                        )
-                        for s in svals
-                    ]
-                    tmemo[text] = bk
-                    if perdoc_buckets:
-                        ids.append(did)
-                        bkts_col.append(bk)
-                    else:
-                        for b in range(bands):
-                            ids.append(did)
-                            bandl.append(b)
-                            buckets.append(bk[b])
-                            bkts_col.append(bk)
-                else:
-                    sk = ck = None
-                    if with_sig_key:
-                        # same rendering as the band slices (comma-joined
-                        # decimal), over the FULL signature, through _h64
-                        sk = int(
-                            hashlib.md5(
-                                ",".join(
-                                    str(int(v)) for v in sig
-                                ).encode("utf-8")
-                            ).hexdigest()[:15],
-                            16,
-                        )
-                        # = _class_key_col: md5 of the comma-joined
-                        # lexicographically-sorted full gram digests
-                        ck = hashlib.md5(
-                            ",".join(sorted(digs)).encode("utf-8")
-                        ).hexdigest()
-                    if with_sig_key:
-                        # drop-set-private layout: the 60-bit _h64 long
-                        # (= int of the first 15 hex digits), not the
-                        # full hex — see the schema comment above
-                        bvals = [
-                            int(
-                                hashlib.md5(s.encode("utf-8")).hexdigest()[
-                                    :15
-                                ],
-                                16,
-                            )
-                            for s in svals
-                        ]
-                    else:
-                        bvals = [
-                            hashlib.md5(s.encode("utf-8")).hexdigest()
-                            for s in svals
-                        ]
-                    if perdoc_shingles:
-                        sh_list = sorted(grams)
-                        tmemo[text] = (sh_list, bvals, sk, ck)
-                        ids.append(did)
-                        shs.append(sh_list)
-                        sigkeys.append(sk)
-                        classkeys.append(ck)
-                        bkts_col.append(bvals)
-                    else:
-                        tmemo[text] = (bvals, sk, ck)
-                        for b in range(bands):
-                            ids.append(did)
-                            bandl.append(b)
-                            buckets.append(bvals[b])
-                            if with_sig_key:
-                                sigkeys.append(sk)
-                                classkeys.append(ck)
-            data = {id_col: pd.Series(ids, dtype="int64")}
-            if perdoc_buckets:
-                data["__buckets"] = pd.Series(bkts_col, dtype="object")
-            elif perdoc_shingles:
+                    hit = (
+                        [
+                            bucket(sig[b * rpb : (b + 1) * rpb])
+                            for b in range(bands)
+                        ],
+                        sorted(grams) if with_shingles else None,
+                    )
+                    tmemo[text] = hit
+                ids.append(int(did))
+                bkts.append(hit[0])
+                shs.append(hit[1])
+            data = {
+                id_col: pd.Series(ids, dtype="int64"),
+                "__buckets": pd.Series(bkts, dtype="object"),
+            }
+            if with_shingles:
                 data["__sh"] = pd.Series(shs, dtype="object")
-                data["__sigkey"] = pd.Series(sigkeys, dtype="int64")
-                data["__classkey"] = pd.Series(classkeys, dtype="object")
-                data["__buckets"] = pd.Series(bkts_col, dtype="object")
-            elif with_buckets:
-                data["__bkts"] = pd.Series(bkts_col, dtype="object")
-                data["band"] = pd.Series(bandl, dtype="int32")
-                data["bucket"] = pd.Series(buckets, dtype="int64")
-            else:
-                if with_sig_key:
-                    data["__sigkey"] = pd.Series(sigkeys, dtype="int64")
-                    data["__classkey"] = pd.Series(classkeys, dtype="object")
-                data["band"] = pd.Series(bandl, dtype="int32")
-                data["bucket"] = pd.Series(
-                    buckets, dtype="int64" if with_sig_key else "object"
-                )
             yield pd.DataFrame(data, columns=[f.name for f in fields])
 
     from lakeshack_spark.session import spread_small_input
@@ -573,108 +411,41 @@ def _banded_rows_arrow(
     ).mapInPandas(build, schema)
 
 
-def _use_arrow_banding(df: DataFrame, id_col: str, impl: str = "arrow") -> bool:
-    """True when the banded LSH builders take :func:`_banded_rows_arrow`
-    — a mapInPandas twin computing the SAME md5-derived values
-    (bit-identical: same UTF-8 md5 per shingle, same int64 permutation
-    arithmetic, same decimal rendering into the band-slice md5),
-    measured several× faster than the interpreted HOF aggregate (the
-    signature fold never enters codegen — the same class of exception
-    as text.repetition_stats, see CLAUDE.md). The twin's output schema
-    is long ids, so a non-long ``id_col`` always takes the expression
-    form; ``impl="expr"`` forces it (the cross-engine-readable
-    reference and the parity-test twin)."""
-    from pyspark.sql import types as T
-
-    return impl == "arrow" and isinstance(
-        df.schema[id_col].dataType, T.LongType
+def _band_rows(perdoc: DataFrame) -> DataFrame:
+    """``(id, band, bucket)`` rows of a :func:`_perdoc_bands` frame —
+    ``bands`` rows per doc, unpacked in-row (no shuffle)."""
+    id_col = perdoc.columns[0]
+    return perdoc.select(
+        F.col(id_col), F.posexplode("__buckets").alias("band", "bucket")
     )
 
 
-def _banded(
-    df: DataFrame, text_col: str, id_col: str,
-    num_hashes: int, bands: int, k: int,
-    impl: str = "arrow",
-    with_sig_key: bool = False,
-) -> DataFrame:
-    """(id, band, bucket) rows: each doc explodes to ``bands`` rows keyed
-    by the md5 of that band's signature slice. Dispatches to the Arrow
-    twin by default (:func:`_use_arrow_banding`); ``impl="expr"`` forces
-    the expression form (always used for non-long id columns).
-    ``with_sig_key`` adds a per-doc ``__sigkey`` long (``_h64`` of the
-    comma-joined full signature — see :func:`_banded_rows_arrow`); the
-    Arrow twin ALSO emits ``__classkey`` (exact shingle-class identity,
-    free there), the expression twin deliberately does not (ADVICE r9 —
-    see the inline comment below)."""
-    if _use_arrow_banding(df, id_col, impl):
-        return _banded_rows_arrow(
-            df, text_col, id_col, num_hashes, bands, k,
-            with_buckets=False, with_sig_key=with_sig_key,
-        )
-    sigs = _nonempty_sigs(df, text_col, id_col, num_hashes, k)
-    band_vals = _band_value_exprs(num_hashes, bands)
-    head = [F.col(id_col)]
-    out_cols = [id_col]
-    if with_sig_key:
-        # identical rendering to the Arrow twin: longs print as plain
-        # decimal under concat_ws, matching str(int(v))
-        full_sig = F.concat_ws(
-            ",",
-            *[F.element_at(F.col("sig"), i + 1) for i in range(num_hashes)],
-        )
-        head.append(_h64(full_sig).alias("__sigkey"))
-        out_cols.append("__sigkey")
-        # NO ``__classkey`` here, deliberately (ADVICE r9): on this
-        # interpreted path ``_class_key_col`` is an md5 PER SHINGLE per
-        # doc; the Arrow twin emits it because the per-gram digests are
-        # already in hand there.
-    # sig-key layout (drop-set private): long _h64 buckets, matching the
-    # Arrow twin's r14 narrowing (see _banded_rows_arrow's schema
-    # comment); the public bare layout keeps the md5-hex bucket.
-    bucket_of = _h64 if with_sig_key else F.md5
-    return sigs.select(
-        *head,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        bucket_of(band_vals[b]).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(*out_cols, "bb.band", "bb.bucket")
-
-
-def _banded_with_buckets(
-    df: DataFrame, text_col: str, id_col: str,
-    num_hashes: int, bands: int, k: int,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Like :func:`_banded`, but buckets are long-typed (the portable
-    md5→conv hash over the SAME shared band-slice expressions) and each
-    exploded row also carries the full per-band bucket array ``__bkts``,
-    so :func:`minhash_lsh_pairs` can compare a joined pair's band-0
-    buckets locally for its band-0 pre-dedup (carrying the whole array
-    through the JOIN was measured as the dominant cost and is avoided
-    there — the caller projects out just element 1 before aliasing).
-    Same Arrow-twin dispatch as :func:`_banded`."""
-    if _use_arrow_banding(df, id_col, impl):
-        return _banded_rows_arrow(
-            df, text_col, id_col, num_hashes, bands, k, with_buckets=True
-        )
-    sigs = _nonempty_sigs(df, text_col, id_col, num_hashes, k)
-    bucket_hashes = F.array(*[_h64(v) for v in _band_value_exprs(num_hashes, bands)])
-    with_bkts = sigs.select(F.col(id_col), bucket_hashes.alias("__bkts"))
-    return with_bkts.select(
+def _lsh_candidates(perdoc: DataFrame) -> DataFrame:
+    """Distinct candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, of a
+    long-bucket :func:`_perdoc_bands` frame: the (band, bucket)
+    self-join with the band-0 pre-dedup (see :func:`minhash_lsh_pairs`).
+    Every LSH pair consumer builds its candidates here."""
+    id_col = perdoc.columns[0]
+    banded = perdoc.select(
         F.col(id_col),
-        F.col("__bkts"),
-        F.explode(
-            F.array(*[F.lit(b) for b in range(bands)])
-        ).alias("band"),
-    ).withColumn("bucket", F.element_at(F.col("__bkts"), F.col("band") + 1))
+        F.posexplode("__buckets").alias("band", "bucket"),
+        F.element_at(F.col("__buckets"), 1).alias("__bkt0"),
+    )
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .filter((F.col("a.band") == 0) | (F.col("a.__bkt0") != F.col("b.__bkt0")))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        )
+        .distinct()
+    )
 
 
 def minhash_lsh_pairs(
@@ -714,26 +485,8 @@ def minhash_lsh_pairs(
     two 16-long arrays into each of the 152M joined rows — the payload
     width, not the predicate, dominates. See CLAUDE.md.)
     """
-    banded = _banded_with_buckets(df, text_col, id_col, num_hashes, bands, k).select(
-        F.col(id_col),
-        F.col("band"),
-        F.col("bucket"),
-        F.element_at(F.col("__bkts"), 1).alias("__bkt0"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter((F.col("a.band") == 0) | (F.col("a.__bkt0") != F.col("b.__bkt0")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return _lsh_candidates(
+        _perdoc_bands(df, text_col, id_col, num_hashes, bands, k)
     )
 
 
@@ -760,10 +513,12 @@ def minhash_verified_pairs(
     md5+permutation Arrow BANDING pass twice per run (once under each
     side of the band self-join — the exchange is not reused at the BHJ
     shape, and forcing SMJ to reuse it measured 5× slower on dup-dense
-    corpora, r13). The fused route runs that pass ONCE, into a compact
-    per-doc bucket proxy ``(id, __buckets)`` that is eagerly
-    ``localCheckpoint``\\ ed; both self-join sides are projections of
-    the materialized frame. ``localCheckpoint`` (not ``persist``) is
+    corpora, r13). The two routes share :func:`_lsh_candidates` over
+    the one :func:`_perdoc_bands` frame and differ only in the
+    checkpoint: the fused route runs the banding pass ONCE, into the
+    compact per-doc bucket frame ``(id, __buckets)``, eagerly
+    ``localCheckpoint``\\ ed, so both self-join sides read the
+    materialized frame. ``localCheckpoint`` (not ``persist``) is
     what preserves the composition contract: there is no cache handle
     for the caller to leak — the checkpointed blocks are released by
     the ContextCleaner when the returned frame's RDD is garbage
@@ -773,9 +528,9 @@ def minhash_verified_pairs(
     shape: ``fused=None`` (default) routes by the zero-job Catalyst
     size estimate (≥ :data:`VERIFIED_FUSED_MIN_INPUT_BYTES` and a long
     id column → fused), ``True``/``False`` force a route. Both routes
-    are BIT-IDENTICAL: the per-doc buckets are the same ``_h64`` longs
-    the lazy banding uses and the verify is the same integer-|∩|/|∪|
-    double quotient (parity-pinned in tests/test_operators.py).
+    are BIT-IDENTICAL: same candidate join over the same frame, same
+    integer-|∩|/|∪| double quotient (parity-pinned in
+    tests/test_operators.py).
     """
     if fused is None:
         fused = (
@@ -801,36 +556,10 @@ def minhash_verified_pairs(
         # codegen split. The verify below therefore keeps the lazy
         # shape's expression shingles (guide §8: materialize the small
         # proxy, recompute the cheap part).
-        perdoc = _banded_rows_arrow(
-            df, text_col, id_col, num_hashes, bands, k,
-            with_buckets=False, perdoc_buckets=True,
-        ).localCheckpoint(eager=True)
-        banded = perdoc.select(
-            F.col(id_col),
-            F.posexplode("__buckets").alias("band", "bucket"),
-            F.element_at(F.col("__buckets"), 1).alias("__bkt0"),
-        )
-        a0 = banded.alias("a")
-        b0 = banded.alias("b")
-        # identical self-join + band-0 pre-dedup as minhash_lsh_pairs —
-        # same _h64 long buckets, so the candidate set is equal row for
-        # row; both join sides read the one checkpointed frame.
-        cands = (
-            a0.join(
-                b0,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .filter(
-                (F.col("a.band") == 0)
-                | (F.col("a.__bkt0") != F.col("b.__bkt0"))
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
+        cands = _lsh_candidates(
+            _perdoc_bands(
+                df, text_col, id_col, num_hashes, bands, k
+            ).localCheckpoint(eager=True)
         )
     else:
         cands = minhash_lsh_pairs(df, text_col, id_col, num_hashes, bands, k)
@@ -1183,7 +912,11 @@ def minhash_index(
     index, not the corpus, is what incremental dedup joins against.
     Parameters are part of the index identity: a probe MUST band with the
     same (num_hashes, bands, k) or buckets never collide."""
-    return _banded(df, text_col, id_col, num_hashes, bands, k)
+    return _band_rows(
+        _perdoc_bands(
+            df, text_col, id_col, num_hashes, bands, k, hex_buckets=True
+        )
+    )
 
 
 def incremental_near_dups(
@@ -1227,9 +960,11 @@ def incremental_near_dups(
         corpus_index = minhash_index(
             corpus_docs, text_col, id_col, num_hashes, bands, k
         )
-    nb = _banded(new_docs, text_col, id_col, num_hashes, bands, k).select(
-        F.col(id_col).alias("id_new"), "band", "bucket"
-    )
+    nb = _band_rows(
+        _perdoc_bands(
+            new_docs, text_col, id_col, num_hashes, bands, k, hex_buckets=True
+        )
+    ).select(F.col(id_col).alias("id_new"), "band", "bucket")
     idx = corpus_index.select(
         F.col(id_col).alias("id_corpus"), "band", "bucket"
     )
@@ -1314,24 +1049,6 @@ def contamination_flags(
         .groupBy(id_col)
         .agg(F.count("*").alias("n_hits"))
         .filter(F.col("n_hits") >= min_hits)
-    )
-
-
-def minhash_first_candidates(banded: DataFrame, id_col: str = "doc_id"):
-    """Each doc's bucket-min candidates: for every band, the smallest id
-    in the doc's bucket (when below its own) — distinct (id_b, id_a)
-    rows, AT MOST ``bands`` per doc. JOIN-FREE by construction (a window
-    min over the bucket), which is the property that makes keep-earliest
-    dedup linear in docs instead of quadratic in cluster size; pinned by
-    a plan test asserting no Join node."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket")
-    return (
-        banded.withColumn("__bucket_min", F.min(id_col).over(w))
-        .filter(F.col("__bucket_min") < F.col(id_col))
-        .select(F.col(id_col).alias("id_b"), F.col("__bucket_min").alias("id_a"))
-        .distinct()
     )
 
 
@@ -1486,9 +1203,10 @@ def minhash_drop_set(
     holding a duplicate cluster of m docs contributes m²/2 of them — at
     web scale a single million-doc template cluster alone would be 5·10¹¹
     pairs. Keep-earliest dedup only needs "∃ earlier verified match in a
-    shared bucket", which each bucket answers on its own: banding (the
-    Arrow per-doc frame for long ids, expression banding plus
-    :func:`shingles_col` otherwise) is followed by ONE bucket-local walk
+    shared bucket", which each bucket answers on its own: ONE per-doc
+    frame ``(id, __buckets, __sh)`` (:func:`_perdoc_bands` with
+    shingles) feeds both the banded rows (:func:`_band_rows`) and the
+    shingle sets (a projection) of ONE bucket-local walk
     (:func:`_drop_set_walk`) that checks every doc of every multi-member
     bucket against that bucket's earlier members only.
 
@@ -1502,14 +1220,17 @@ def minhash_drop_set(
     shares a prefix token with the doc, and every hit is the same
     integer-|∩|/|∪| double check (see :func:`_bucket_verify_group`).
     Returns a one-column DataFrame named ``id_col`` (its input type),
-    eagerly materialized and persisted (the per-doc banding cache is
-    unpersisted before return) — callers unpersist it when done.
+    eagerly materialized and persisted — callers unpersist it when done.
+    On the Arrow arm (long ids) the per-doc frame is persisted and
+    counted once, so the corpus is tokenized once, and unpersisted
+    before return; the expression arm (non-long ids) is read lazily by
+    both branches.
 
     ``stage_stats``: pass a list to receive ``(stage, wall_sec)`` tuples
     at the operator's job boundaries (the clean_corpus/round_stats
     convention) — ``banding_materialize`` (the Arrow tokenize+hash pass
-    and its cache pin; plan construction only on the expression path,
-    which is consumed once and not cached) and ``bucket_walk`` (window,
+    and its cache pin; plan construction only on the expression arm,
+    which is not cached) and ``bucket_walk`` (window,
     shingle attach, walk and result pin). ``None`` (default) adds zero
     work and zero extra jobs.
     """
@@ -1523,34 +1244,29 @@ def minhash_drop_set(
             stage_stats.append((name, round(_time.time() - _t0, 3)))
         _t0 = _time.time()
 
-    perdoc = None
-    if _use_arrow_banding(df, id_col):
-        # ONE corpus scan+tokenize pass: the per-doc Arrow frame carries
-        # the shingle set and every band bucket, so the banded rows and
-        # the shingle frame are PROJECTIONS of the one cache (posexplode
-        # unpacks in-row, no shuffle). Eager count: both branches read
-        # it, and an unmaterialized cache re-computes the tokenize+hash
-        # lineage per branch (CLAUDE.md).
-        perdoc = _banded_rows_arrow(
-            df, text_col, id_col, num_hashes, bands, k,
-            with_buckets=False, with_sig_key=True, perdoc_shingles=True,
-        ).persist()
+    perdoc = _perdoc_bands(
+        df, text_col, id_col, num_hashes, bands, k, with_shingles=True
+    )
+    cached = _use_arrow_banding(df, id_col)
+    if cached:
+        # ONE corpus scan+tokenize pass: the banded rows and the shingle
+        # frame are PROJECTIONS of the one cache (posexplode unpacks
+        # in-row, no shuffle). Eager count: both branches read it, and
+        # an unmaterialized cache re-computes the tokenize+hash lineage
+        # per branch (CLAUDE.md). The expression arm (non-long ids) is
+        # consumed lazily by both branches instead.
+        perdoc = perdoc.persist()
         perdoc.count()
-        banded = perdoc.select(
-            F.col(id_col), F.posexplode("__buckets").alias("band", "bucket")
-        )
-        sh = perdoc.select(F.col(id_col), F.col("__sh"))
-    else:
-        # non-long ids: expression banding plus a separate shingle pass,
-        # each consumed once by the walk
-        banded = _banded(
-            df, text_col, id_col, num_hashes, bands, k, with_sig_key=True
-        )
-        sh = df.select(F.col(id_col), shingles_col(text_col, k).alias("__sh"))
     _stat("banding_materialize")
-    result = _drop_set_walk(banded, sh, id_col, threshold).distinct().persist()
+    result = (
+        _drop_set_walk(
+            _band_rows(perdoc), perdoc.select(id_col, "__sh"), id_col, threshold
+        )
+        .distinct()
+        .persist()
+    )
     result.count()
     _stat("bucket_walk")
-    if perdoc is not None:
+    if cached:
         perdoc.unpersist()
     return result

@@ -166,8 +166,8 @@ def test_lsh_pairs_band0_prededup_equals_plain_distinct(spark):
         for r in dedup.minhash_lsh_pairs(docs, **kw).collect()
     }
     # plain reference: join + unconditional distinct over the same banding
-    banded = dedup._banded_with_buckets(docs, "text", "doc_id", 16, 8, 1).select(
-        "doc_id", "band", "bucket"
+    banded = dedup._perdoc_bands(docs, "text", "doc_id", 16, 8, 1).select(
+        "doc_id", F.posexplode("__buckets").alias("band", "bucket")
     )
     a, b = banded.alias("a"), banded.alias("b")
     want_df = (
@@ -825,147 +825,20 @@ def test_verified_pairs_fused_equals_lazy(spark, docs):
         dedup.minhash_verified_pairs(sdocs, fused=True)
 
 
-def test_drop_set_bucket_dtypes(spark, docs):
-    """r14 narrowing pin: the drop-set-private sig-key layouts carry
-    LONG buckets (8 bytes through every (band, bucket) exchange) on BOTH
-    twins, while the public minhash_index layout keeps the md5-hex
-    STRING bucket — it is a materialized, engine-portable index schema."""
+def test_perdoc_bands_arrow_equals_expr(spark, docs):
+    """The one banding builder's Arrow arm must be BIT-identical to its
+    expression arm — same md5 base hashes, same int64 permutation mins,
+    same band-slice decimal rendering, same bucket hash — for hex, long
+    and long + shingles buckets at k=1/k=3, on the docs fixture and on
+    an adversarial frame (empty text, leading/trailing/double spaces
+    incl. empty tokens, unicode, duplicate tokens, NULL text,
+    fewer-than-k tokens, and exact-duplicate texts plus shared
+    vocabulary, which exercise the text and gram memos). ``__sh`` is the
+    sorted shingles_col set; long buckets are longs and minhash_index's
+    bucket stays the md5-hex string; the drop set's frame carries
+    exactly (id, __buckets, __sh); string ids take the expression arm."""
     from pyspark.sql import types as T
 
-    for impl in ("arrow", "expr"):
-        b = dedup._banded(
-            docs, "text", "doc_id", 16, 4, 1, impl=impl, with_sig_key=True
-        )
-        assert isinstance(b.schema["bucket"].dataType, T.LongType), impl
-    perdoc = dedup._banded_rows_arrow(
-        docs, "text", "doc_id", 16, 4, 1,
-        with_buckets=False, with_sig_key=True, perdoc_shingles=True,
-    )
-    assert isinstance(
-        perdoc.schema["__buckets"].dataType.elementType, T.LongType
-    )
-    idx = dedup.minhash_index(docs)
-    assert isinstance(idx.schema["bucket"].dataType, T.StringType)
-
-
-def test_banded_arrow_equals_expr(spark, docs):
-    """The Arrow banding twin must be BIT-identical to the expression
-    path — same md5 base hashes, same int64 permutation mins, same
-    band-slice decimal rendering, same bucket hash — on the docs
-    fixture and on an adversarial frame (empty text, leading/trailing/
-    double spaces incl. empty tokens, unicode, duplicate tokens, NULL
-    text, fewer-than-k tokens), for both banding layouts and k=1/k=3."""
-    adversarial = spark.createDataFrame(
-        [
-            (1, ""),
-            (2, " "),
-            (3, "a  b "),
-            (4, "héllo wörld héllo"),
-            (5, "x x x"),
-            (6, None),
-            (7, "one two three four five"),
-            (8, "one"),
-        ],
-        "doc_id long, text string",
-    )
-    for frame in (docs, adversarial):
-        for k in (1, 3):
-            a = {
-                tuple(r)
-                for r in dedup._banded(
-                    frame, "text", "doc_id", 16, 4, k, impl="arrow"
-                ).collect()
-            }
-            e = {
-                tuple(r)
-                for r in dedup._banded(
-                    frame, "text", "doc_id", 16, 4, k, impl="expr"
-                ).collect()
-            }
-            assert a == e and len(a) > 0
-            ab = {
-                (r.doc_id, tuple(r["__bkts"]), r.band, r.bucket)
-                for r in dedup._banded_with_buckets(
-                    frame, "text", "doc_id", 16, 4, k, impl="arrow"
-                ).collect()
-            }
-            eb = {
-                (r.doc_id, tuple(r["__bkts"]), r.band, r.bucket)
-                for r in dedup._banded_with_buckets(
-                    frame, "text", "doc_id", 16, 4, k, impl="expr"
-                ).collect()
-            }
-            assert ab == eb and len(ab) > 0
-
-
-def test_banded_sig_key_parity_and_semantics(spark, docs):
-    """``with_sig_key`` must be BIT-identical across the twins on the
-    columns both emit (same comma-joined decimal full-signature
-    rendering through _h64), and the key must be a signature identity:
-    equal for identical shingle sets regardless of token order /
-    duplication (k=1), distinct for different sets. ``__classkey`` is
-    Arrow-only since ADVICE r9 (the expression twin's per-shingle md5
-    cost the whole corpus at banding time) — its rendering parity with
-    the expression-side ``_class_key_col`` is pinned directly here so
-    the two class identities stay equal."""
-    frame = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma"),
-            (2, "gamma alpha beta alpha"),  # same k=1 shingle set as 1
-            (3, "alpha beta delta"),  # different set
-        ],
-        "doc_id long, text string",
-    )
-    shared = ["doc_id", "__sigkey", "band", "bucket"]
-    for df in (docs, frame):
-        arrow_banded = dedup._banded(
-            df, "text", "doc_id", 16, 4, 1, impl="arrow", with_sig_key=True
-        )
-        expr_banded = dedup._banded(
-            df, "text", "doc_id", 16, 4, 1, impl="expr", with_sig_key=True
-        )
-        assert "__classkey" in arrow_banded.columns
-        assert "__classkey" not in expr_banded.columns
-        a = {tuple(r) for r in arrow_banded.select(*shared).collect()}
-        e = {tuple(r) for r in expr_banded.select(*shared).collect()}
-        assert a == e and len(a) > 0
-    rows = (
-        dedup._banded(frame, "text", "doc_id", 16, 4, 1, with_sig_key=True)
-        .select("doc_id", "__sigkey", "__classkey")
-        .distinct()
-        .collect()
-    )
-    keys = {r["doc_id"]: r["__sigkey"] for r in rows}
-    cls = {r["doc_id"]: r["__classkey"] for r in rows}
-    assert keys[1] == keys[2] != keys[3]
-    assert cls[1] == cls[2] != cls[3]
-    # cross-twin class-key rendering parity: the expression-side
-    # _class_key_col over the shingle frame must equal Arrow's
-    # __classkey doc-for-doc
-    sh = frame.select(
-        F.col("doc_id"), dedup.shingles_col("text", 1).alias("__sh")
-    )
-    expr_cls = {
-        r["doc_id"]: r["ck"]
-        for r in sh.select(
-            "doc_id", dedup._class_key_col(F.col("__sh")).alias("ck")
-        ).collect()
-    }
-    assert expr_cls == cls
-
-
-def test_banded_perdoc_fused_layout_parity(spark, docs):
-    """The r13 fused per-doc layout (one row per doc: shingle set, both
-    identity keys, every band bucket — minhash_drop_set's single corpus
-    pass) must carry exactly the information of the two frames it
-    replaces: posexploding ``__buckets`` reproduces the banded
-    ``with_sig_key`` rows bit-for-bit, and ``__sh`` is the sorted
-    expression shingle set doc-for-doc (sorted is safe: every drop-set
-    consumer is order-insensitive — sizes, array_intersect sizes,
-    sorted class digests, Python sets). The adversarial frame plants
-    exact-duplicate texts (the text memo) and shared vocabulary (the
-    gram memo) so both memoized fast paths are exercised against the
-    memo-free expression twin."""
     adversarial = spark.createDataFrame(
         [
             (1, ""),
@@ -983,31 +856,28 @@ def test_banded_perdoc_fused_layout_parity(spark, docs):
         ],
         "doc_id long, text string",
     )
+
+    def rows(df):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()
+        )
+
     for frame in (docs, adversarial):
         for k in (1, 3):
-            perdoc = dedup._banded_rows_arrow(
-                frame, "text", "doc_id", 16, 4, k,
-                with_buckets=False, with_sig_key=True,
-                perdoc_shingles=True,
-            )
-            exploded = {
-                tuple(r)
-                for r in perdoc.select(
-                    "doc_id", "__sigkey", "__classkey",
-                    F.posexplode("__buckets").alias("band", "bucket"),
-                ).collect()
-            }
-            base = {
-                tuple(r)
-                for r in dedup._banded(
-                    frame, "text", "doc_id", 16, 4, k,
-                    impl="arrow", with_sig_key=True,
-                ).collect()
-            }
-            assert exploded == base and len(base) > 0
+            for kw in (dict(hex_buckets=True), {}, dict(with_shingles=True)):
+                a = rows(dedup._perdoc_bands(
+                    frame, "text", "doc_id", 16, 4, k, impl="arrow", **kw
+                ))
+                e = rows(dedup._perdoc_bands(
+                    frame, "text", "doc_id", 16, 4, k, impl="expr", **kw
+                ))
+                assert a == e and len(a) > 0, (k, kw)
             got_sh = {
                 r["doc_id"]: list(r["__sh"])
-                for r in perdoc.select("doc_id", "__sh").collect()
+                for r in dedup._perdoc_bands(
+                    frame, "text", "doc_id", 16, 4, k, with_shingles=True
+                ).collect()
             }
             want_sh = {
                 r["doc_id"]: sorted(r["s"])
@@ -1017,6 +887,25 @@ def test_banded_perdoc_fused_layout_parity(spark, docs):
                 if r["s"] is not None and len(r["s"]) > 0
             }
             assert got_sh == want_sh
+    for impl in ("arrow", "expr"):
+        perdoc = dedup._perdoc_bands(
+            docs, "text", "doc_id", 16, 4, 1, with_shingles=True, impl=impl
+        )
+        assert perdoc.columns == ["doc_id", "__buckets", "__sh"], impl
+        assert isinstance(
+            perdoc.schema["__buckets"].dataType.elementType, T.LongType
+        ), impl
+    idx = dedup.minhash_index(docs)
+    assert idx.columns == ["doc_id", "band", "bucket"]
+    assert isinstance(idx.schema["bucket"].dataType, T.StringType)
+    sdf = spark.createDataFrame(
+        [("a", "x y z"), ("b", "x y z")], "doc_id string, text string"
+    )
+    srows = dedup._band_rows(
+        dedup._perdoc_bands(sdf, "text", "doc_id", 8, 4, 1)
+    ).collect()
+    assert {r.doc_id for r in srows} == {"a", "b"}
+    assert len(srows) == 8  # 2 docs × 4 bands
 
 
 def test_minhash_drop_set_exact_duplicates(spark):
@@ -1058,17 +947,6 @@ def test_minhash_drop_set_string_ids(spark):
         got = {r.doc_id for r in drops.collect()}
         drops.unpersist()
         assert got == want, threshold
-
-
-def test_banded_non_long_id_falls_back_to_expr(spark):
-    """A string id column must route to the expression form (the Arrow
-    twin requires int64 ids) and still band correctly."""
-    df = spark.createDataFrame(
-        [("a", "x y z"), ("b", "x y z")], "doc_id string, text string"
-    )
-    rows = dedup._banded(df, "text", "doc_id", 8, 4, 1).collect()
-    assert {r.doc_id for r in rows} == {"a", "b"}
-    assert len(rows) == 8  # 2 docs × 4 bands
 
 
 def _keep_earliest_drops(ids, shs, threshold):
@@ -1427,7 +1305,7 @@ def test_incremental_near_dups_equals_cross_pairs(spark, docs):
 
     # with a prebuilt index, only the NEW side is banded
     calls = []
-    orig = dedup._banded
+    orig = dedup._perdoc_bands
 
     def counting(df, *a, **kw):
         calls.append(df)
@@ -1435,14 +1313,14 @@ def test_incremental_near_dups_equals_cross_pairs(spark, docs):
 
     index = dedup.minhash_index(corpus, num_hashes=64, bands=16, k=1)
     try:
-        dedup._banded = counting
+        dedup._perdoc_bands = counting
         again = dedup.incremental_near_dups(
             new, corpus, num_hashes=64, bands=16, k=1, threshold=0.9,
             corpus_index=index,
         )
         got2 = {(r.id_new, r.id_corpus, r.jaccard) for r in again.collect()}
     finally:
-        dedup._banded = orig
+        dedup._perdoc_bands = orig
     assert got2 == expect
     assert len(calls) == 1, "corpus must not be re-banded when index is supplied"
 

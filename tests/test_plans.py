@@ -169,22 +169,6 @@ def test_hash_split_is_map_only(spark):
     assert "Exchange" not in plans.explain_str(out)
 
 
-def test_first_candidates_plan_has_no_join(spark):
-    """The drop-set pass-1 candidate computation must stay join-free —
-    a pair join here would reintroduce the O(cluster²) blowup that
-    minhash_drop_set exists to avoid."""
-    from lakeshack_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i} w{i+1} w{i+2}") for i in range(20)],
-        "doc_id long, text string",
-    )
-    banded = dedup._banded(docs, "text", "doc_id", 32, 8, 1)
-    first = dedup.minhash_first_candidates(banded)
-    plan = first._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-
-
 def test_q18_aggregates_lineitem_below_the_join(spark):
     """q18 must pre-aggregate lineitem by l_orderkey (map-side partial
     combine) and apply the HAVING filter BEFORE the join — joining raw

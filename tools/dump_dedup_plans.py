@@ -7,8 +7,7 @@ can't show the shapes that matter.
 Writes, under --out (default plans/r14) with --suffix:
   minhash_drop_set_walk<sfx>.txt    the drop set's bucket walk
   minhash_dedup_verified<sfx>.txt   the lazy verified-pairs plan (300 docs)
-  minhash_verified_fused<sfx>.txt   the fused verified-pairs plan (if the
-                                    code version has it; skipped otherwise)
+  minhash_verified_fused<sfx>.txt   the fused verified-pairs plan
 
 Usage: python tools/dump_dedup_plans.py [--sf DIR] [--out plans/r14]
                                         [--suffix _before]
@@ -51,19 +50,17 @@ def main() -> None:
     # ---- the drop set's bucket walk over its one persisted per-doc
     # frame (captured unpersisted — at runtime the subtrees below the
     # posexplode/projection read the cache) --------------------------
-    perdoc = dedup._banded_rows_arrow(
-        docs, "text", "doc_id", 32, 8, 1,
-        with_buckets=False, with_sig_key=True, perdoc_shingles=True,
+    perdoc = dedup._perdoc_bands(
+        docs, "text", "doc_id", 32, 8, 1, with_shingles=True
     )
-    banded = perdoc.select(
-        F.col("doc_id"), F.posexplode("__buckets").alias("band", "bucket")
+    walk = dedup._drop_set_walk(
+        dedup._band_rows(perdoc), perdoc.select("doc_id", "__sh"), "doc_id", 0.9
     )
-    sh = perdoc.select("doc_id", "__sh")
     write(
         "minhash_drop_set_walk",
         "== drop_set bucket walk (bucket-size window, shingle attach,\n"
         "   (band, bucket) repartition + sort, one mapInPandas) ==\n\n"
-        + formatted_plan(dedup._drop_set_walk(banded, sh, "doc_id", 0.9)),
+        + formatted_plan(walk),
     )
 
     # ---- verified pairs: the headline 300-doc lazy plan ----------------
@@ -82,23 +79,17 @@ def main() -> None:
         ),
     )
 
-    # ---- verified pairs, fused route (r14+ only) ------------------------
-    if "fused" in dedup.minhash_verified_pairs.__code__.co_varnames:
-        write(
-            "minhash_verified_fused",
-            "== minhash_verified_pairs, fused route (forced; the per-doc\n"
-            "   frame is localCheckpoint'ed at runtime) ==\n\n"
-            + formatted_plan(
-                dedup.minhash_verified_pairs(
-                    docs300,
-                    num_hashes=64,
-                    bands=16,
-                    k=1,
-                    threshold=0.9,
-                    fused=True,
-                )
-            ),
-        )
+    # ---- verified pairs, fused route -----------------------------------
+    write(
+        "minhash_verified_fused",
+        "== minhash_verified_pairs, fused route (forced; the per-doc\n"
+        "   frame is localCheckpoint'ed at construction) ==\n\n"
+        + formatted_plan(
+            dedup.minhash_verified_pairs(
+                docs300, num_hashes=64, bands=16, k=1, threshold=0.9, fused=True
+            )
+        ),
+    )
     spark.stop()
 
 
