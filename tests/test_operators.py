@@ -825,21 +825,12 @@ def test_verified_pairs_fused_equals_lazy(spark, docs):
         dedup.minhash_verified_pairs(sdocs, fused=True)
 
 
-def test_perdoc_bands_arrow_equals_expr(spark, docs):
-    """The one banding builder's Arrow arm must be BIT-identical to its
-    expression arm — same md5 base hashes, same int64 permutation mins,
-    same band-slice decimal rendering, same bucket hash — for hex, long
-    and long + shingles buckets at k=1/k=3, on the docs fixture and on
-    an adversarial frame (empty text, leading/trailing/double spaces
-    incl. empty tokens, unicode, duplicate tokens, NULL text,
-    fewer-than-k tokens, and exact-duplicate texts plus shared
-    vocabulary, which exercise the text and gram memos). ``__sh`` is the
-    sorted shingles_col set; long buckets are longs and minhash_index's
-    bucket stays the md5-hex string; the drop set's frame carries
-    exactly (id, __buckets, __sh); string ids take the expression arm."""
-    from pyspark.sql import types as T
-
-    adversarial = spark.createDataFrame(
+def _adversarial_docs(spark):
+    """Empty text, leading/trailing/double spaces incl. empty tokens,
+    unicode, duplicate tokens, NULL text, fewer-than-k tokens, and
+    exact-duplicate texts plus shared vocabulary, which exercise the
+    Arrow arm's text and gram memos."""
+    return spark.createDataFrame(
         [
             (1, ""),
             (2, " "),
@@ -857,36 +848,22 @@ def test_perdoc_bands_arrow_equals_expr(spark, docs):
         "doc_id long, text string",
     )
 
-    def rows(df):
-        return sorted(
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in df.collect()
-        )
 
-    for frame in (docs, adversarial):
-        for k in (1, 3):
-            for kw in (dict(hex_buckets=True), {}, dict(with_shingles=True)):
-                a = rows(dedup._perdoc_bands(
-                    frame, "text", "doc_id", 16, 4, k, impl="arrow", **kw
-                ))
-                e = rows(dedup._perdoc_bands(
-                    frame, "text", "doc_id", 16, 4, k, impl="expr", **kw
-                ))
-                assert a == e and len(a) > 0, (k, kw)
-            got_sh = {
-                r["doc_id"]: list(r["__sh"])
-                for r in dedup._perdoc_bands(
-                    frame, "text", "doc_id", 16, 4, k, with_shingles=True
-                ).collect()
-            }
-            want_sh = {
-                r["doc_id"]: sorted(r["s"])
-                for r in frame.select(
-                    "doc_id", dedup.shingles_col("text", k).alias("s")
-                ).collect()
-                if r["s"] is not None and len(r["s"]) > 0
-            }
-            assert got_sh == want_sh
+def _sorted_rows(df):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_drop_set_bucket_dtypes(spark, docs):
+    """The drop set's per-doc frame carries LONG buckets (8 bytes
+    through every (band, bucket) exchange) on both arms, with exactly
+    (id, __buckets, __sh), while the public minhash_index keeps the
+    md5-hex STRING bucket — a materialized, engine-portable index
+    schema."""
+    from pyspark.sql import types as T
+
     for impl in ("arrow", "expr"):
         perdoc = dedup._perdoc_bands(
             docs, "text", "doc_id", 16, 4, 1, with_shingles=True, impl=impl
@@ -898,14 +875,98 @@ def test_perdoc_bands_arrow_equals_expr(spark, docs):
     idx = dedup.minhash_index(docs)
     assert idx.columns == ["doc_id", "band", "bucket"]
     assert isinstance(idx.schema["bucket"].dataType, T.StringType)
-    sdf = spark.createDataFrame(
+
+
+def test_banded_arrow_equals_expr(spark, docs):
+    """The banding builder's Arrow arm must be BIT-identical to its
+    expression arm — same md5 base hashes, same int64 permutation mins,
+    same band-slice decimal rendering, same bucket hash — for hex, long
+    and long + shingles buckets at k=1/k=3, on the docs fixture and on
+    the adversarial frame."""
+    for frame in (docs, _adversarial_docs(spark)):
+        for k in (1, 3):
+            for kw in (dict(hex_buckets=True), {}, dict(with_shingles=True)):
+                a = _sorted_rows(dedup._perdoc_bands(
+                    frame, "text", "doc_id", 16, 4, k, impl="arrow", **kw
+                ))
+                e = _sorted_rows(dedup._perdoc_bands(
+                    frame, "text", "doc_id", 16, 4, k, impl="expr", **kw
+                ))
+                assert a == e and len(a) > 0, (k, kw)
+
+
+def test_banded_sig_key_parity_and_semantics(spark):
+    """The per-doc bucket array is a signature identity on both arms:
+    equal for identical shingle sets regardless of token order /
+    duplication (k=1), distinct for different sets, and the same
+    doc-for-doc across the arms."""
+    frame = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma"),
+            (2, "gamma alpha beta alpha"),  # same k=1 shingle set as 1
+            (3, "alpha beta delta"),  # different set
+        ],
+        "doc_id long, text string",
+    )
+    got = {}
+    for impl in ("arrow", "expr"):
+        got[impl] = {
+            r["doc_id"]: tuple(r["__buckets"])
+            for r in dedup._perdoc_bands(
+                frame, "text", "doc_id", 16, 4, 1, impl=impl
+            ).collect()
+        }
+        keys = got[impl]
+        assert keys[1] == keys[2] != keys[3], impl
+    assert got["arrow"] == got["expr"]
+
+
+def test_banded_perdoc_fused_layout_parity(spark, docs):
+    """The per-doc frame must carry exactly the information of the
+    exploded band rows and the shingle sets: ``_band_rows`` gives
+    ``bands`` rows per doc whose buckets are ``__buckets`` in band
+    order, and ``__sh`` is the sorted ``shingles_col`` set doc-for-doc
+    (sorted is safe: every drop-set consumer is order-insensitive).
+    Checked on both arms, so the memoized Arrow paths the adversarial
+    frame exercises agree with the memo-free expression arm."""
+    for frame in (docs, _adversarial_docs(spark)):
+        for k in (1, 3):
+            want_sh = {
+                r["doc_id"]: sorted(r["s"])
+                for r in frame.select(
+                    "doc_id", dedup.shingles_col("text", k).alias("s")
+                ).collect()
+                if r["s"] is not None and len(r["s"]) > 0
+            }
+            for impl in ("arrow", "expr"):
+                perdoc = dedup._perdoc_bands(
+                    frame, "text", "doc_id", 16, 4, k,
+                    with_shingles=True, impl=impl,
+                )
+                got = perdoc.collect()
+                assert {r["doc_id"]: list(r["__sh"]) for r in got} == want_sh
+                exploded = {
+                    tuple(r) for r in dedup._band_rows(perdoc).collect()
+                }
+                want = {
+                    (r["doc_id"], band, bucket)
+                    for r in got
+                    for band, bucket in enumerate(r["__buckets"])
+                }
+                assert exploded == want and len(want) == 4 * len(got), impl
+
+
+def test_banded_non_long_id_falls_back_to_expr(spark):
+    """A string id column must route to the expression arm (the Arrow
+    arm requires int64 ids) and still band correctly."""
+    df = spark.createDataFrame(
         [("a", "x y z"), ("b", "x y z")], "doc_id string, text string"
     )
-    srows = dedup._band_rows(
-        dedup._perdoc_bands(sdf, "text", "doc_id", 8, 4, 1)
+    rows = dedup._band_rows(
+        dedup._perdoc_bands(df, "text", "doc_id", 8, 4, 1)
     ).collect()
-    assert {r.doc_id for r in srows} == {"a", "b"}
-    assert len(srows) == 8  # 2 docs × 4 bands
+    assert {r.doc_id for r in rows} == {"a", "b"}
+    assert len(rows) == 8  # 2 docs × 4 bands
 
 
 def test_minhash_drop_set_exact_duplicates(spark):
