@@ -12,9 +12,13 @@ path, so both collapse into one plan here.
 
 Scale notes (100 TB):
 
-- Pruning happens before ``spark.read`` sees the file list, so the driver
-  never even lists non-candidate files; with good clustering a point lookup
-  plans a 1-file scan regardless of dataset size.
+- Pruning happens before the scan sees the file list, so the driver never
+  even lists non-candidate files, and it lists each candidate at most once
+  per ``update_metastore``: candidates open through the shack's own client
+  of Spark's bounded file-status cache (``_CandidateOpener``), so a query
+  whose candidates were all opened before runs no listing job. With good
+  clustering a point lookup plans a 1-file scan regardless of dataset
+  size.
 - Filters and projection are passed through the DataFrame API so Catalyst
   pushes them into the Parquet reader (row-group stats, dictionary and
   bloom filters) — check ``PushedFilters`` in ``.explain``.
@@ -29,7 +33,7 @@ import logging
 import time
 from typing import Any, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from lakeshack_spark.metastore import (
     ALL_CLAUSE_OPS,
@@ -78,10 +82,77 @@ def build_predicate(
 ):
     """IN-list ∧ AND-ed comparison clauses as one Column expression
     (reference builds the same as a pyarrow.dataset.Expression,
-    lakeshack/lakeshack.py:531-545)."""
-    return F.col(cluster_column).isin(list(cluster_values)) & build_clause_predicate(
-        optional_where_clauses
-    )
+    lakeshack/lakeshack.py:531-545).
+
+    The IN-list is built by one ``isInCollection`` call, which makes the
+    same literals as ``Column.isin`` (pinned in tests/test_query.py) but
+    skips its one ``lit`` round trip per value."""
+    in_list = Column(F.col(cluster_column)._jc.isInCollection(list(cluster_values)))
+    return in_list & build_clause_predicate(optional_where_clauses)
+
+
+def _module(package, name: str):
+    """The JVM singleton of Scala ``object`` ``name`` in ``package``."""
+    return getattr(getattr(package, name + "$"), "MODULE$")
+
+
+class _CandidateOpener:
+    """Opens store-pruned Parquet file lists as DataFrames through one
+    client of Spark's shared, size-bounded ``FileStatusCache`` — the cache
+    catalog tables use so they do not re-list immutable files.
+
+    The scan is the one ``spark.read.schema(schema).parquet(*files)``
+    builds (same path qualification, relation and plan), but its
+    ``InMemoryFileIndex`` lists only the files this client has not seen,
+    so a candidate is stat'ed once per ``invalidate()`` and a query with
+    at most 32 (``parallelPartitionDiscovery.threshold``) unseen files
+    runs no listing job. The JVM handles are resolved once, here; an open
+    is about a dozen py4j calls plus the path list's conversion. The
+    client's entries live in the shared cache's LRU bound, so a dropped
+    shack leaves nothing unbounded behind.
+    """
+
+    def __init__(self, spark: SparkSession, schema: T.StructType) -> None:
+        jvm, jss = spark._jvm, spark._jsparkSession
+        ds = jvm.org.apache.spark.sql.execution.datasources
+        none = _module(jvm.scala, "None")
+        self._spark, self._jss, self._schema, self._none = spark, jss, schema, none
+        self._to_seq = jvm.PythonUtils.toSeq
+        self._state = jss.sessionState()
+        self._qualify = _module(ds, "DataSource").checkAndGlobPathIfNecessary
+        self._index_cls, self._relation_cls = ds.InMemoryFileIndex, ds.HadoopFsRelation
+        self._cache = ds.FileStatusCache.getOrCreate(jss)
+        # DataSource reads a user schema as nullable.
+        self._jschema = jss.parseDataType(schema.json()).asNullable()
+        self._some_schema = jvm.scala.Option.apply(self._jschema)
+        self._options = jvm.PythonUtils.toScalaMap({})
+        self._format = ds.parquet.ParquetFileFormat()
+
+    def open(self, files: Sequence[str]) -> DataFrame:
+        # DataSource's own qualification (``file:`` spelling kept) and
+        # globbing, minus its per-file existence check: the flags are
+        # checkEmptyGlobPath, checkFilesExist, numThreads, enableGlobbing.
+        paths = self._qualify(
+            self._to_seq(list(files)), self._state.newHadoopConf(), True, False, 40, True
+        )
+        index = self._index_cls(
+            self._jss, paths, self._options, self._some_schema, self._cache,
+            self._none, self._none,
+        )
+        if len(index.inputFiles()) < len(set(files)):
+            # The index lists a missing root path as empty; DataSource's
+            # existence check raises PATH_NOT_FOUND for it.
+            return self._spark.read.schema(self._schema).parquet(*files)
+        relation = self._relation_cls(
+            index, index.partitionSchema(), self._jschema, self._none,
+            self._format, self._options, self._jss,
+        )
+        return DataFrame(self._jss.baseRelationToDataFrame(relation), self._spark)
+
+    def invalidate(self) -> None:
+        """Forget every status this client cached (other clients keep
+        theirs)."""
+        self._cache.invalidateAll()
 
 
 class Lakeshack:
@@ -126,14 +197,27 @@ class Lakeshack:
         #: Telemetry for the most recent ``query()``/``query_arrow()`` —
         #: see ``status()``.
         self.last_query_status: dict[str, Any] = {}
+        self._opener: _CandidateOpener | None = None  # built by the first open
 
     def update_metastore(self, path: str | None = None, filesystem: Any = None) -> int:
         """Ingest (new) files' footer stats; idempotent. ``filesystem``
         forwards an explicit ``pyarrow.fs.FileSystem`` (reference
         ``Metastore.update``'s parameter, lakeshack/metastore.py:209) —
         discovery and footer reads then run through that object with
-        paths in its own terms (``bucket/key``)."""
+        paths in its own terms (``bucket/key``). Also forgets the file
+        statuses cached by earlier opens, so files that compaction,
+        ``delete_rows`` or any reconciled deletion removed are listed
+        afresh."""
+        if self._opener is not None:
+            self._opener.invalidate()
         return self.metastore.update(path or self.data_path, filesystem=filesystem)
+
+    def _open(self, files: Sequence[str]) -> DataFrame:
+        """Scan of store-pruned candidate ``files`` — the one way a shack
+        opens a list the metastore produced (see ``_CandidateOpener``)."""
+        if self._opener is None:
+            self._opener = _CandidateOpener(self.spark, self.schema)
+        return self._opener.open(files)
 
     def candidate_files(
         self,
@@ -178,6 +262,14 @@ class Lakeshack:
         columnar reader sizes its own batches (the reference exposes
         pyarrow's to_batches knob to bound driver RAM; here the result is
         lazy and never driver-materialized by default).
+
+        Candidate files are taken as immutable, the contract the
+        metastore's idempotent ingest already assumes: a candidate missing
+        on disk when first opened raises ``PATH_NOT_FOUND`` here, but one
+        deleted behind the store's back *after* this shack opened it fails
+        when the scan executes, not at ``query()``. Deletions are
+        reconciled by ``update_metastore``, which also drops the cached
+        file statuses.
         """
         del batch_size
         if not isinstance(cluster_column_values, (list, tuple)):
@@ -201,10 +293,9 @@ class Lakeshack:
             status["bytes_candidate"],
         )
         if not files:
-            empty = self.spark.createDataFrame([], self.schema)
-            df = empty
+            df = self.spark.createDataFrame([], self.schema)
         else:
-            df = self.spark.read.schema(self.schema).parquet(*files)
+            df = self._open(files)
         df = df.filter(
             build_predicate(
                 self.cluster_column, cluster_column_values, optional_where_clauses
@@ -340,10 +431,8 @@ class Lakeshack:
         base = self.spark.createDataFrame([tuple(interior_vals)], out_schema)
         if not boundary:
             return base
-        scan = (
-            self.spark.read.schema(self.schema)
-            .parquet(*boundary)
-            .filter(build_clause_predicate(optional_where_clauses))
+        scan = self._open(boundary).filter(
+            build_clause_predicate(optional_where_clauses)
         )
         scan_aggs = [F.count(F.lit(1)).cast("long").alias("row_count")]
         for c in min_max_columns:

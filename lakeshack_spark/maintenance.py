@@ -164,8 +164,7 @@ def delete_rows(
         from pyspark.sql import functions as F
 
         for r in (
-            shack.spark.read.schema(shack.schema)
-            .parquet(*candidates)
+            shack._open(candidates)
             .withColumn("__f", F.input_file_name())
             .filter(pred)
             .groupBy("__f")

@@ -33,6 +33,9 @@ def test_compact_restores_point_lookup_selectivity(spark, tmp_path_factory):
     assert shack.metastore.stats_df().count() == 8
     before = len(shack.candidate_files([7]))
     assert before >= 4  # every batch's range covers custkey 7
+    # Open every file through this shack first: their cached statuses
+    # must not outlive the compaction that deletes them.
+    assert shack.query(list(range(1500))).count() == orders.count()
 
     removed = compact(shack, n_files=8)
     assert removed == 8

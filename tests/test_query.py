@@ -5,12 +5,18 @@ plus a pruned≡unpruned property check.
 
 from __future__ import annotations
 
-from datetime import datetime
+import os
+from datetime import date, datetime
+from decimal import Decimal
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from lakeshack_spark.engine import Lakeshack
+from lakeshack_spark.engine import Lakeshack, build_predicate
+from lakeshack_spark.sources.catalog import load_table
+from lakeshack_spark.writer import cluster_write
+from tests.conftest import SF_SMOKE
 
 TEN_IDS = ["01", "22", "35", "4f", "70", "8a", "a0", "bf", "d1", "f0"]
 
@@ -224,3 +230,89 @@ def test_reference_api_compatibility(shack):
     ms = shack.metastore
     assert ms.query(["00"]) == ms.prune(["00"]) != {}
     assert ms.update(shack.data_path, filesystem=None, n_workers=8) == 0
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [0, 7, -3],
+        [2**31, 2**40, -(2**35)],
+        ["plain", "o'brien", 'say "hi"', "back\\slash"],
+        [date(2021, 8, 10), date(1970, 1, 1)],
+        [datetime(2021, 8, 10, 22, 50, 53), datetime(1999, 12, 31, 23, 59, 59, 123456)],
+        [Decimal("12.34"), Decimal("-0.001")],
+        [None, 5],
+    ],
+    ids=["small_int", "big_int", "quoted_str", "date", "datetime", "decimal", "none"],
+)
+def test_in_list_literals_match_isin(spark, values):
+    """build_predicate's one-call IN-list makes the same expression,
+    literal for literal, as ``Column.isin``'s one ``lit`` per value."""
+    want = F.col("c").isin(values) & F.lit(True)
+    got = build_predicate("c", values)
+    assert str(got) == str(want)
+    assert got._jc.node().sql() == want._jc.node().sql()
+
+
+def _orders_lake(spark, tmp_path_factory, n_files):
+    orders = load_table(spark, SF_SMOKE, "orders")
+    lake = str(tmp_path_factory.mktemp("orders_lake"))
+    cluster_write(orders, lake, "o_custkey", n_files=n_files)
+    shack = Lakeshack(
+        spark, lake, "o_custkey", ["o_orderdate"],
+        store_path=str(tmp_path_factory.mktemp("orders_stats")),
+        schema=orders.schema,
+    )
+    shack.update_metastore()
+    return shack
+
+
+@pytest.fixture(scope="module")
+def wide_shack(spark, tmp_path_factory):
+    """A 40-file ``orders`` lake: wide requests have more candidates than
+    Spark's 32-path parallel-listing threshold."""
+    return _orders_lake(spark, tmp_path_factory, n_files=40)
+
+
+WIDE_KEYS = list(range(0, 1500, 2))
+
+
+def test_wide_query_repeat_runs_one_job(spark, wide_shack):
+    """A repeated query over >32 candidates runs its scan job only: the
+    candidates' file statuses come from the shack's cache, not from a
+    distributed listing job (a plain ``spark.read.parquet`` of the same
+    files runs two jobs). Opening writes no session conf."""
+    assert len(wide_shack.candidate_files(WIDE_KEYS)) >= 33
+    conf = spark.conf.getAll
+    first = wide_shack.query_arrow(WIDE_KEYS)
+    assert spark.conf.getAll == conf
+    sc = spark.sparkContext
+    group = "test_wide_query_repeat_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        again = wide_shack.query_arrow(WIDE_KEYS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert again.num_rows == first.num_rows > 0
+    assert n_jobs == 1, n_jobs
+
+
+def test_query_input_files_match_plain_read(spark, wide_shack):
+    """The cached opener names the same files, in the same ``file:``
+    spelling, as ``spark.read.parquet`` of the candidate list."""
+    for keys in (WIDE_KEYS, [7]):
+        got = wide_shack.query(keys).inputFiles()
+        want = spark.read.parquet(*wide_shack.candidate_files(keys)).inputFiles()
+        assert sorted(got) == sorted(want)
+
+
+def test_missing_candidate_raises_path_not_found(spark, tmp_path_factory):
+    """A candidate deleted from disk before this shack first opened it
+    fails at query() with PATH_NOT_FOUND, as a plain read of the list
+    does."""
+    shack = _orders_lake(spark, tmp_path_factory, n_files=4)
+    files = shack.candidate_files(WIDE_KEYS)
+    os.remove(files[1])
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        shack.query(WIDE_KEYS)
