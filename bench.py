@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -383,6 +384,7 @@ def main() -> None:
         replay_samples += [spin_sentinel(), spin_sentinel()]
 
     spark = get_spark(app_name="lakeshack_bench")
+    parallelism = parallelism_fields(spark.sparkContext)
     qs = queries()
 
     cache_mb = warm_page_cache(sf_dir)
@@ -953,6 +955,7 @@ def main() -> None:
         "contended_after_retries": contended_after_retries,
         "page_cache_warm_mb": cache_mb,
         "sf": sf_val,
+        **parallelism,
     }
     if replay_block is not None:
         out["replay"] = replay_block
@@ -1014,6 +1017,7 @@ def main() -> None:
         "contention_ratio_raw": contention["ratio"],
         "contended_after_retries": contended_after_retries,
         "sf": sf_val,
+        **parallelism,
     }
     # Adjudication verdicts ride the compact line only when a key
     # actually lost to the replay (the full block is in bench_detail);
@@ -1032,6 +1036,27 @@ def main() -> None:
     if "replay_contention" in out:
         compact["replay_contended"] = out["replay_contention"]["contended"]
     print(compact_line(compact))
+
+
+def parallelism_fields(sc) -> dict:
+    """The parallelism a record was taken at, read from the live
+    SparkContext: its master, the cores a local master runs tasks on
+    (``local[*]`` resolves as Spark resolves it, to the JVM's available
+    processors; None for a cluster master) and defaultParallelism."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\s*\d+)?\])?", sc.master)
+    cpus = None
+    if m:
+        n = m.group(1) or "1"
+        cpus = (
+            sc._jvm.java.lang.Runtime.getRuntime().availableProcessors()
+            if n == "*"
+            else int(n)
+        )
+    return {
+        "master": sc.master,
+        "cpus": cpus,
+        "default_parallelism": sc.defaultParallelism,
+    }
 
 
 COMPACT_LINE_MAX = 1500

@@ -5,8 +5,11 @@ Stage order is the cheap-filter-first rule that matters at 100 TB: map-only
 signals (language, quality, repetition, PII) cut the corpus before anything
 that shuffles (exact dedup) and before the most expensive stage (MinHash
 LSH near-dedup) sees a single row — each stage's cost is paid only on the
-previous stage's survivors. Everything stays in the DataFrame API, so
-Catalyst collapses the map-only stages into one codegen pass over the scan.
+previous stage's survivors. The language, quality and repetition signals
+come from ONE Arrow pass (``text.doc_signals``) that runs after the input is
+spread over every core; the filter on them, the PII mask and the exact-dedup
+key are JVM expressions above it, and exact dedup is the first shuffle
+after the spread's round-robin repartition.
 
 The report side (per-stage removal counts) runs the SAME lazy plan with
 count() per stage — use it on samples/audits; the `clean` path itself never
@@ -58,13 +61,15 @@ def _prefilter(
     Both frames are lazy; the second is built on the first."""
     from lakeshack_spark.session import spread_small_input
 
-    # The quality trio's per-row expression trees serialize on one core
-    # when the corpus is one single-row-group file (measured ~9 s
-    # single-task at bench scale; see session.spread_small_input).
+    # A one-row-group corpus scans as one task; the spread hands the signal
+    # pass to every core. It only holds because the signals come from a
+    # mapInArrow node: Catalyst would push a Filter on column expressions
+    # below the spread's repartition, back into the one scan task.
     docs = spread_small_input(docs)
-    df = text.lang_id(docs, text_col)
-    df = text.quality_score(df, text_col)
-    df = text.repetition_stats(df, text_col)
+    df = text.doc_signals(
+        docs, text_col,
+        ("lang_pred", "n_words", "quality", "max_word_frac", "top2gram_frac"),
+    )
     pred = (
         (F.col("n_words") >= cfg.min_words)
         & (F.col("quality") >= cfg.min_quality)
@@ -99,12 +104,12 @@ def clean_corpus(
     Two plan-shape rules this function enforces (each was measured as a
     >100× wall-time cliff, not a nicety):
 
-    - Heavy per-row signal expressions (the quadratic repetition trees)
-      live in FILTER position only and are ``select``-ed away right after
-      — output lineage carries plain columns plus ``lang_pred``/
-      ``quality``/``text_masked``. Leaving the signal trees in the output
-      schema re-inlines them into every downstream consumer; the
-      near-dedup self-join then recompiles and re-executes them per side.
+    - The per-row signals are used in FILTER position only and are
+      ``select``-ed away right after — output lineage carries plain
+      columns plus ``lang_pred``/``quality``/``text_masked``. A signal
+      left in the output schema as a column expression is re-inlined
+      into every downstream consumer; the near-dedup self-join then
+      recompiles and re-executes it per side.
     - The dedup survivor set is ``persist()``-ed before near-dedup: the
       drop set and the final anti-join both consume it, and without a
       materialization point each consumer re-runs the whole upstream

@@ -2,18 +2,23 @@
 ID, quality scoring, fingerprinting, term statistics.
 
 Hot-path logic is built-in ``pyspark.sql.functions`` (JVM-side,
-whole-stage codegen) wherever codegen actually applies; the one
-exception is ``repetition_stats``, whose per-row n-gram modes only
-exist as interpreted higher-order functions — there an Arrow-batched
-pandas UDF is measurably ~7× faster and is the default (the pure-SQL
-fold remains as the parity-checked alternative). Every operator is a
-map-only transform, so Catalyst prunes/pushes around it freely; at
-100 TB these run with no shuffle except the final aggregations.
+whole-stage codegen) wherever codegen actually applies. The one
+exception is the per-document signal kernel :func:`doc_signals`, behind
+``lang_id``, ``quality_score`` and ``repetition_stats``: marker counts
+and per-row n-gram modes only exist as interpreted higher-order
+functions, so one ``mapInArrow`` pass with a word ``Counter`` per
+document is measurably faster (~7× for the repetition modes alone; the
+pure-SQL repetition fold remains as the parity-checked alternative).
+Every operator is a map-only transform. Catalyst prunes and pushes
+around the expression operators freely; the kernel is a plan barrier
+that no ``Filter`` crosses. At 100 TB these run with no shuffle except
+the final aggregations.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints must resolve
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 #: Tiny marker vocabularies for the n-gram/keyword language-ID heuristic.
@@ -82,55 +87,160 @@ def token_count_regex(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def marker_hits(text_col: str, markers: tuple[str, ...]) -> Column:
-    """Number of tokens that appear in ``markers`` (duplicates counted)."""
-    arr = F.array(*[F.lit(m) for m in markers])
-    return F.size(F.filter(words_col(text_col), lambda w: F.array_contains(arr, w)))
+#: The signals :func:`doc_signals` computes, in output order, with the
+#: types and nullability the SQL forms give them: ``lang_pred`` is never
+#: NULL; a NULL text gives NULL ``n_words`` and quality ratios (ANSI
+#: ``size(NULL)``) and 0.0 repetition fractions.
+SIGNAL_SCHEMA = T.StructType(
+    [T.StructField("lang_pred", T.StringType(), False),
+     T.StructField("n_words", T.IntegerType())]
+    + [
+        T.StructField(name, T.DoubleType())
+        for name in (
+            "avg_word_len", "stopword_ratio", "distinct_ratio", "quality",
+            "max_word_frac", "top2gram_frac", "top3gram_frac", "dup_word_ratio",
+        )
+    ]
+)
+
+_LANGS = sorted(LANG_MARKERS)  # list order breaks argmax ties
+_LANG_SETS = [frozenset(LANG_MARKERS[lang]) for lang in _LANGS]
+_STOPSET = frozenset(STOPWORDS)
+
+
+def doc_signals(
+    df: DataFrame, text_col: str = "text", signals: tuple[str, ...] | None = None
+) -> DataFrame:
+    """Adds per-document text signals — every column of :func:`lang_id`,
+    :func:`quality_score` and :func:`repetition_stats` — in ONE Arrow
+    pass (``mapInArrow``): per document, one single-space split and one
+    word ``Counter`` give all of them. ``signals`` picks a subset of
+    ``SIGNAL_SCHEMA`` (default: all); a word 2/3-gram counter runs only
+    when its ``top{k}gram_frac`` is picked.
+
+    Input columns pass through as the Arrow arrays they arrived as. A
+    signal named like an input column replaces it in place (the
+    ``withColumn`` rule); the rest are appended in ``SIGNAL_SCHEMA``
+    order.
+
+    Why a kernel rather than column expressions: these signals are
+    membership counts and per-row modes, which Spark only expresses as
+    higher-order functions — interpreted, with no common-subexpression
+    elimination (the language argmax re-filtered the token array about
+    35 times per row). And a ``mapIn*`` node is a plan barrier: Catalyst
+    pushes a ``Filter`` through ``spread_small_input``'s repartition but
+    never through this node, so the kernel runs after the spread, on
+    every core.
+
+    The doubles are the same IEEE operations in the same order as the
+    SQL forms the oracles use (an int/int true division is correctly
+    rounded, like Spark's cast-to-double division), so they match
+    bit-for-bit.
+    """
+    by_name = {f.name: f for f in SIGNAL_SCHEMA.fields}
+    names = list(by_name) if signals is None else list(signals)
+    unknown = [n for n in names if n not in by_name]
+    if unknown:
+        raise ValueError(f"unknown signals {unknown}; known: {list(by_name)}")
+    names = [n for n in by_name if n in names]  # SIGNAL_SCHEMA order
+    positions = {n: i for i, n in enumerate(by_name)}
+    ks = tuple(k for k in (2, 3) if f"top{k}gram_frac" in names)
+    cols = df.columns
+    text_idx = cols.index(text_col)
+    # Each output column: an input position (pass-through) or a signal name.
+    sources: list[int | str] = [
+        c if c in names else i for i, c in enumerate(cols)
+    ] + [n for n in names if n not in cols]
+    schema = T.StructType(
+        [by_name[s] if isinstance(s, str) else df.schema.fields[s] for s in sources]
+    )
+    out_names = schema.fieldNames()
+
+    def doc_signal_batches(batches):
+        import pyarrow as pa
+
+        arrow_types = {
+            n: pa.int32() if n == "n_words" else pa.float64() for n in names
+        }
+        for batch in batches:
+            texts = batch.column(text_idx)
+            arrow_types["lang_pred"] = texts.type  # string or large_string
+            rows = [_doc_signal_row(t, ks) for t in texts.to_pylist()]
+            values = list(zip(*rows)) or [()] * len(positions)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(s) if isinstance(s, int)
+                    else pa.array(values[positions[s]], type=arrow_types[s])
+                    for s in sources
+                ],
+                names=out_names,
+            )
+
+    return df.mapInArrow(doc_signal_batches, schema)
+
+
+def _doc_signal_row(t: str | None, ks: tuple[int, ...]) -> tuple:
+    """All ``SIGNAL_SCHEMA`` values of one document, in that order;
+    ``top{k}gram_frac`` is computed for k in ``ks`` and 0.0 otherwise."""
+    if t is None:
+        return ("und", None, None, None, None, None, 0.0, 0.0, 0.0, 0.0)
+    words = t.split(" ")
+    n, nc = len(words), len(t)
+    counts = Counter(words)
+    scores = [sum(counts[m] for m in markers) for markers in _LANG_SETS]
+    best = max(scores)
+    lang = _LANGS[scores.index(best)] if best > 0 else "und"
+    avg_word_len = nc / n
+    stopword_ratio = sum(counts[s] for s in _STOPSET) / n
+    distinct_ratio = len(counts) / n
+    quality = (
+        min(avg_word_len / 8.0, 1.0) * 0.3
+        + min(stopword_ratio * 5.0, 1.0) * 0.3
+        + distinct_ratio * 0.4
+    )
+    top2, top3 = (_top_gram_frac(words, k, nc) if k in ks else 0.0 for k in (2, 3))
+    return (
+        lang, n, avg_word_len, stopword_ratio, distinct_ratio, quality,
+        max(counts.values()) / n, top2, top3, 1.0 - distinct_ratio,
+    )
+
+
+def _top_gram_frac(words: list[str], k: int, nc: int) -> float:
+    """Characters inside occurrences of the most frequent word k-gram
+    (ties toward the longer gram) over ``nc`` characters; 0.0 with fewer
+    than k words. k >= 2 words mean a space, so ``nc`` > 0 here."""
+    if len(words) < k:
+        return 0.0
+    grams = Counter(zip(*(words[j:] for j in range(k))))
+    top = max(grams.values())
+    chars = max(sum(map(len, g)) for g, c in grams.items() if c == top) + k - 1
+    return top * chars / nc
 
 
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds ``lang_pred``: argmax of per-language marker-hit counts with a
-    fixed preference order on ties (alphabetical), 'und' when no marker
-    hits at all."""
-    scores = {lang: marker_hits(text_col, m) for lang, m in sorted(LANG_MARKERS.items())}
-    best_score = F.greatest(*scores.values())
-    pred = F.lit("und")
-    # Reverse order so earlier (alphabetical) languages win ties.
-    for lang in sorted(scores, reverse=True):
-        pred = F.when(scores[lang] == best_score, F.lit(lang)).otherwise(pred)
-    pred = F.when(best_score <= 0, F.lit("und")).otherwise(pred)
-    return df.withColumn("lang_pred", pred)
+    """Adds ``lang_pred``: argmax of per-language marker-hit counts (a
+    token in a language's ``LANG_MARKERS`` counts once per occurrence)
+    with ties to the alphabetically first language, 'und' when no marker
+    hits at all. A projection of :func:`doc_signals`."""
+    return doc_signals(df, text_col, ("lang_pred",))
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds length/stopword/diversity quality signals and a composite
-    ``quality`` in [0, ~1]:
+    ``quality`` in [0, ~1] (a projection of :func:`doc_signals`):
 
-    - ``n_words``, ``n_chars_calc``
+    - ``n_words``: tokens of the single-space split
     - ``avg_word_len`` = chars / words
     - ``stopword_ratio`` = stopword tokens / tokens
     - ``distinct_ratio`` = distinct tokens / tokens
+    - ``quality`` = ``least(avg_word_len/8, 1)·0.3 +
+      least(stopword_ratio·5, 1)·0.3 + distinct_ratio·0.4``
+
+    A NULL text yields NULL for all five.
     """
-    w = words_col(text_col)
-    n_words = F.size(w)
-    n_chars = F.length(F.col(text_col))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(w, lambda t: F.array_contains(stop_arr, t)))
-    n_distinct = F.size(F.array_distinct(w))
-    avg_word_len = n_chars.cast("double") / n_words
-    stopword_ratio = n_stop.cast("double") / n_words
-    distinct_ratio = n_distinct.cast("double") / n_words
-    quality = (
-        F.least(avg_word_len / F.lit(8.0), F.lit(1.0)) * F.lit(0.3)
-        + F.least(stopword_ratio * F.lit(5.0), F.lit(1.0)) * F.lit(0.3)
-        + distinct_ratio * F.lit(0.4)
-    )
-    return (
-        df.withColumn("n_words", n_words)
-        .withColumn("avg_word_len", avg_word_len)
-        .withColumn("stopword_ratio", stopword_ratio)
-        .withColumn("distinct_ratio", distinct_ratio)
-        .withColumn("quality", quality)
+    return doc_signals(
+        df, text_col,
+        ("n_words", "avg_word_len", "stopword_ratio", "distinct_ratio", "quality"),
     )
 
 
@@ -203,14 +313,15 @@ def repetition_stats(
     - ``top3gram_frac``: same for 3-grams
     - ``dup_word_ratio``: 1 - distinct words / words
 
-    Per-row, map-only in both implementations (the "mode of my own
-    n-grams" never leaves the row — no explode → groupBy shuffle, which
-    at 100 TB would shuffle the full token stream):
+    A NULL text yields 0.0 for all four. Per-row, map-only in both
+    implementations (the "mode of my own n-grams" never leaves the row —
+    no explode → groupBy shuffle, which at 100 TB would shuffle the full
+    token stream):
 
-    - ``impl="arrow"`` (default): ONE vectorized pandas UDF computes all
-      four signals per Arrow batch with Counter — this is the documented
-      exception where a higher-order-function expression can't reach
-      codegen, so the JVM holds no advantage: Spark's HOFs evaluate
+    - ``impl="arrow"`` (default): a projection of the :func:`doc_signals`
+      Arrow kernel — Counter-based modes per document. This is the
+      documented exception where a higher-order-function expression can't
+      reach codegen, so the JVM holds no advantage: Spark's HOFs evaluate
       interpreted, and the measured gap is ~7× (5.3 s → 0.7 s steady on
       5000 sf0.1 docs).
     - ``impl="sql"``: pure-SQL single ``aggregate`` pass over each sorted
@@ -226,63 +337,11 @@ def repetition_stats(
     these word/gram forms.
     """
     if impl == "arrow":
-        return _repetition_stats_arrow(df, text_col)
+        return doc_signals(
+            df, text_col,
+            ("max_word_frac", "top2gram_frac", "top3gram_frac", "dup_word_ratio"),
+        )
     return _repetition_stats_sql(df, text_col)
-
-
-def _repetition_stats_arrow(df: DataFrame, text_col: str) -> DataFrame:
-    ret = T.StructType(
-        [
-            T.StructField("max_word_frac", T.DoubleType()),
-            T.StructField("top2gram_frac", T.DoubleType()),
-            T.StructField("top3gram_frac", T.DoubleType()),
-            T.StructField("dup_word_ratio", T.DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(ret)
-    def _rep(texts: pd.Series) -> pd.DataFrame:
-        from collections import Counter
-
-        cols = {
-            "max_word_frac": [],
-            "top2gram_frac": [],
-            "top3gram_frac": [],
-            "dup_word_ratio": [],
-        }
-        for t in texts:
-            if t is None:
-                for key in cols:
-                    cols[key].append(0.0)
-                continue
-            words = t.split(" ")
-            n, nc = len(words), len(t)
-            counts = Counter(words)
-            # max keys on (count, char length) — the element identity may
-            # differ from the SQL fold on full ties, but the OUTPUT only
-            # uses (count, length), so values are identical.
-            mc, ml = max((c, len(w)) for w, c in counts.items())
-            cols["max_word_frac"].append(mc / n)
-            cols["dup_word_ratio"].append(1.0 - len(counts) / n)
-            for k, key in ((2, "top2gram_frac"), (3, "top3gram_frac")):
-                if n < k or nc == 0:
-                    cols[key].append(0.0)
-                    continue
-                grams = Counter(
-                    " ".join(words[i : i + k]) for i in range(n - k + 1)
-                )
-                gc, gl = max((c, len(g)) for g, c in grams.items())
-                cols[key].append(gc * gl / nc)
-        return pd.DataFrame(cols)
-
-    return (
-        df.withColumn("__rep", _rep(F.col(text_col)))
-        .withColumn("max_word_frac", F.col("__rep.max_word_frac"))
-        .withColumn("top2gram_frac", F.col("__rep.top2gram_frac"))
-        .withColumn("top3gram_frac", F.col("__rep.top3gram_frac"))
-        .withColumn("dup_word_ratio", F.col("__rep.dup_word_ratio"))
-        .drop("__rep")
-    )
 
 
 def _repetition_stats_sql(df: DataFrame, text_col: str) -> DataFrame:
@@ -365,12 +424,14 @@ def mask_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     masked = F.col(text_col)
     for name in ("email", "ssn", "phone"):
         masked = F.regexp_replace(masked, PII_PATTERNS[name], f"<{name.upper()}>")
-    out = df.withColumn("text_masked", masked)
-    for name in ("email", "ssn", "phone"):
-        out = out.withColumn(
-            f"n_{name}", F.regexp_count(F.col(text_col), F.lit(PII_PATTERNS[name]))
-        )
-    return out
+    # One withColumns call: each chained withColumn re-analyses the plan.
+    return df.withColumns(
+        {"text_masked": masked}
+        | {
+            f"n_{name}": F.regexp_count(F.col(text_col), F.lit(PII_PATTERNS[name]))
+            for name in ("email", "ssn", "phone")
+        }
+    )
 
 
 def tfidf_top_terms(

@@ -3579,7 +3579,7 @@ def repeated_passages_docs(spark, sf_dir):
 )
 def repetition_stats_docs(spark, sf_dir):
     """Gopher repetition signals (operators.text.repetition_stats) under
-    the hash gate — this pins the Arrow pandas-UDF hot path (the measured
+    the hash gate — this pins the doc_signals Arrow kernel (the measured
     ~7× exception to stay-JVM-side) cell-exact against an independent
     DuckDB list-SQL mode computation. Tie semantics (max count, then max
     element length) are lexicographic [count, len] maxima on both sides;

@@ -327,3 +327,43 @@ def test_compact_line_sheds_optional_keys_before_queries():
     with _mock.patch.object(bench, "COMPACT_LINE_MAX", 80):
         parsed = _json.loads(bench.compact_line(tiny))
     assert "queries" not in parsed and "queries_truncated" not in parsed
+
+
+def test_final_line_carries_parallelism_and_keeps_queries():
+    """The final line records the effective master, cpus and
+    defaultParallelism, and adding them never costs the `queries` map
+    its place when the line is over budget."""
+    import json as _json
+    from types import SimpleNamespace
+
+    def fields(master):
+        return bench.parallelism_fields(
+            SimpleNamespace(master=master, defaultParallelism=8)
+        )
+
+    assert fields("local[4]") == {
+        "master": "local[4]", "cpus": 4, "default_parallelism": 8,
+    }
+    assert fields("local")["cpus"] == 1
+    assert fields("local[32, 2]")["cpus"] == 32
+    assert fields("spark://host:7077")["cpus"] is None
+
+    compact = {
+        "metric": "headline_queries_total",
+        "value": 17.445,
+        "unit": "sec",
+        "queries": {f"query_name_number_{i}": 1.234 for i in range(17)},
+        "adjudication": {
+            f"adjudicate_headline_key_{i}": {"verdict": "noise"} for i in range(40)
+        },
+        "contended_after_retries": [f"section_{i}" for i in range(30)],
+        "sf": 0.1,
+        **fields("local[32]"),
+    }
+    parsed = _json.loads(bench.compact_line(dict(compact)))
+    assert len(_json.dumps(parsed)) <= bench.COMPACT_LINE_MAX
+    assert parsed["queries"] == compact["queries"]
+    assert "queries_truncated" not in parsed
+    assert (parsed["master"], parsed["cpus"], parsed["default_parallelism"]) == (
+        "local[32]", 32, 8,
+    )

@@ -729,6 +729,141 @@ def test_semantic_dedup_keep_earliest(spark, vecs_with_dups):
     assert surv.isdisjoint(drop_rows)
 
 
+def test_mask_pii_plan_matches_chained_columns(spark):
+    """mask_pii builds its four columns in one withColumns call; the
+    optimized plan and schema equal the four chained withColumn calls."""
+    import re
+
+    df = spark.createDataFrame([(0, "mail a@b.io")], "doc_id long, text string")
+    masked = F.col("text")
+    for name in ("email", "ssn", "phone"):
+        masked = F.regexp_replace(
+            masked, text.PII_PATTERNS[name], f"<{name.upper()}>"
+        )
+    chained = df.withColumn("text_masked", masked)
+    for name in ("email", "ssn", "phone"):
+        chained = chained.withColumn(
+            f"n_{name}", F.regexp_count(F.col("text"), F.lit(text.PII_PATTERNS[name]))
+        )
+    got = text.mask_pii(df)
+
+    def optimized(frame):
+        return re.sub(r"#\d+", "#", frame._jdf.queryExecution().optimizedPlan().toString())
+
+    assert got.schema == chained.schema
+    assert optimized(got) == optimized(chained)
+    assert got.collect() == chained.collect()
+
+
+# -------------------------------------------- doc_signals: the Arrow kernel
+
+_SIGNALS = (
+    "lang_pred", "n_words", "avg_word_len", "stopword_ratio", "distinct_ratio",
+    "quality", "max_word_frac", "top2gram_frac", "top3gram_frac",
+    "dup_word_ratio",
+)
+
+#: Outputs of the column-expression forms the kernel replaced (lang_id's
+#: marker argmax, quality_score's five columns, repetition_stats' Arrow
+#: UDF), recorded before they were deleted. Floats are exact reprs.
+_RECORDED_SIGNALS = [
+    (None, ("und", None, None, None, None, None, 0.0, 0.0, 0.0, 0.0)),
+    ("", ("und", 1, 0.0, 0.0, 1.0, 0.4, 1.0, 0.0, 0.0, 0.0)),
+    ("solo", ("und", 1, 4.0, 0.0, 1.0, 0.55, 1.0, 0.0, 0.0, 0.0)),
+    ("aaaaaaaaa", ("und", 1, 9.0, 0.0, 1.0, 0.7, 1.0, 0.0, 0.0, 0.0)),
+    # doubled / leading / trailing spaces: empty tokens
+    ("a  b", ("en", 3, 1.3333333333333333, 0.3333333333333333, 1.0, 0.75,
+              0.3333333333333333, 0.5, 1.0, 0.0)),
+    (" ", ("und", 2, 0.5, 0.0, 0.5, 0.21875, 1.0, 1.0, 0.0, 0.5)),
+    ("  ", ("und", 3, 0.6666666666666666, 0.0, 0.3333333333333333,
+            0.15833333333333333, 1.0, 1.0, 1.0, 0.6666666666666667)),
+    (" lead trail ", ("und", 4, 3.0, 0.0, 0.75, 0.41250000000000003, 0.5,
+                      0.8333333333333334, 0.9166666666666666, 0.25)),
+    # cross-language marker ties go to the alphabetically first language
+    ("la", ("es", 1, 2.0, 0.0, 1.0, 0.47500000000000003, 1.0, 0.0, 0.0, 0.0)),
+    ("la la", ("es", 2, 2.5, 0.0, 0.5, 0.29375, 1.0, 1.0, 0.0, 0.5)),
+    ("de la", ("es", 2, 2.5, 0.0, 1.0, 0.49375, 0.5, 1.0, 0.0, 0.0)),
+    ("the el der le de5", ("de", 5, 3.4, 0.2, 1.0, 0.8275, 0.2,
+                           0.35294117647058826, 0.5882352941176471, 0.0)),
+    ("und et the", ("de", 3, 3.3333333333333335, 0.3333333333333333, 1.0,
+                    0.825, 0.3333333333333333, 0.6, 1.0, 0.0)),
+    ("et le zai4 shi4", ("fr", 4, 3.75, 0.0, 1.0, 0.540625, 0.25, 0.6, 0.8, 0.0)),
+    ("le la de et", ("fr", 4, 2.75, 0.0, 1.0, 0.503125, 0.25,
+                     0.45454545454545453, 0.7272727272727273, 0.0)),
+    ("the the the the", ("en", 4, 3.75, 1.0, 0.25, 0.540625, 1.0, 1.4,
+                         1.4666666666666666, 0.75)),
+    ("the a and of el la de que", ("en", 8, 3.125, 0.5, 1.0, 0.8171875, 0.125,
+                                   0.24, 0.36, 0.0)),
+    # non-ASCII and astral characters: Spark length == Python len (code points)
+    ("héllo wörld ü", ("und", 3, 4.333333333333333, 0.0, 1.0, 0.5625,
+                       0.3333333333333333, 0.8461538461538461, 1.0, 0.0)),
+    ("\U0001F600 \U0001F600 a", ("en", 3, 1.6666666666666667, 0.3333333333333333,
+                                 0.6666666666666666, 0.6291666666666667,
+                                 0.6666666666666666, 0.6, 1.0,
+                                 0.33333333333333337)),
+    ("ñ\U0001F600x de", ("es", 2, 3.0, 0.0, 1.0, 0.5125, 0.5, 1.0, 0.0, 0.0)),
+    ("\U00010348\U00010348 \U00010348", ("und", 2, 2.0, 0.0, 1.0,
+                                         0.47500000000000003, 0.5, 1.0, 0.0, 0.0)),
+]
+
+
+def test_doc_signals_match_recorded_expression_outputs(spark):
+    """Every signal, bit for bit, on the edges where the replaced column
+    expressions' semantics live: NULL text (ANSI size(NULL) is NULL),
+    empty tokens, marker ties and multi-byte characters. The projections
+    keep the old types, nullability and column order."""
+    df = spark.createDataFrame(
+        [(i, t) for i, (t, _) in enumerate(_RECORDED_SIGNALS)],
+        "doc_id long, text string",
+    )
+    out = text.repetition_stats(text.quality_score(text.lang_id(df)))
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in out.schema.fields] == [
+        ("doc_id", "bigint", True), ("text", "string", True),
+        ("lang_pred", "string", False), ("n_words", "int", True),
+    ] + [(c, "double", True) for c in _SIGNALS[2:]]
+    got = {r.doc_id: tuple(r[c] for c in _SIGNALS) for r in out.collect()}
+    assert got == {i: want for i, (_, want) in enumerate(_RECORDED_SIGNALS)}
+    # the one-pass form gives the same values
+    one = {r.doc_id: tuple(r[c] for c in _SIGNALS)
+           for r in text.doc_signals(df).collect()}
+    assert one == got
+
+
+def test_doc_signals_replaces_existing_columns_in_place(spark):
+    df = spark.createDataFrame(
+        [(1, 0.5, "the cat")], "doc_id long, quality double, text string"
+    )
+    out = text.doc_signals(df, signals=("quality", "lang_pred"))
+    assert out.columns == ["doc_id", "quality", "text", "lang_pred"]
+    row = out.collect()[0]
+    assert (row.quality, row.lang_pred) == (py_signals("the cat")[5], "en")
+    with pytest.raises(ValueError, match="unknown signals"):
+        text.doc_signals(df, signals=("nope",))
+
+
+def py_signals(t):
+    """Independent reference for text.doc_signals: plain loops over the
+    token list, no Counter."""
+    if t is None:
+        return ("und", None, None, None, None, None, 0.0, 0.0, 0.0, 0.0)
+    w = t.split(" ")
+    n = len(w)
+    scores = {
+        lang: sum(1 for x in w if x in markers)
+        for lang, markers in text.LANG_MARKERS.items()
+    }
+    best = max(scores.values())
+    lang = "und" if best <= 0 else min(k for k, v in scores.items() if v == best)
+    avg = len(t) / n
+    sr = sum(1 for x in w if x in text.STOPWORDS) / n
+    dr = len(set(w)) / n
+    quality = min(avg / 8.0, 1.0) * 0.3 + min(sr * 5.0, 1.0) * 0.3 + dr * 0.4
+    rep = py_repetition(t)
+    return (lang, n, avg, sr, dr, quality, rep["max_word_frac"],
+            rep["top2gram_frac"], rep["top3gram_frac"], rep["dup_word_ratio"])
+
+
 # ------------------------------- property: repetition mode-scan vs python
 
 
@@ -753,6 +888,36 @@ def test_repetition_stats_property(spark, batch):
         want = py_repetition(t)
         for key, val in want.items():
             assert got[i][key] == pytest.approx(val), (t, key)
+
+
+_signal_docs = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(
+            st.sampled_from(
+                ["the", "a", "la", "de", "der", "le", "et", "el", "de5", "is",
+                 "", "spam", "\u00fc", "\U0001F600x", "wörd"]
+            ),
+            min_size=1,
+            max_size=10,
+        ).map(" ".join),
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+@settings(max_examples=5, deadline=None)
+@given(batch=_signal_docs)
+def test_doc_signals_property(spark, batch):
+    """Every signal equals the pure-Python reference exactly, with NULLs,
+    empty tokens, marker ties and astral characters in the mix."""
+    df = spark.createDataFrame(
+        list(enumerate(batch)), "doc_id long, text string"
+    )
+    got = {r.doc_id: tuple(r[c] for c in _SIGNALS)
+           for r in text.doc_signals(df).collect()}
+    assert got == {i: py_signals(t) for i, t in enumerate(batch)}
 
 
 def test_minhash_drop_set_equals_pairwise_drop_set(spark, docs):

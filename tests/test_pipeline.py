@@ -88,8 +88,9 @@ def test_language_restriction(spark, docs):
 
 
 def test_pipeline_is_shuffle_free_until_dedup(spark, docs):
-    # the filter+mask prefix must stay one map-only codegen pass: no
-    # Exchange may appear in the pre-dedup plan
+    # the signal kernel, filter and mask prefix is map-only (one Arrow
+    # pass, then JVM expressions): no Exchange may appear in the
+    # pre-dedup plan
     cfg = CleanConfig(near_dedup=False)
     from lakeshack_spark.operators import dedup, text
 
@@ -116,3 +117,28 @@ def test_clean_corpus_releases_intermediate_caches(spark, docs):
     assert n_after - n_before == 1
     out.unpersist()
     assert jsc.getPersistentRDDs().size() == n_before
+
+
+def test_prefilter_signal_pass_runs_after_the_spread(spark, docs, tmp_path):
+    """On a one-file, one-row-group corpus (one scan task) the signal
+    pass must sit ABOVE spread_small_input's round-robin exchange, so it
+    runs on every core. A Filter on column expressions would be pushed
+    below that exchange, into the single scan task; the kernel's mapIn*
+    node is what stops it, and no interpreted lambda may remain below."""
+    import pyarrow.parquet as pq
+
+    from lakeshack_spark.operators.pipeline import _prefilter
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("the spread needs defaultParallelism >= 2")
+    src = str(tmp_path / "documents.parquet")
+    pq.write_table(docs.toArrow(), src)  # one row group
+    one = spark.read.parquet(src)
+    assert one.rdd.getNumPartitions() == 1
+    filtered, _ = _prefilter(one, CleanConfig(), "text", "doc_id")
+    plan = filtered._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    spread = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning" in ln]
+    kernel = [i for i, ln in enumerate(lines) if "MapInArrow" in ln]
+    assert len(spread) == 1 and kernel and kernel[0] < spread[0], plan
+    assert "lambdafunction" not in "\n".join(lines[spread[0]:]), plan
