@@ -17,9 +17,10 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 #: least this share of the live probe rows — the "EXTREMELY hot" regime
 #: where the union form's un-splittable window key loses (measured 3× at
 #: share 1.0) while everywhere below it the union form wins up to 14×
-#: (tools/stress_asof.py). The threshold sits well below 1.0 but above
-#: any share a balanced keyspace can sample (two keys cannot both exceed
-#: 0.5, so the sampled winner at >=0.5 is the true hot key).
+#: (``git show b7e8b89:tools/stress_asof.py``). The threshold sits well
+#: below 1.0 but above any share a balanced keyspace can sample (two keys
+#: cannot both exceed 0.5, so the sampled winner at >=0.5 is the true hot
+#: key).
 AUTO_HOT_SHARE = 0.5
 _AUTO_HEAD_ROWS = 10_000  # per-partition head rows the sampler reads
 
@@ -50,7 +51,8 @@ def asof_join(
     window. The intermediate is |left|+|right| rows — it never touches
     the |left|·(matches/row) join blow-up, so cost tracks the INPUTS, not
     the per-key quote history (measured 10×+ at 10M probes × 1M quotes
-    vs the join form's 505M-row intermediate, tools/stress_asof).
+    vs the join form's 505M-row intermediate,
+    ``git show b7e8b89:tools/stress_asof.py``).
     ``left_key`` is ignored: every probe row is carried through the scan,
     so no unique id is needed. The running frame streams with bounded
     memory (WindowExec running-frame accumulation, spill-backed).
@@ -67,12 +69,12 @@ def asof_join(
     combine parallel, while a window key cannot be split: measured on
     the 10M-probe single-key stress leg, join 10.0 s vs union 30.8 s —
     the exact inverse of the balanced-key decade, union 2.2 s vs join
-    31.7 s; ``tools/stress_asof.py ... hotkey``). Requires ``left_key`` to be
-    a unique left row id (omit it to group by all left columns instead):
-    with a non-unique key the group mixes several left rows, and the
-    any_value(left)/max_by(right) pair could come from DIFFERENT left
-    rows — silently pairing a row with a match that violates its own
-    time bound.
+    31.7 s; ``git show b7e8b89:tools/stress_asof.py``, ``hotkey`` leg).
+    Requires ``left_key`` to be a unique left row id (omit it to group
+    by all left columns instead): with a non-unique key the group mixes
+    several left rows, and the any_value(left)/max_by(right) pair could
+    come from DIFFERENT left rows — silently pairing a row with a match
+    that violates its own time bound.
 
     ``strategy="auto"`` — picks between the two from a PRICED skew bound
     (:func:`resolve_asof_strategy`): one JVM-only sampling job over the

@@ -35,6 +35,10 @@ with ``tools/ab.py <entry>``):
 - :func:`cosine_topk_pandas`: the rank-exact BLAS tier (final-ulp
   inexact, so never behind the hash-gated entries) for query batches
   up to :data:`COSINE_TOPK_MAX_QUERIES`.
+- :func:`pq_encode_arrow`: the BLAS twin of :func:`pq_encode` for bulk
+  encoding with big codebooks — measured 1.5× faster at 256 codes
+  (parity at 64). Final-ulp inexact, so the gated entries keep
+  :func:`pq_encode`.
 """
 
 from __future__ import annotations
@@ -622,10 +626,8 @@ def ivf_assign(
     BIT-IDENTICAL to the expression fold (:func:`_seq_block_dot`) with
     the same tie rule (equal sims → smallest cid) and the same
     NULL/ragged-row outcome (all-NULL sims → smallest cid, pinned by
-    test) — still map-side, no Exchange. ``"expr"`` keeps the
-    interpreted in-plan fold. Unlike :func:`ivf_assign_arrow` (the
-    matmul bulk tier, final-ulp inexact), this twin is safe for the
-    hash-gated entries.
+    test) — still map-side, no Exchange, and safe for the hash-gated
+    entries. ``"expr"`` keeps the interpreted in-plan fold.
     """
     entries = _centroid_entries(centroids, centroid_id_col, centroid_vec_col)
     if impl == "arrow":
@@ -694,19 +696,31 @@ def _assign_cells(vectors: DataFrame, entries, vec_col: str) -> DataFrame:
     return out.withColumn("cell", (-best["neg_cid"]).cast("long")).drop("__vnorm")
 
 
+def _nearest_centroid(X, cmat, cnorm):
+    """Row index into the cid-sorted centroid matrix ``cmat`` of each
+    row of ``X``'s nearest centroid by cosine — the exact per-batch rule
+    of :func:`_assign_cells`: cosines from the sequential fold
+    (:func:`_seq_norm`, :func:`_seq_block_dot` — the interpreted
+    lambda's doubles), NaN sims ranked GREATEST (Spark struct
+    ordering), and argmax's first maximum = smallest cid on ties,
+    matching max-by-(sim, neg_cid). Zero-norm rows or centroids raise,
+    as the expression path does under ANSI double division."""
+    import numpy as np
+
+    vnorm = _seq_norm(X)
+    _require_nonzero(vnorm, "input")
+    _require_nonzero(cnorm, "centroid")
+    sims = _seq_block_dot(X, cmat) / (vnorm[:, None] * cnorm[None, :])
+    return np.argmax(np.where(np.isnan(sims), np.inf, sims), axis=1)
+
+
 def _assign_cells_arrow(vectors: DataFrame, entries, vec_col: str) -> DataFrame:
-    """Bit-exact Arrow twin of :func:`_assign_cells`: per-centroid cosine
-    via the sequential column fold (:func:`_seq_block_dot` — identical
-    doubles to the interpreted ``transform`` lambda), argmax with the
-    same lexicographic (sim, −cid) rule: NaN sims rank GREATEST (Spark
-    struct ordering), ties break to the smallest cid (iterating the
-    cid-sorted entries with a strict > keeps the first winner — same
-    winner as max-by-neg_cid). Rows whose vector is NULL or
-    length-mismatched get all-NULL sims in the expression path, whose
-    array_max then ties every struct and picks the smallest cid — the
-    twin assigns them ``min(cid)`` directly (pinned by parity test).
-    Zero-norm vectors raise, as the expression path does under ANSI
-    double division. Map-side: one MapInPandas node, no Exchange."""
+    """Bit-exact Arrow twin of :func:`_assign_cells`: each batch's
+    valid rows take :func:`_nearest_centroid`'s cell. Rows whose vector
+    is NULL or length-mismatched get all-NULL sims in the expression
+    path, whose array_max then ties every struct and picks the smallest
+    cid — the twin assigns them ``min(cid)`` directly (pinned by parity
+    test). Map-side: one MapInPandas node, no Exchange."""
     import numpy as np
 
     cids = [cid for cid, _cv, _cn in entries]
@@ -727,17 +741,7 @@ def _assign_cells_arrow(vectors: DataFrame, entries, vec_col: str) -> DataFrame:
             valid, X, _d = _split_valid_rows(pdf[vec_col], d)
             cells = np.full(len(pdf), cids[0] if cids else 0, dtype=np.int64)
             if valid.any() and len(cids):
-                vnorm = _seq_norm(X)
-                _require_nonzero(vnorm, "input")
-                _require_nonzero(cnorm, "centroid")
-                sims = _seq_block_dot(X, cmat) / (
-                    vnorm[:, None] * cnorm[None, :]
-                )
-                # NaN sims are GREATEST in the struct ordering; argmax
-                # over the inf-mapped key picks the FIRST max = smallest
-                # cid on ties, matching max-by-(sim, neg_cid)
-                key = np.where(np.isnan(sims), np.inf, sims)
-                cells[valid] = cid_arr[np.argmax(key, axis=1)]
+                cells[valid] = cid_arr[_nearest_centroid(X, cmat, cnorm)]
             pdf = pdf.copy()
             pdf["cell"] = cells
             yield pdf
@@ -1824,7 +1828,8 @@ def pq_search(
     squared-L2 re-rank reads the full fp32 vectors for just those
     shortlist rows — the two-tier scan that makes recall@k equal
     recall@shortlist (the quantizer only has to *route*, the re-rank
-    orders; ``tools/stress_pq.py`` measures exactly that routing rate).
+    orders; ``git show b7e8b89:tools/stress_pq.py`` measured exactly
+    that routing rate).
 
     Scale shape: the corpus-wide scan touches m ints per row; full
     vectors cross a join only for shortlist × #queries rows (AQE
@@ -1907,7 +1912,6 @@ def ivfpq_encode(
     impl: str = "arrow",
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "centroid",
-    assign_impl: str = "expr",
 ) -> DataFrame:
     """IVF-PQ encoding (Jégou et al. 2011's IVFADC): coarse cell id +
     PQ codes of the RESIDUAL. ``codebooks`` should be trained on
@@ -1917,43 +1921,27 @@ def ivfpq_encode(
     now measures the residual quantization error, strictly tighter than
     raw-vector PQ wherever the corpus clusters (unit-pinned).
 
-    ``impl="arrow"`` (default) computes the residual ONCE per row JVM-
-    side and ships it over the Arrow boundary to the NumPy encoder —
-    this is not just the usual BLAS win: in ``impl="expr"`` the
-    interpreted scoring lambdas get the residual expression (itself the
-    64-centroid assignment argmax + a map lookup + a zip_with)
-    SUBSTITUTED INTO every one of m × n_codes lambda bodies by project
-    collapsing, re-evaluating assignment per code (measured ~300 s for
-    50k × 64 codes vs ~5 s through the Arrow boundary — the CLAUDE.md
-    no-CSE trap at composition scale). The arrow path runs the EXACT
-    JVM cell assignment once per row (bit-equal to :func:`ivf_assign`'s
-    gated rule), then subtracts the centroid and encodes in NumPy —
-    subtraction of identical doubles is one correctly-rounded IEEE op,
-    so residuals are bit-equal to the zip_with form; codes are
-    parity-pinned. The expr path stays available as the deterministic
-    gated-twin semantics.
-
-    ``assign_impl="arrow"`` additionally swaps the cell assignment to
-    :func:`ivf_assign_arrow` (measured 34 s → 1 s at 50k × 64 cells —
-    the assignment is the dominant encode cost once codes go through
-    NumPy); near-tie cells may differ from the gated expression rule by
-    ulp rounding, so the default stays "expr"."""
+    ``impl="arrow"`` (default) is ONE ``mapInPandas`` pass: per batch it
+    assigns cells by :func:`ivf_assign`'s exact rule
+    (:func:`_nearest_centroid` — the same doubles, NaN ordering and tie
+    rule as the gated expression argmax), subtracts the cell centroid
+    (one correctly-rounded IEEE op per element, so residuals equal the
+    ``zip_with`` form) and encodes with :func:`_pq_numpy_apply`. The
+    vectors cross the Arrow boundary once. That boundary is also what
+    keeps the residual out of the PQ scoring lambdas: in
+    ``impl="expr"`` project collapsing SUBSTITUTES the residual
+    expression (the centroid argmax + a map lookup + a zip_with) into
+    every one of m × n_codes lambda bodies, re-evaluating assignment
+    per code (measured ~300 s for 50k × 64 codes vs ~5 s through an
+    Arrow boundary — the CLAUDE.md no-CSE trap at composition scale).
+    The expr path stays as the oracle-gated twin. NULL or ragged
+    vectors have no residual and raise ``ValueError``; zero-norm
+    vectors or centroids raise as :func:`ivf_assign` does."""
     if impl not in ("arrow", "expr"):
         raise ValueError(
             f"ivfpq_encode: impl must be 'arrow' or 'expr', got {impl!r}"
         )
-    if assign_impl not in ("arrow", "expr"):
-        raise ValueError(
-            "ivfpq_encode: assign_impl must be 'arrow' or 'expr', "
-            f"got {assign_impl!r}"
-        )
     if impl == "expr":
-        if assign_impl == "arrow":
-            raise ValueError(
-                "ivfpq_encode: assign_impl='arrow' only applies to "
-                "impl='arrow' (the expr path computes assignment inside "
-                "its residual expression)"
-            )
         with_res = ivf_residuals(
             vectors, centroids, id_col, vec_col,
             centroid_id_col, centroid_vec_col,
@@ -1961,48 +1949,11 @@ def ivfpq_encode(
         return pq_encode(with_res, codebooks, vec_col="__res").drop("__res")
 
     entries = _centroid_entries(centroids, centroid_id_col, centroid_vec_col)
+    if not entries:
+        raise ValueError("ivfpq_encode: the centroid set is empty")
     m = len(codebooks)
     ds = len(codebooks[0][0][1])
-
-    if assign_impl == "expr":
-        assigned = ivf_assign(
-            vectors, centroids, id_col, vec_col,
-            centroid_id_col, centroid_vec_col,
-        )
-        fields = list(assigned.schema.fields) + [
-            T.StructField(f"code_{j}", T.IntegerType()) for j in range(m)
-        ] + [T.StructField("recon_sqerr", T.DoubleType())]
-
-        def encode(batches):
-            import numpy as np
-
-            cid_to_idx = {
-                cid: i for i, (cid, _cv, _cn) in enumerate(entries)
-            }
-            cmat = np.array(
-                [cv for _cid, cv, _cn in entries], dtype=np.float64
-            )
-            books_np = _pq_numpy_books(codebooks)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                idx = pdf["cell"].map(cid_to_idx).to_numpy()
-                R = X - cmat[idx]
-                yield _pq_numpy_apply(pdf, R, books_np, ds)
-
-        return assigned.mapInPandas(encode, T.StructType(fields))
-
-    # assign_impl == "arrow": ONE fused mapInPandas — assignment,
-    # residual, and PQ codes in a single Python pass, so the float
-    # vectors cross the Arrow boundary once instead of twice (the
-    # chained ivf_assign_arrow → encode form re-serialized every row)
-    zero = [cid for cid, _cv, cn in entries if cn == 0.0]
-    if zero:
-        raise ValueError(
-            f"ivfpq_encode: zero-norm centroid ids {zero} — cosine "
-            "assignment is undefined against a zero centroid"
-        )
+    d = len(entries[0][1])
     base = vectors.drop("cell") if "cell" in vectors.columns else vectors
     fields = list(base.schema.fields) + [
         T.StructField("cell", T.LongType())
@@ -2010,7 +1961,7 @@ def ivfpq_encode(
         T.StructField(f"code_{j}", T.IntegerType()) for j in range(m)
     ] + [T.StructField("recon_sqerr", T.DoubleType())]
 
-    def encode_fused(batches):
+    def encode(batches):
         import numpy as np
 
         cids = np.array([cid for cid, _cv, _cn in entries], dtype=np.int64)
@@ -2020,17 +1971,18 @@ def ivfpq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vnorm = np.sqrt((X * X).sum(axis=1))
-            denom = np.outer(vnorm, cnorm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, (X @ cmat.T) / denom, 0.0)
-            best = sims.argmax(axis=1)  # ivf_assign_arrow's exact rule
+            valid, X, _d = _split_valid_rows(pdf[vec_col], d)
+            if not valid.all():
+                raise ValueError(
+                    f"ivfpq_encode: {int((~valid).sum())} NULL or ragged "
+                    f"{vec_col!r} vector(s) (centroids have {d} dims) — "
+                    "a residual needs a full-length vector"
+                )
+            best = _nearest_centroid(X, cmat, cnorm)
             pdf["cell"] = cids[best]
-            R = X - cmat[best]
-            yield _pq_numpy_apply(pdf, R, books_np, ds)
+            yield _pq_numpy_apply(pdf, X - cmat[best], books_np, ds)
 
-    return base.mapInPandas(encode_fused, T.StructType(fields))
+    return base.mapInPandas(encode, T.StructType(fields))
 
 
 def ivfpq_search(
@@ -2147,71 +2099,6 @@ def ivfpq_search(
     return out.select(
         "query_id", "neighbor_id", (-F.col("cosine")).alias("adc_dist"), "rank"
     )
-
-
-def ivf_assign_arrow(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "centroid",
-) -> DataFrame:
-    """Arrow-batched NumPy twin of :func:`ivf_assign` — one BLAS matmul
-    per batch instead of C interpreted dot folds per row (the
-    assignment was the measured 38-of-46 s of a 50k × 64-cell IVF-PQ
-    encode). Same cosine argmax and the same tie rule (``argmax`` on
-    the (sim, −cid)-lexicographic key via stable sort is replaced by:
-    argmax over sims with first-index tie break on the cid-sorted
-    centroid order = smallest cid). Cosines differ from the sequential
-    fold only in final-ulp rounding, so near-tie assignments can differ
-    from the gated expression path by one adjacent cell — acceptable
-    for the production bulk-encode tier, NOT for the hash-gated
-    entries (those keep :func:`ivf_assign`); parity is pinned by a
-    near-tie-refereed unit test. Zero-norm INPUT vectors assign to the
-    smallest cid (sim treated as 0 against every centroid); the
-    expression path yields NaN cosines there, so zero vectors are the
-    one documented semantic delta. Zero-norm CENTROIDS are rejected
-    outright — the expression path's NaN-propagating array_max would
-    assign EVERY vector to such a centroid (a silent wholesale
-    divergence, caught in review), so neither path should be fed one."""
-    import numpy as np
-
-    entries = _centroid_entries(centroids, centroid_id_col, centroid_vec_col)
-    zero = [cid for cid, _cv, cn in entries if cn == 0.0]
-    if zero:
-        raise ValueError(
-            f"ivf_assign_arrow: zero-norm centroid ids {zero} — cosine "
-            "assignment is undefined against a zero centroid"
-        )
-    cids = np.array([cid for cid, _cv, _cn in entries], dtype=np.int64)
-    cmat = np.array([cv for _cid, cv, _cn in entries], dtype=np.float64)
-    cnorm = np.array([cn for _cid, _cv, cn in entries], dtype=np.float64)
-
-    if "cell" in vectors.columns:
-        # re-assignment (e.g. after a centroid refresh): the twin's
-        # withColumn REPLACES the column; here the old one is dropped so
-        # the appended field keeps schema and pandas column order aligned
-        vectors = vectors.drop("cell")
-    fields = list(vectors.schema.fields) + [
-        T.StructField("cell", T.LongType())
-    ]
-    out_schema = T.StructType(fields)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vnorm = np.sqrt((X * X).sum(axis=1))
-            denom = np.outer(vnorm, cnorm)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom > 0, (X @ cmat.T) / denom, 0.0)
-            best = sims.argmax(axis=1)  # ties -> first = smallest cid
-            pdf["cell"] = cids[best]
-            yield pdf
-
-    return vectors.mapInPandas(assign, out_schema)
 
 
 # ------------------------------------------------- persisted IVF index

@@ -1148,6 +1148,33 @@ def test_minhash_drop_set_exact_duplicates(spark):
     assert got == {100, 101, 102}
 
 
+def test_minhash_drop_set_planted_cluster_and_lookalikes(spark):
+    """A planted cluster of docs with one token set in rotated orders
+    (k=1 Jaccard 1.0) drops every member but the earliest. Unique docs
+    stay, and so do look-alikes sharing 8 of the cluster's 12 tokens:
+    Jaccard 0.5 collides in some bands but never verifies at 0.9."""
+    template = [f"tok{i}" for i in range(12)]
+    m = 20
+    rows = [
+        (i, " ".join(template[(i + j) % 12] for j in range(12)))
+        for i in range(m)
+    ]
+    rows += [
+        (m + i, " ".join(f"u{j}_{i}" for j in range(12))) for i in range(20)
+    ]
+    rows += [
+        (1000 + i, " ".join(template[:8] + [f"la{j}_{i}" for j in range(4)]))
+        for i in range(10)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    drops = dedup.minhash_drop_set(
+        df, num_hashes=32, bands=8, k=1, threshold=0.9
+    )
+    got = {r.doc_id for r in drops.collect()}
+    drops.unpersist()
+    assert got == set(range(1, m))
+
+
 def test_minhash_drop_set_string_ids(spark):
     """Non-long id columns route through the expression banding twin
     and the walk: the drop set keeps the input's id type, and a
@@ -1881,6 +1908,28 @@ def test_repeated_passages_shared_span_and_coverage(spark):
     assert out[2].n_dup_grams == 1 and out[2].dup_tokens == 8
     assert out[3].n_dup_grams == 0 and out[3].dup_tokens == 0
     assert out[3].dup_frac == 0.0
+
+
+def test_repeated_passages_hot_quote_closed_form(spark):
+    """One quote shared by every 4th doc (a hot gram posting) over bodies
+    of per-doc-disjoint vocabulary: each quote doc's covered span is
+    exactly the quote, and every other doc stays clean."""
+    from lakeshack_spark.operators import text
+
+    n, body, every = 40, 12, 4
+    quote = " ".join(f"qt{j}" for j in range(10))
+    rows = []
+    for i in range(n):
+        txt = " ".join(f"d{j}_{i}" for j in range(body))
+        rows.append((i, f"{txt} {quote}" if i % every == 0 else txt))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: (r.n_tokens, r.dup_tokens)
+        for r in text.repeated_passage_stats(df, k=8).collect()
+    }
+    assert got == {
+        i: (body + 10, 10) if i % every == 0 else (body, 0) for i in range(n)
+    }
 
 
 def test_repeated_passages_overlapping_grams_count_tokens_once(spark):
@@ -2660,36 +2709,6 @@ def test_vocab_build_rank_rule_and_encode(spark):
     assert out[3].n_tokens == 1 and out[3].n_oov == 1
 
 
-def test_ivf_assign_arrow_parity(spark):
-    """Arrow assignment agrees with the gated expression rule; any
-    mismatch must be a provable cosine near-tie."""
-    import math
-
-    from lakeshack_spark.operators import similarity as sim
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = sim.sample_centroids(emb, 8)
-    cents = spark.createDataFrame(cents.collect(), cents.schema)
-    a = {r.vec_id: r.cell for r in
-         sim.ivf_assign(emb, cents).select("vec_id", "cell").collect()}
-    b = {r.vec_id: r.cell for r in
-         sim.ivf_assign_arrow(emb, cents).select("vec_id", "cell").collect()}
-    assert set(a) == set(b)
-    entries = {cid: (cv, cn) for cid, cv, cn in sim._centroid_entries(cents)}
-    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in emb.collect()}
-
-    def cos(v, cid):
-        cv, cn = entries[cid]
-        dot = sum(x * y for x, y in zip(v, cv))
-        vn = math.sqrt(sum(x * x for x in v))
-        return dot / (vn * cn) if vn > 0 and cn > 0 else 0.0
-
-    for vid in a:
-        if a[vid] != b[vid]:
-            ca, cb = cos(vecs[vid], a[vid]), cos(vecs[vid], b[vid])
-            assert abs(ca - cb) <= 1e-9, (vid, a[vid], b[vid])
-
-
 def test_ivfpq_encode_rejects_bad_impls(spark):
     from lakeshack_spark.operators import similarity as sim
 
@@ -2700,8 +2719,6 @@ def test_ivfpq_encode_rejects_bad_impls(spark):
                          vec_col="__res")
     with pytest.raises(ValueError, match="impl"):
         sim.ivfpq_encode(emb, cents, books, impl="Arrow")
-    with pytest.raises(ValueError, match="assign_impl"):
-        sim.ivfpq_encode(emb, cents, books, assign_impl="fast")
 
 
 # ----------------------------------------------------------- table diff
@@ -2917,9 +2934,9 @@ def test_merge_upsert_null_safe_keys(spark):
     assert len(rows) == 2 and got == {None: "A", 1: "x"}
 
 
-def test_ivf_assign_arrow_reassign_and_zero_centroid(spark):
-    """Re-assigning an already-assigned frame replaces the cell column
-    (the drop-in-twin contract); zero-norm centroids are rejected."""
+def test_ivf_assign_reassign_and_zero_centroid(spark):
+    """Re-assigning an already-assigned frame replaces the cell column;
+    a zero-norm centroid raises (cosine against it is undefined)."""
     from pyspark.sql import functions as F
 
     from lakeshack_spark.operators import similarity as sim
@@ -2927,8 +2944,8 @@ def test_ivf_assign_arrow_reassign_and_zero_centroid(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = sim.sample_centroids(emb, 4)
     cents = spark.createDataFrame(cents.collect(), cents.schema)
-    once = sim.ivf_assign_arrow(emb, cents)
-    twice = sim.ivf_assign_arrow(once, cents)
+    once = sim.ivf_assign(emb, cents)
+    twice = sim.ivf_assign(once, cents)
     assert twice.columns.count("cell") == 1
     a = {r.vec_id: r.cell for r in once.select("vec_id", "cell").collect()}
     b = {r.vec_id: r.cell for r in twice.select("vec_id", "cell").collect()}
@@ -2940,37 +2957,8 @@ def test_ivf_assign_arrow_reassign_and_zero_centroid(spark):
             F.expr("transform(centroid, x -> CAST(0.0 AS DOUBLE))"),
         ).otherwise(F.col("centroid")),
     )
-    with pytest.raises(ValueError, match="zero-norm"):
-        sim.ivf_assign_arrow(emb, zero)
-
-
-def test_ivfpq_encode_fused_equals_chained(spark):
-    """The fused single-pass arrow encode equals the chained
-    assignment + encode form (identical numpy math)."""
-    from lakeshack_spark.operators import similarity as sim
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = sim.sample_centroids(emb, 8)
-    cents = spark.createDataFrame(cents.collect(), cents.schema)
-    res = sim.ivf_residuals(emb, cents)
-    books = sim.pq_train(res, m=4, n_codes=8, sample_n=200, iters=3,
-                         vec_col="__res")
-    fused = {r.vec_id: r for r in
-             sim.ivfpq_encode(emb, cents, books,
-                              assign_impl="arrow").collect()}
-    chained_assigned = sim.ivf_assign_arrow(emb, cents)
-    # chained form: numpy residual+codes over the pre-assigned frame
-    exprd = {r.vec_id: r for r in
-             sim.ivfpq_encode(emb, cents, books,
-                              assign_impl="expr").collect()}
-    assert set(fused) == set(exprd)
-    for vid in fused:
-        assert fused[vid].cell == exprd[vid].cell, vid  # no near-ties here
-        for j in range(4):
-            assert fused[vid][f"code_{j}"] == exprd[vid][f"code_{j}"], (vid, j)
-    with pytest.raises(ValueError, match="assign_impl"):
-        sim.ivfpq_encode(emb, cents, books, impl="expr",
-                         assign_impl="arrow")
+    with pytest.raises(Exception, match="zero-norm centroid"):
+        sim.ivf_assign(emb, zero).collect()
 
 
 def test_ivf_index_probe_equals_in_query_ivf(spark, tmp_path):
@@ -3451,6 +3439,81 @@ def test_ivf_assign_arrow_exact_twin_and_ties(spark):
     assert e == a
 
 
+def test_ivfpq_encode_arrow_is_one_map_in_pandas(spark):
+    """Assignment, residual and PQ codes run in ONE Arrow pass: the
+    vectors cross the Python boundary once."""
+    emb = load_table(spark, SF, "embeddings")
+    cents = similarity.sample_centroids(emb, 4)
+    res = similarity.ivf_residuals(emb, cents)
+    books = similarity.pq_train(res, m=4, n_codes=4, sample_n=64, iters=2,
+                                vec_col="__res")
+    enc = similarity.ivfpq_encode(emb, cents, books, impl="arrow")
+    plan = enc._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def test_ivfpq_encode_arrow_cells_exact_and_edges(spark):
+    """The one-pass encode assigns exactly ivf_assign's cells and equals
+    the residual frame's PQ encode in every column (sf0.001 and the
+    edge frame's clean rows, equidistant tie included). NULL or ragged
+    vectors raise naming the cause; zero-norm inputs and centroids keep
+    the ANSI-twin zero-norm error."""
+    emb = load_table(spark, SF, "embeddings")
+    cents = similarity.sample_centroids(emb, 8)
+    cents = spark.createDataFrame(cents.collect(), cents.schema)
+    res = similarity.ivf_residuals(emb, cents)
+    books = similarity.pq_train(res, m=4, n_codes=8, sample_n=200, iters=3,
+                                vec_col="__res")
+    cols = ["vec_id", "cell"] + [f"code_{j}" for j in range(4)] + [
+        "recon_sqerr"
+    ]
+    got = sorted(
+        map(tuple, similarity.ivfpq_encode(emb, cents, books)
+            .select(cols).collect())
+    )
+    want = sorted(
+        map(tuple, similarity.pq_encode_arrow(res, books, vec_col="__res")
+            .select(cols).collect())
+    )
+    assert got == want and len(got) == emb.count()
+    cells = sorted(
+        (r.vec_id, r.cell)
+        for r in similarity.ivf_assign(emb, cents).select(
+            "vec_id", "cell"
+        ).collect()
+    )
+    assert [g[:2] for g in got] == cells
+
+    df, cents2 = _edge_vec_frames(spark)
+    books3 = [[(0, [0.0, 0.0, 0.0], 0.0), (1, [0.0, 0.5, 0.0], 0.25)]]
+    clean = df.filter(F.col("vec_id") < 3)
+    enc = {
+        r.vec_id: (r.cell, r.code_0, r.recon_sqerr)
+        for r in similarity.ivfpq_encode(clean, cents2, books3).collect()
+    }
+    assert {v: c for v, (c, _k, _e) in enc.items()} == {
+        r.vec_id: r.cell
+        for r in similarity.ivf_assign(clean, cents2, impl="expr").collect()
+    } == {0: 0, 1: 1, 2: 0}
+    # residuals 0, 0 and (0, 1, 0): the last encodes to (0, 0.5, 0)
+    assert enc == {0: (0, 0, 0.0), 1: (1, 0, 0.0), 2: (0, 1, 0.25)}
+    with pytest.raises(Exception, match="NULL or ragged"):
+        similarity.ivfpq_encode(df, cents2, books3).collect()
+
+    schema = "vec_id long, embedding array<float>"
+    zero_vec = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], schema)
+    with pytest.raises(Exception, match="zero-norm input"):
+        similarity.ivfpq_encode(zero_vec, cents2, books3).collect()
+    zero_cent = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+        "centroid_id long, centroid array<float>",
+    )
+    with pytest.raises(Exception, match="zero-norm centroid"):
+        similarity.ivfpq_encode(clean, zero_cent, books3).collect()
+
+
 def test_ivf_topk_arrow_is_bit_exact_twin(spark):
     emb = load_table(spark, SF, "embeddings")
     q3 = emb.filter(F.col("vec_id") < 3)
@@ -3492,6 +3555,64 @@ def test_cosine_arrow_zero_norm_raises_like_ansi(spark):
     q = df.filter(F.col("vec_id") == 0)
     with pytest.raises(Exception, match="zero-norm|DIVIDE_BY_ZERO"):
         similarity.cosine_topk(df, q, k=2, impl="arrow").collect()
+
+
+def test_cosine_zero_norm_self_pair_expr_scores_arrow_raises(spark):
+    """Intended divergence, pinned: a zero-norm candidate whose only
+    pairing is its own self-pair. The expression path drops self-pairs
+    BEFORE dividing, so it never divides by the zero norm and scores
+    the remaining pair; the Arrow scorer checks every candidate norm in
+    the batch before dropping self-pairs, so it raises. A zero vector
+    has no cosine, and failing on one in the input is the safer
+    contract."""
+    schema = "vec_id long, embedding array<float>"
+    vecs = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [0.0, 1.0])], schema
+    )
+    q = spark.createDataFrame([(0, [1.0, 1.0])], schema)
+    e = [
+        (r.query_id, r.neighbor_id, r.rank)
+        for r in similarity.cosine_topk(vecs, q, k=2, impl="expr").collect()
+    ]
+    assert e == [(0, 1, 1)]
+    with pytest.raises(Exception, match="zero-norm candidate"):
+        similarity.cosine_topk(vecs, q, k=2, impl="arrow").collect()
+
+
+def test_topk_two_stage_equals_single_window(spark):
+    """ONE query over many candidates — the regime where a single
+    per-query window ranks on one task. The two-stage top-k returns the
+    single-window result row for row, and its stage 1 spreads the
+    ranking over more than one (query, partition) key."""
+    from pyspark.sql import Window
+
+    emb = load_table(spark, SF, "embeddings").repartition(4)
+    q1 = emb.filter(F.col("vec_id") == 0)
+    two = similarity.cosine_topk(emb, q1, k=10, impl="expr")
+    scored = (
+        emb.select(F.col("vec_id").alias("neighbor_id"),
+                   F.col("embedding").alias("__cv"))
+        .crossJoin(F.broadcast(q1.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("__qv"))))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id",
+                similarity.cosine_col(F.col("__qv"), F.col("__cv"))
+                .alias("cosine"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    one = scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= 10
+    )
+    assert sorted(map(tuple, two.collect())) == sorted(
+        map(tuple, one.collect())
+    )
+    keys = scored.select(
+        "query_id", F.spark_partition_id().alias("p")
+    ).distinct().count()
+    assert keys > 1
 
 
 def test_cosine_topk_arrow_plan_keeps_two_stage_window(spark):

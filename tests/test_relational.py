@@ -535,15 +535,11 @@ def test_scd2_merge_branches(spark):
 
 
 def test_asof_planted_grid_construction_closed_form(spark):
-    """The stress_asof construction at unit scale: every left row's
-    backward match is the closed-form grid slot (tools/stress_asof)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    """The planted as-of grid (tests/planted.py) at unit scale: every
+    left row's backward match is the closed-form grid slot."""
     from pyspark.sql import functions as F
 
-    from tools.stress_asof import STEP, VAL_MULT, build_sides
+    from tests.planted import STEP, VAL_MULT, build_sides
 
     left, right = build_sides(spark, 500)
     out = asof_join(
@@ -561,16 +557,13 @@ def test_asof_planted_grid_construction_closed_form(spark):
 
 
 def test_sessionize_planted_construction_closed_form(spark):
-    """The stress_sessionize construction at unit scale: session breaks
-    exactly at block boundaries, session_id == 1 + (j div BLOCK)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    """The planted session blocks (tests/planted.py) at unit scale:
+    session breaks exactly at block boundaries, session_id == 1 +
+    (j div BLOCK)."""
     from pyspark.sql import functions as F
 
     from lakeshack_spark.operators.relational import sessionize
-    from tools.stress_sessionize import BLOCK, GAP_THRESHOLD, build_events
+    from tests.planted import BLOCK, GAP_THRESHOLD, build_events
 
     ev = build_events(spark, 3 * 1000)  # 3 full users
     out = sessionize(ev, user_col="user_id", time_col="ts",
