@@ -9,21 +9,26 @@ an interval-overlap pruning query (lakeshack/metastore.py:414-481).
 
 Spark-first design:
 
-- The stats table is itself Parquet, loaded as a DataFrame; pruning is a
-  filter + broadcast range-join on that DataFrame — no RDBMS round-trips
-  (the reference issues one SQL query *per cluster value*,
+- One zone-map classifier, written once as Arrow/numpy code over a stats
+  batch (:func:`_classify`, :func:`_value_spans`), serves pruning, the
+  I/O summary and metadata-only aggregation — no RDBMS round-trips (the
+  reference issues one SQL query *per cluster value*,
   lakeshack/metastore.py:474-476).
+- It runs at one of two sites: on the driver over the backend's Arrow
+  read (zero Spark jobs) for a local store up to
+  ``DRIVER_PRUNE_MAX_FILES`` rows, or per batch inside
+  ``stats_df().mapInArrow`` for a remote or larger store. Each batch
+  yields a partial and one merge folds them, so both sites answer
+  identically by construction.
 - Ingest fans footer reads out across executors with ``mapPartitions`` +
   pyarrow: metadata-only I/O, so a 100 TB dataset with millions of files
   costs millions of ~10 KB footer reads spread over the cluster, never a
   data read.
-- At 1000-executor scale the stats table for 10M files is ~GBs — still a
-  single broadcastable DataFrame; pruning stays a sub-second driver-side
-  plan step.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 from datetime import date, datetime, timezone
@@ -304,6 +309,330 @@ def nullness_keeps(op: str, nulls: Any, num_rows: Any) -> bool:
     if op == "is_not_null":
         return num_rows is None or nulls < num_rows
     return nulls > 0  # "is_null"
+
+
+# ------------------------------------------------------------- classifier
+#
+# The zone-map truth table, written once as Arrow/numpy code over a stats
+# batch (the vectorized form of interval_keeps / nullness_keeps plus the
+# interior rule). FileStatsMetastore._classify_store runs it at two sites:
+# on the driver over the backend's Arrow read, or per batch inside
+# ``stats_df().mapInArrow``. Each pass emits partial rows in one layout and
+# the driver folds them with one merge, whichever site produced them.
+
+
+def _checked_clauses(
+    clauses: Sequence[tuple[str, str, Any]],
+) -> list[tuple[str, str, Any]]:
+    """Clause values normalized like footer stats (tz-aware → naive UTC);
+    an unknown operator raises before the store is read."""
+    out = [(c, op, _to_py_stat(v)) for c, op, v in clauses]
+    for _col, op, _value in out:
+        if op not in ALL_CLAUSE_OPS:
+            raise ValueError(
+                f"unsupported operator {op!r}; use one of {ALL_CLAUSE_OPS}"
+            )
+    return out
+
+
+def _true(mask) -> Any:
+    """An Arrow boolean column as a numpy mask, NULL read as False."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    filled = pc.fill_null(mask, False)
+    return np.asarray(filled.to_numpy(zero_copy_only=False), dtype=bool)
+
+
+def _stat(table, name: str):
+    """Stats column ``name``, all-NULL (unknown) when the batch lacks it:
+    a store that predates null counts or byte sizes, or a synthetic
+    table."""
+    import pyarrow as pa
+
+    if name in table.column_names:
+        return table.column(name)
+    return pa.chunked_array([pa.nulls(table.num_rows, pa.int64())])
+
+
+def _dedup_filepaths(table):
+    """First stats row per filepath, as ``stats_df()`` keeps one: two
+    concurrent updates can append a file's (identical) row twice."""
+    import numpy as np
+
+    codes = table.column("filepath").combine_chunks().dictionary_encode()
+    if len(codes.dictionary) == table.num_rows:
+        return table
+    _paths, first = np.unique(codes.indices.to_numpy(), return_index=True)
+    return table.take(np.sort(first))
+
+
+def _clause_masks(table, col: str, op: str, value: Any):
+    """The truth table for one clause over a stats batch
+    (lakeshack/metastore.py:453-467, plus nullness), as two numpy masks:
+
+    - ``survive`` — some row may match: the prune rule. NULL stats or an
+      unknown null count keep the file (:func:`interval_keeps`,
+      :func:`nullness_keeps`): pruning is best-effort and the scan
+      re-applies the exact predicate.
+    - ``full`` — every row provably matches: the interior rule. The
+      interval lies wholly inside the clause AND the column is provably
+      NULL-free (a NULL fails every comparison). Unknown stats are never
+      interior: the conservative direction is the opposite of pruning's.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    nulls = _stat(table, f"{col}_nulls")
+    if op in NULLNESS_OPS:
+        num_rows = table.column("num_rows")
+        if op == "is_not_null":
+            may, full = pc.less(nulls, num_rows), pc.equal(nulls, 0)
+        else:
+            may, full = pc.greater(nulls, 0), pc.equal(nulls, num_rows)
+        return _true(may) | _true(pc.is_null(nulls)), _true(full)
+    lo, hi = table.column(f"{col}_min"), table.column(f"{col}_max")
+    # pa.scalar WITHOUT a forced type: casting 10.5 to an int64 stat column
+    # would TRUNCATE to 10 and silently over-prune (x_min=10 under
+    # `< 10.5` must be kept); Arrow's kernels promote mixed numeric
+    # operands instead.
+    v = pa.scalar(value)
+    if op in (">=", ">"):
+        cmp = pc.greater_equal if op == ">=" else pc.greater
+        may, full = cmp(hi, v), cmp(lo, v)
+    elif op in ("<=", "<"):
+        cmp = pc.less_equal if op == "<=" else pc.less
+        may, full = cmp(lo, v), cmp(hi, v)
+    else:  # "=", "=="
+        may = pc.and_(pc.less_equal(lo, v), pc.greater_equal(hi, v))
+        full = pc.and_(pc.equal(lo, v), pc.equal(hi, v))
+    unknown = _true(pc.or_(pc.is_null(lo), pc.is_null(hi)))
+    return _true(may) | unknown, _true(full) & _true(pc.equal(nulls, 0))
+
+
+def _classify(table, clauses, tracked: Sequence[str]):
+    """``(survive, full)`` for every file of a stats batch under the
+    AND-ed clauses. A clause on an untracked column proves nothing: every
+    file survives it (the scan filters exactly) and none is interior."""
+    import numpy as np
+
+    survive = np.ones(table.num_rows, dtype=bool)
+    full = survive.copy()
+    for col, op, value in clauses:
+        if col not in tracked:
+            full[:] = False
+            continue
+        may, whole = _clause_masks(table, col, op, value)
+        survive &= may
+        full &= whole
+    return survive, full
+
+
+def _search_keys(values: Sequence[Any]):
+    """The sorted IN-list as the numpy array :func:`_value_spans`
+    searches: dates and datetimes as datetime64 (the dtype Arrow's
+    temporal stats convert to), everything else as numpy infers."""
+    import numpy as np
+
+    return np.array(
+        [np.datetime64(v) if isinstance(v, (datetime, date)) else v for v in values]
+    )
+
+
+def _value_spans(table, cluster: str, keys):
+    """Per file, the slice ``[first, end)`` of the sorted IN-list ``keys``
+    that its cluster-column ``[min, max]`` contains: two
+    ``searchsorted`` calls over the non-NULL rows, one rule for every
+    cluster type. NULL stats keep every value."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lo, hi = table.column(f"{cluster}_min"), table.column(f"{cluster}_max")
+    known = ~_true(pc.or_(pc.is_null(lo), pc.is_null(hi)))
+    first = np.zeros(table.num_rows, dtype=np.int64)
+    end = np.full(table.num_rows, len(keys), dtype=np.int64)
+    if len(keys):
+        rows = pa.array(known)
+        first[known] = np.searchsorted(keys, lo.filter(rows).to_numpy(), "left")
+        end[known] = np.searchsorted(keys, hi.filter(rows).to_numpy(), "right")
+    return first, end
+
+
+#: Partial layout of a prune or summary pass: one row per candidate file
+#: (its IN-list slice, footer row count and size) and one tally row per
+#: batch (NULL filepath) carrying the batch's file count.
+_FILE_ROWS = T.StructType(
+    [
+        T.StructField("filepath", T.StringType()),
+        *[
+            T.StructField(name, T.LongType())
+            for name in ("first", "end", "num_rows", "file_bytes", "n_files")
+        ],
+    ]
+)
+
+
+def _file_rows(table, mask, first, end):
+    """The ``_FILE_ROWS`` partial of a stats batch for the files under
+    ``mask``."""
+    import numpy as np
+    import pyarrow as pa
+
+    idx = pa.array(np.nonzero(mask)[0], pa.int64())
+    files = pa.table(
+        {
+            "filepath": table.column("filepath").take(idx),
+            "first": first[mask],
+            "end": end[mask],
+            "num_rows": table.column("num_rows").take(idx),
+            "file_bytes": _stat(table, "file_bytes").take(idx),
+        }
+    )
+    tally = pa.table({"n_files": pa.array([table.num_rows], pa.int64())})
+    return pa.concat_tables([files, tally], promote_options="default")
+
+
+def _prune_partial(table, clauses, tracked, cluster, keys):
+    """Files that survive every clause and whose interval holds some
+    IN-list value."""
+    survive, _full = _classify(table, clauses, tracked)
+    first, end = _value_spans(table, cluster, keys)
+    return _file_rows(table, survive & (end > first), first, end)
+
+
+def _candidate_partial(table, candidates):
+    """The named candidate files, for a standalone ``stats_summary``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mask = _true(
+        pc.is_in(
+            table.column("filepath"), value_set=pa.array(candidates, pa.string())
+        )
+    )
+    none = np.zeros(table.num_rows, dtype=np.int64)
+    return _file_rows(table, mask, none, none)
+
+
+def _merge_file_rows(partials, values, n_candidate: int | None = None):
+    """Fold ``_FILE_ROWS`` partials into ``({filepath: IN-list values},
+    stats summary)``. ``n_candidate`` defaults to the mapping's size."""
+    import pyarrow.compute as pc
+
+    files = partials.filter(pc.is_valid(partials.column("filepath")))
+    paths, first, end = (
+        files.column(c).to_pylist() for c in ("filepath", "first", "end")
+    )
+    mapping = {p: values[f:e] for p, f, e in zip(paths, first, end)}
+    n_total = pc.sum(partials.column("n_files")).as_py() or 0
+    n_cand = len(mapping) if n_candidate is None else n_candidate
+    sizes = files.column("file_bytes")
+    return mapping, {
+        "n_files_total": n_total,
+        "n_files_candidate": n_cand,
+        "n_files_pruned": max(n_total - n_cand, 0),
+        "n_rows_candidate": pc.sum(files.column("num_rows")).as_py() or 0,
+        # None means UNKNOWN, never a partial sum: a candidate whose size
+        # was not recorded at ingest would silently under-report the
+        # upper I/O bound otherwise.
+        "bytes_candidate": (
+            None if sizes.null_count else pc.sum(sizes).as_py() or 0
+        ),
+    }
+
+
+def _agg_partial(
+    table, clauses, tracked, min_max_columns, count_columns, subset
+):
+    """One stats batch's ``plan_agg`` partial: a row per boundary file
+    (under a ``files=`` subset, per classified file, so the merge can
+    name the members the store never indexed) and one tally row (NULL
+    filepath) with the batch's file counters and its interior files'
+    row count, non-NULL counts and min/max."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if subset is not None:
+        table = table.filter(
+            pc.is_in(
+                table.column("filepath"), value_set=pa.array(subset, pa.string())
+            )
+        )
+    n = table.num_rows
+    survive, full = _classify(table, clauses, tracked)
+    num_rows = table.column("num_rows")
+    serveable = np.ones(n, dtype=bool)
+    for col in min_max_columns:
+        # non-NULL min/max, or provably all-NULL: serves as "no contribution"
+        lo, hi = table.column(f"{col}_min"), table.column(f"{col}_max")
+        serveable &= _true(pc.and_(pc.is_valid(lo), pc.is_valid(hi))) | _true(
+            pc.equal(_stat(table, f"{col}_nulls"), num_rows)
+        )
+    for col in count_columns:
+        serveable &= _true(pc.is_valid(_stat(table, f"{col}_nulls")))
+    interior = survive & full & serveable
+    boundary = survive & ~interior
+    listed = boundary if subset is None else np.ones(n, dtype=bool)
+    files = pa.table(
+        {
+            "filepath": table.column("filepath").filter(pa.array(listed)),
+            "boundary": boundary[listed],
+        }
+    )
+    inner = table.take(pa.array(np.nonzero(interior)[0], pa.int64()))
+    rows = inner.column("num_rows")
+    tally = {
+        "n_files": n,
+        "n_interior": int(interior.sum()),
+        "n_excluded": int(n - survive.sum()),
+        "row_count": pc.sum(rows).as_py() or 0,
+        **{
+            f"cnt_{c}": pc.sum(
+                pc.subtract(rows, _stat(inner, f"{c}_nulls"))
+            ).as_py() or 0
+            for c in count_columns
+        },
+    }
+    cols = {k: pa.array([v], pa.int64()) for k, v in tally.items()}
+    for c in min_max_columns:
+        cols[f"min_{c}"] = pa.repeat(pc.min(inner.column(f"{c}_min")), 1)
+        cols[f"max_{c}"] = pa.repeat(pc.max(inner.column(f"{c}_max")), 1)
+    return pa.concat_tables([files, pa.table(cols)], promote_options="default")
+
+
+def _merge_agg(partials, min_max_columns, count_columns, subset):
+    """Fold ``_agg_partial`` partials into ``plan_agg``'s
+    ``(contrib, boundary_files)``."""
+    import pyarrow.compute as pc
+
+    listed = partials.filter(pc.is_valid(partials.column("filepath")))
+    tally = partials.filter(pc.is_null(partials.column("filepath")))
+    boundary = listed.filter(listed.column("boundary")).column("filepath")
+    boundary = boundary.to_pylist()
+    if subset is not None:  # never indexed: boundary, never dropped
+        boundary += set(subset) - set(listed.column("filepath").to_pylist())
+
+    def total(name: str) -> int:
+        return pc.sum(tally.column(name)).as_py() or 0
+
+    def fold(kernel, name: str) -> Any:
+        return _plain_py(kernel(tally.column(name)).as_py())
+
+    contrib = {
+        "n_files_total": total("n_files"),
+        "n_files_interior": total("n_interior"),
+        "n_files_boundary": len(boundary),
+        "n_files_excluded": total("n_excluded"),
+        "row_count": total("row_count"),
+        "cnt": {c: total(f"cnt_{c}") for c in count_columns},
+        # _plain_py: downstream builds Spark literal rows from these
+        "min": {c: fold(pc.min, f"min_{c}") for c in min_max_columns},
+        "max": {c: fold(pc.max, f"max_{c}") for c in min_max_columns},
+    }
+    return contrib, sorted(boundary)
 
 
 def _is_remote(path: str) -> bool:
@@ -784,185 +1113,67 @@ class FileStatsMetastore:
 
     # ------------------------------------------------------------- pruning
 
-    def _clause_prune_filter(self, clauses: Sequence[tuple[str, str, Any]]):
-        """AND-ed file-survival predicate over stats columns for the
-        range-clause truth table (lakeshack/metastore.py:453-467):
-
-        - ``col >= v`` keeps the file iff ``v <= col_max``
-        - ``col >  v`` keeps the file iff ``v <  col_max``
-        - ``col <= v`` keeps the file iff ``v >= col_min``
-        - ``col <  v`` keeps the file iff ``v >  col_min``
-        - ``col = v``  keeps the file iff ``col_min <= v <= col_max``
-
-        A file with NULL stats for the column always survives (pruning is
-        best-effort; the scan re-applies exact predicates).
-        """
-        pred = F.lit(True)
-        for col, op, value in clauses:
-            if op not in ALL_CLAUSE_OPS:
-                raise ValueError(
-                    f"unsupported operator {op!r}; use one of {ALL_CLAUSE_OPS}"
-                )
-            if col not in self.tracked_columns:
-                continue  # untracked column: cannot prune, scan still filters
-            if op in NULLNESS_OPS:
-                nl = F.col(f"{col}_nulls")
-                if op == "is_not_null":
-                    keep_n = nl < F.col("num_rows")
-                else:
-                    keep_n = nl > 0
-                # UNKNOWN null count keeps the file (nullness_keeps)
-                pred = pred & (nl.isNull() | keep_n)
-                continue
-            lo, hi = F.col(f"{col}_min"), F.col(f"{col}_max")
-            lit = F.lit(value)
-            if op == ">=":
-                keep = hi >= lit
-            elif op == ">":
-                keep = hi > lit
-            elif op == "<=":
-                keep = lo <= lit
-            elif op == "<":
-                keep = lo < lit
-            else:  # "=", "=="
-                keep = (lo <= lit) & (hi >= lit)
-            # Either stat NULL keeps the file, matching interval_keeps: a
-            # non-NULL min with NULL max under >=/> would evaluate
-            # hi>=lit to NULL and silently prune in this distributed path
-            # while the driver fast path keeps it.
-            pred = pred & (lo.isNull() | hi.isNull() | keep)
-        return pred
-
-    #: Below this stats-table row count, pruning runs driver-side on a
-    #: direct pyarrow read — metadata operations on metadata-sized tables
-    #: should not launch distributed jobs (a 10k-file dataset's stats are
-    #: ~1 MB; even 1M files is ~100 MB, still driver-feasible).
+    #: Largest stats table classified at the driver site: one Arrow read
+    #: of the store, zero Spark jobs (a 10k-file dataset's stats are
+    #: ~1 MB). Past it, or for a remote store, the backend's
+    #: ``read_arrow`` defers and the SAME classifier runs at the
+    #: distributed site, per batch inside ``stats_df().mapInArrow``; only
+    #: the per-batch partials reach the driver.
     DRIVER_PRUNE_MAX_FILES = 100_000
 
-    def _prune_driver_side(
-        self,
-        values: list[Any],
-        clauses: Sequence[tuple[str, str, Any]],
-    ) -> "tuple[dict[str, list[Any]], Any] | None":
-        """Fast path: vectorized interval tests over the backend's
-        driver-side Arrow read — pyarrow compute kernels, one boolean mask
-        per clause and per IN-list value, so a 100k-file store with a big
-        IN-list prunes in milliseconds where the old per-row Python loop
-        was O(files × (clauses + values)) interpreted work.
+    def _classify_store(self, partial, out_schema: T.StructType):
+        """Run ``partial`` (stats Arrow table → partial Arrow table in
+        ``out_schema``'s layout) over the whole store and return the
+        partials as one Arrow table, whichever site ran it.
 
-        Returns ``(mapping, stats_table)`` — the table is handed back so
-        one query reads the store exactly once (``stats_summary`` reuses
-        it) — or None when the backend defers (remote or too-large store;
-        caller falls back to the distributed path).
-        """
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        values = [_to_py_stat(v) for v in values]
-        clauses = [(c, op, _to_py_stat(v)) for c, op, v in clauses]
-        for _col, op, _value in clauses:
-            if op not in ALL_CLAUSE_OPS:
-                raise ValueError(
-                    f"unsupported operator {op!r}; use one of {ALL_CLAUSE_OPS}"
-                )
-
-        table = self.backend.read_arrow(self.DRIVER_PRUNE_MAX_FILES)
-        if table is None:
-            return None
-        # Spark writes TimestampType as UTC-adjusted; drop the zone (the
-        # instants are already UTC) so comparisons against naive clause
-        # values work — the vectorized twin of _to_py_stat.
-        table = _strip_arrow_tz(table)
-        n = table.num_rows
-        if n == 0:
-            return {}, table
-
-        def np_mask(arr) -> "np.ndarray":
-            return np.asarray(arr.to_numpy(zero_copy_only=False), dtype=bool)
-
-        keep = np.ones(n, dtype=bool)
-        for col, op, value in clauses:
-            if col not in self.tracked_columns:
-                continue  # untracked column: cannot prune, scan still filters
-            if op in NULLNESS_OPS:
-                # pre-null-count stores (or synthetic stats tables) have
-                # no {col}_nulls column: unknown → keep, like NULL stats
-                if f"{col}_nulls" not in table.column_names:
-                    continue
-                nl = table.column(f"{col}_nulls")
-                if op == "is_not_null":
-                    cond_n = pc.less(nl, table.column("num_rows"))
-                else:
-                    cond_n = pc.greater(nl, pa.scalar(0))
-                keep &= np_mask(pc.or_kleene(pc.is_null(nl), cond_n))
-                continue
-            lo, hi = table.column(f"{col}_min"), table.column(f"{col}_max")
-            # pa.scalar WITHOUT a forced type: casting 10.5 to an int64
-            # stat column would TRUNCATE to 10 and silently over-prune
-            # (x_min=10 under `< 10.5` must be kept); Arrow's comparison
-            # kernels promote mixed numeric operands instead, matching
-            # the Python and Spark paths.
-            sv = pa.scalar(value)
-            if op == ">=":
-                cond = pc.greater_equal(hi, sv)
-            elif op == ">":
-                cond = pc.greater(hi, sv)
-            elif op == "<=":
-                cond = pc.less_equal(lo, sv)
-            elif op == "<":
-                cond = pc.less(lo, sv)
-            else:  # "=", "=="
-                cond = pc.and_kleene(
-                    pc.less_equal(lo, sv), pc.greater_equal(hi, sv)
-                )
-            # NULL stats always keep the file (interval_keeps): the
-            # is_null disjuncts absorb the NULL comparison results under
-            # Kleene logic, so `survive` is null-free.
-            survive = pc.or_kleene(
-                pc.or_kleene(pc.is_null(lo), pc.is_null(hi)), cond
-            )
-            keep &= np_mask(survive)
-
-        lo_c = table.column(f"{self.cluster_column}_min")
-        hi_c = table.column(f"{self.cluster_column}_max")
-        either_null = pc.or_(pc.is_null(lo_c), pc.is_null(hi_c))
-        null_np = np_mask(either_null)
-        lo_np = lo_c.to_numpy(zero_copy_only=False)
-        hi_np = hi_c.to_numpy(zero_copy_only=False)
-        value_masks: list[np.ndarray] = []
-        if lo_np.dtype != object:
-            # Numeric/temporal cluster columns: two C-level comparisons
-            # per value (NaN/NaT from NULL stats compare False and are
-            # re-kept by the null mask) — far cheaper than per-value
-            # Arrow kernel dispatch on big IN-lists.
-            for v in values:
-                v_np = np.datetime64(v) if isinstance(v, (datetime, date)) else v
-                value_masks.append(((lo_np <= v_np) & (hi_np >= v_np)) | null_np)
+        Driver site: the backend's Arrow read, filepath-deduplicated, is
+        one batch. Distributed site, when the backend defers:
+        ``stats_df()`` (which dedups by filepath) feeds ``partial`` batch
+        by batch through ``mapInArrow``. A store that does not exist yet
+        is an empty batch."""
+        if self._exists():
+            table = self.backend.read_arrow(self.DRIVER_PRUNE_MAX_FILES)
         else:
-            for v in values:
-                contained = pc.and_kleene(
-                    pc.less_equal(lo_c, pa.scalar(v)),
-                    pc.greater_equal(hi_c, pa.scalar(v)),
-                )
-                value_masks.append(np_mask(pc.or_kleene(either_null, contained)))
+            from pyspark.sql.pandas.types import to_arrow_schema
 
-        # `keep` applies once at selection time; surviving rows then index
-        # a (files × values) sub-matrix so the match lists assemble from
-        # tiny nonzero scans instead of per-(file, value) Python probes.
-        any_match = np.logical_or.reduce(value_masks) & keep
-        idxs = np.nonzero(any_match)[0]
-        paths = table.column("filepath").take(pa.array(idxs)).to_pylist()
-        sub = (
-            np.column_stack([m[idxs] for m in value_masks])
-            if idxs.size
-            else np.empty((0, len(values)), dtype=bool)
+            table = to_arrow_schema(self.stats_schema).empty_table()
+        if table is not None:
+            return partial(_dedup_filepaths(_strip_arrow_tz(table)))
+
+        def per_batch(batches):
+            import pyarrow as pa
+
+            for batch in batches:
+                table = _strip_arrow_tz(pa.Table.from_batches([batch]))
+                yield from partial(table).to_batches()
+
+        return _strip_arrow_tz(
+            self.stats_df().mapInArrow(per_batch, out_schema).toArrow()
         )
-        out = {
-            p: sorted(values[k] for k in np.nonzero(sub[j])[0])
-            for j, p in enumerate(paths)
-        }
-        return out, table
+
+    def _prune_pass(
+        self,
+        cluster_column_values: Sequence[Any] | Any,
+        optional_where_clauses: Sequence[tuple[str, str, Any]],
+    ) -> tuple[dict[str, list[Any]], dict[str, Any]]:
+        """One classifier pass over the store: the prune mapping and the
+        ``stats_summary`` of its candidate files."""
+        if not isinstance(cluster_column_values, (list, tuple)):
+            cluster_column_values = [cluster_column_values]
+        values = sorted(
+            dict.fromkeys(_to_py_stat(v) for v in cluster_column_values)
+        )
+        partials = self._classify_store(
+            functools.partial(
+                _prune_partial,
+                clauses=_checked_clauses(optional_where_clauses),
+                tracked=list(self.tracked_columns),
+                cluster=self.cluster_column,
+                keys=_search_keys(values),
+            ),
+            _FILE_ROWS,
+        )
+        return _merge_file_rows(partials, values)
 
     def prune(
         self,
@@ -972,63 +1183,14 @@ class FileStatsMetastore:
         """``{filepath: [candidate cluster values]}`` for files whose
         [min, max] interval might contain each value AND that survive every
         range clause — reference ``Metastore.query``
-        (lakeshack/metastore.py:414-481), vectorized as one broadcast
-        interval-join instead of one DB query per value.
+        (lakeshack/metastore.py:414-481), one vectorized classifier pass
+        over the store instead of one DB query per value.
 
-        Small stats tables (the overwhelmingly common case — one row per
-        *file*) are pruned driver-side with zero Spark jobs; the
-        distributed path kicks in past ``DRIVER_PRUNE_MAX_FILES``.
-        """
-        return self._prune_impl(cluster_column_values, optional_where_clauses)[0]
-
-    def _prune_impl(
-        self,
-        cluster_column_values: Sequence[Any] | Any,
-        optional_where_clauses: Sequence[tuple[str, str, Any]] = (),
-    ) -> "tuple[dict[str, list[Any]], Any]":
-        """Shared pruning core: ``(mapping, stats_table_or_None)`` — the
-        Arrow table is returned when the driver fast path read it, so
-        telemetry can reuse the SAME read instead of re-reading the store
-        per query."""
-        if not isinstance(cluster_column_values, (list, tuple)):
-            cluster_column_values = [cluster_column_values]
-        values = list(dict.fromkeys(cluster_column_values))
-        if not values:
-            return {}, None
-        if not self._exists():
-            return {}, None
-        fast = self._prune_driver_side(values, optional_where_clauses)
-        if fast is not None:
-            return fast
-        cluster_type = _spark_stat_type(
-            {f.name: f.dataType for f in self.data_schema.fields}[self.cluster_column]
-        )
-        values_df = self.spark.createDataFrame(
-            [(v,) for v in values],
-            T.StructType([T.StructField("__cluster_value", cluster_type, False)]),
-        )
-        lo = F.col(f"{self.cluster_column}_min")
-        hi = F.col(f"{self.cluster_column}_max")
-        v = F.col("__cluster_value")
-        survivors = self.stats_df().filter(
-            self._clause_prune_filter(optional_where_clauses)
-        )
-        # NULL cluster-column stats must keep the file for EVERY candidate
-        # value (pruning is best-effort; the scan re-applies exact
-        # predicates) — a bare range condition evaluates NULL→false and
-        # would silently drop such files, diverging from interval_keeps and
-        # the driver-side fast path.
-        matched = survivors.join(
-            F.broadcast(values_df),
-            lo.isNull() | hi.isNull() | ((v >= lo) & (v <= hi)),
-            "inner",
-        )
-        rows = (
-            matched.groupBy("filepath")
-            .agg(F.collect_set("__cluster_value").alias("values"))
-            .collect()
-        )
-        return {r["filepath"]: sorted(r["values"]) for r in rows}, None
+        The classifier (:func:`_classify`, :func:`_value_spans`) runs at
+        one of two sites: the driver, with zero Spark jobs, for a local
+        store up to ``DRIVER_PRUNE_MAX_FILES`` rows; per batch inside
+        ``mapInArrow`` otherwise."""
+        return self._prune_pass(cluster_column_values, optional_where_clauses)[0]
 
     def prune_files(
         self,
@@ -1053,19 +1215,15 @@ class FileStatsMetastore:
         cluster_column_values: Sequence[Any] | Any,
         optional_where_clauses: Sequence[tuple[str, str, Any]] = (),
     ) -> tuple[list[str], dict[str, Any]]:
-        """Pruned file list plus the planning-time I/O summary, reading
-        the stats store exactly ONCE on the driver fast path (the engine's
-        per-query entry point — a metadata counter must not double the
-        planning I/O)."""
-        mapping, table = self._prune_impl(
+        """Pruned file list plus the planning-time I/O summary, both from
+        ONE pass over the stats store (the engine's per-query entry point
+        — a metadata counter must not double the planning I/O)."""
+        mapping, summary = self._prune_pass(
             cluster_column_values, optional_where_clauses
         )
-        files = sorted(mapping)
-        return files, self.stats_summary(files, table=table)
+        return sorted(mapping), summary
 
-    def stats_summary(
-        self, candidate_files: Sequence[str] = (), table: Any = None
-    ) -> dict[str, Any]:
+    def stats_summary(self, candidate_files: Sequence[str] = ()) -> dict[str, Any]:
         """Planning-time I/O accounting from the stats store: total /
         candidate / pruned file counts plus the candidate files' footer
         row-count and byte totals (upper bounds on what the scan can
@@ -1074,76 +1232,14 @@ class FileStatsMetastore:
 
         Reference parity: the ``n_files`` / ``n_records`` counters the
         reference logs per query (lakeshack/lakeshack.py:463-472,566-577).
-        Pass ``table`` (an already-read stats Arrow table) to reuse the
-        prune-time read; otherwise driver-side on the arrow fast path
-        (zero Spark jobs), one metadata-sized aggregate past
-        ``DRIVER_PRUNE_MAX_FILES``. Filepath-deduped to match
-        ``stats_df()``'s concurrent-update discipline.
+        One pass at the same two sites as :meth:`prune`, folded by the
+        same merge; filepath-deduped like ``stats_df()``.
         """
-        cand = set(candidate_files)
-        if not self.backend.exists():
-            return {
-                "n_files_total": 0,
-                "n_files_candidate": len(cand),
-                "n_files_pruned": 0,
-                "n_rows_candidate": 0,
-                "bytes_candidate": 0,
-            }
-        if table is None:
-            table = self.backend.read_arrow(self.DRIVER_PRUNE_MAX_FILES)
-        if table is not None and "filepath" in table.column_names:
-            have_bytes = "file_bytes" in table.column_names
-            fb = table.column("file_bytes").to_pylist() if have_bytes else None
-            seen: dict[str, tuple[int, int | None]] = {}
-            for i, (p, n) in enumerate(
-                zip(
-                    table.column("filepath").to_pylist(),
-                    table.column("num_rows").to_pylist(),
-                )
-            ):
-                if p not in seen:
-                    seen[p] = (n, fb[i] if fb is not None else None)
-            n_total = len(seen)
-            rows_cand = sum(n for p, (n, _b) in seen.items() if p in cand)
-            cand_bytes = [b for p, (_n, b) in seen.items() if p in cand]
-            # None means UNKNOWN, never a partial sum: a candidate whose
-            # size could not be determined at ingest would silently
-            # under-report the "upper I/O bound" otherwise.
-            bytes_cand = (
-                None if any(b is None for b in cand_bytes) else sum(cand_bytes)
-            )
-        else:
-            row = self.stats_df().agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    F.when(
-                        F.col("filepath").isin(list(cand)), F.col("num_rows")
-                    ).otherwise(F.lit(0))
-                ).alias("rc"),
-                F.sum(
-                    F.when(
-                        F.col("filepath").isin(list(cand)), F.col("file_bytes")
-                    ).otherwise(F.lit(0))
-                ).alias("bc"),
-                F.sum(
-                    F.when(
-                        F.col("filepath").isin(list(cand))
-                        & F.col("file_bytes").isNull(),
-                        F.lit(1),
-                    ).otherwise(F.lit(0))
-                ).alias("nulls"),
-            ).collect()[0]
-            n_total = row["n"] or 0
-            rows_cand = row["rc"] or 0
-            # None means UNKNOWN (see driver-side branch)
-            bytes_cand = None if (row["nulls"] or 0) > 0 else (row["bc"] or 0)
-        return {
-            "n_files_total": n_total,
-            "n_files_candidate": len(cand),
-            "n_files_pruned": n_total - len(cand),
-            "n_rows_candidate": rows_cand,
-            "bytes_candidate": bytes_cand,
-        }
+        cand = sorted(set(candidate_files))
+        partials = self._classify_store(
+            functools.partial(_candidate_partial, candidates=cand), _FILE_ROWS
+        )
+        return _merge_file_rows(partials, [], n_candidate=len(cand))[1]
 
     # -------------------------------------------- metadata-only aggregation
 
@@ -1184,7 +1280,7 @@ class FileStatsMetastore:
         against the AND-ed ``clauses`` as
 
         - **excluded** — the zone map proves no row matches (the prune
-          truth table, :meth:`_clause_prune_filter`);
+          rule, ``survive`` of :func:`_clause_masks`);
         - **interior** — the zone map proves EVERY row matches: each
           clause column's ``[min, max]`` lies wholly inside the clause
           AND is provably NULL-free (``{col}_nulls == 0`` — rows with a
@@ -1201,306 +1297,48 @@ class FileStatsMetastore:
         An interior file additionally needs serveable stats for every
         requested aggregation column (non-NULL min/max, or a null count
         proving the file all-NULL; known null count for ``cnt``);
-        otherwise it demotes to boundary.
+        otherwise it demotes to boundary. Files in ``files`` the store
+        never indexed are boundary: the scan computes them exactly.
 
         At 100 TB this is the COUNT/MIN/MAX analogue of file pruning: a
         range predicate on the cluster column touches O(boundary) ≈ 1–2
         files whatever the lake size — the interior of the range is
         answered from the metadata-sized stats store with zero data I/O.
-        Driver-vectorized on the Arrow fast path; one distributed
-        aggregate past ``DRIVER_PRUNE_MAX_FILES``.
+        Same classifier and sites as :meth:`prune`: each batch yields a
+        partial contribution (the driver site's whole table is one
+        partial) and :func:`_merge_agg` folds them.
         """
-        clauses = [(c, op, _to_py_stat(v)) for c, op, v in clauses]
-        for _col, op, _value in clauses:
-            if op not in ALL_CLAUSE_OPS:
-                raise ValueError(
-                    f"unsupported operator {op!r}; use one of {ALL_CLAUSE_OPS}"
-                )
+        clauses = _checked_clauses(clauses)
         self._validate_agg_columns(min_max_columns, count_columns)
         min_max_columns = list(dict.fromkeys(min_max_columns))
         count_columns = list(dict.fromkeys(count_columns))
-        empty_contrib = {
-            "n_files_total": 0,
-            "n_files_interior": 0,
-            "n_files_boundary": 0,
-            "n_files_excluded": 0,
-            "row_count": 0,
-            "cnt": {c: 0 for c in count_columns},
-            "min": {c: None for c in min_max_columns},
-            "max": {c: None for c in min_max_columns},
-        }
         subset = None if files is None else sorted(set(files))
-        if not self._exists():
-            # files the store has never indexed are conservatively
-            # boundary: the scan computes them exactly
-            if subset:
-                out = dict(empty_contrib)
-                out["n_files_boundary"] = len(subset)
-                return out, subset
-            return empty_contrib, []
-        table = self.backend.read_arrow(self.DRIVER_PRUNE_MAX_FILES)
-        if table is None:
-            return self._plan_agg_distributed(
-                clauses, min_max_columns, count_columns, empty_contrib, subset
-            )
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        table = _strip_arrow_tz(table)
-        paths = table.column("filepath").to_pylist()
-        seen: set[str] = set()
-        first = [
-            i for i, p in enumerate(paths) if not (p in seen or seen.add(p))
-        ]
-        if len(first) < len(paths):
-            table = table.take(pa.array(first))
-            paths = table.column("filepath").to_pylist()
-        missing: list[str] = []
-        if subset is not None:
-            fset = set(subset)
-            sel = [i for i, p in enumerate(paths) if p in fset]
-            missing = sorted(fset - set(paths))  # unindexed: boundary
-            table = table.take(pa.array(sel))
-            paths = table.column("filepath").to_pylist()
-        n = table.num_rows
-        if n == 0:
-            out = dict(empty_contrib)
-            out["n_files_boundary"] = len(missing)
-            return out, missing
-
-        def np_bool(arr) -> "np.ndarray":
-            return np.asarray(arr.to_numpy(zero_copy_only=False), dtype=bool)
-
-        survive = np.ones(n, dtype=bool)
-        full = np.ones(n, dtype=bool)
-        num_rows_col = table.column("num_rows")
-        for col, op, value in clauses:
-            if col not in self.tracked_columns:
-                # Untracked clause column: cannot prove anything — every
-                # file survives (the scan filters exactly) and none is
-                # interior.
-                full &= False
-                continue
-            nulls = table.column(f"{col}_nulls")
-            if op in NULLNESS_OPS:
-                if op == "is_not_null":
-                    keep_n = pc.less(nulls, num_rows_col)
-                    full_n = pc.equal(nulls, pa.scalar(0))
-                else:
-                    keep_n = pc.greater(nulls, pa.scalar(0))
-                    full_n = pc.equal(nulls, num_rows_col)
-                survive &= np_bool(
-                    pc.or_kleene(pc.is_null(nulls), keep_n)
-                )
-                full &= np_bool(pc.fill_null(full_n, False))
-                continue
-            lo = table.column(f"{col}_min")
-            hi = table.column(f"{col}_max")
-            sv = pa.scalar(value)
-            if op == ">=":
-                keep_c, full_c = pc.greater_equal(hi, sv), pc.greater_equal(lo, sv)
-            elif op == ">":
-                keep_c, full_c = pc.greater(hi, sv), pc.greater(lo, sv)
-            elif op == "<=":
-                keep_c, full_c = pc.less_equal(lo, sv), pc.less_equal(hi, sv)
-            elif op == "<":
-                keep_c, full_c = pc.less(lo, sv), pc.less(hi, sv)
-            else:  # "=", "=="
-                keep_c = pc.and_kleene(
-                    pc.less_equal(lo, sv), pc.greater_equal(hi, sv)
-                )
-                full_c = pc.and_kleene(pc.equal(lo, sv), pc.equal(hi, sv))
-            survive &= np_bool(
-                pc.or_kleene(
-                    pc.or_kleene(pc.is_null(lo), pc.is_null(hi)), keep_c
-                )
-            )
-            # NULL stats / unknown null count → NOT interior (conservative
-            # direction is the opposite of pruning's).
-            full &= np_bool(pc.fill_null(full_c, False))
-            full &= np_bool(pc.fill_null(pc.equal(nulls, pa.scalar(0)), False))
-
-        serveable = np.ones(n, dtype=bool)
-        for col in min_max_columns:
-            mn = table.column(f"{col}_min")
-            mx = table.column(f"{col}_max")
-            nl = table.column(f"{col}_nulls")
-            ok = pc.or_kleene(
-                pc.and_kleene(
-                    pc.invert(pc.is_null(mn)), pc.invert(pc.is_null(mx))
-                ),
-                pc.equal(nl, num_rows_col),  # provably all-NULL: serves as "no contribution"
-            )
-            serveable &= np_bool(pc.fill_null(ok, False))
-        for col in count_columns:
-            serveable &= np_bool(pc.invert(pc.is_null(table.column(f"{col}_nulls"))))
-
-        interior = survive & full & serveable
-        boundary_mask = survive & ~interior
-        idx = pa.array(np.nonzero(interior)[0])
-        boundary = sorted(
-            table.column("filepath")
-            .take(pa.array(np.nonzero(boundary_mask)[0]))
-            .to_pylist()
-            + missing
-        )
-        contrib = dict(empty_contrib)
-        contrib.update(
-            n_files_total=n,
-            n_files_interior=int(interior.sum()),
-            n_files_boundary=len(boundary),
-            n_files_excluded=int((~survive).sum()),
-            row_count=int(pc.sum(num_rows_col.take(idx)).as_py() or 0),
-            cnt={
-                c: int(
-                    pc.sum(
-                        pc.subtract(
-                            num_rows_col, table.column(f"{c}_nulls")
-                        ).take(idx)
-                    ).as_py()
-                    or 0
-                )
-                for c in count_columns
-            },
-            # .as_py() yields pandas Timestamps when pandas is installed;
-            # downstream builds Spark literal rows, which want datetimes.
-            min={
-                c: _plain_py(pc.min(table.column(f"{c}_min").take(idx)).as_py())
-                for c in min_max_columns
-            },
-            max={
-                c: _plain_py(pc.max(table.column(f"{c}_max").take(idx)).as_py())
-                for c in min_max_columns
-            },
-        )
-        return contrib, boundary
-
-    def _plan_agg_distributed(
-        self,
-        clauses: Sequence[tuple[str, str, Any]],
-        min_max_columns: Sequence[str],
-        count_columns: Sequence[str],
-        empty_contrib: dict[str, Any],
-        subset: list[str] | None = None,
-    ) -> tuple[dict[str, Any], list[str]]:
-        """Past-``DRIVER_PRUNE_MAX_FILES`` twin of the Arrow fast path:
-        the same classification as Column expressions over ``stats_df()``
-        — ONE metadata-sized aggregate for the interior contribution plus
-        one bounded collect of the boundary file list (the scan needs
-        that list driver-side regardless, exactly like ``prune``)."""
-        df = self.stats_df()
-        missing: list[str] = []
-        if subset is not None:
-            df = df.filter(F.col("filepath").isin(subset))
-            present = {
-                r["filepath"] for r in df.select("filepath").collect()
-            }
-            missing = sorted(set(subset) - present)  # unindexed: boundary
-        survive = self._clause_prune_filter(clauses)
-        full = F.lit(True)
-        for col, op, value in clauses:
-            if col not in self.tracked_columns:
-                full = F.lit(False)
-                continue
-            if op in NULLNESS_OPS:
-                nl = F.col(f"{col}_nulls")
-                full_n = (
-                    (nl == 0) if op == "is_not_null" else (nl == F.col("num_rows"))
-                )
-                full = full & F.coalesce(full_n, F.lit(False))
-                continue
-            lo, hi = F.col(f"{col}_min"), F.col(f"{col}_max")
-            lit = F.lit(value)
-            if op == ">=":
-                full_c = lo >= lit
-            elif op == ">":
-                full_c = lo > lit
-            elif op == "<=":
-                full_c = hi <= lit
-            elif op == "<":
-                full_c = hi < lit
-            else:  # "=", "=="
-                full_c = (lo == lit) & (hi == lit)
-            full = (
-                full
-                & F.coalesce(full_c, F.lit(False))
-                & F.coalesce(F.col(f"{col}_nulls") == 0, F.lit(False))
-            )
-        serveable = F.lit(True)
-        for col in min_max_columns:
-            serveable = serveable & F.coalesce(
-                (
-                    F.col(f"{col}_min").isNotNull()
-                    & F.col(f"{col}_max").isNotNull()
-                )
-                | (F.col(f"{col}_nulls") == F.col("num_rows")),
-                F.lit(False),
-            )
-        for col in count_columns:
-            serveable = serveable & F.col(f"{col}_nulls").isNotNull()
-        flagged = df.select(
-            "*",
-            survive.alias("__survive"),
-            (survive & full & serveable).alias("__interior"),
-        ).persist()
-        try:
-            aggs = [
-                F.count(F.lit(1)).alias("__total"),
-                F.sum(F.when(F.col("__interior"), 1).otherwise(0)).alias(
-                    "__n_interior"
-                ),
-                F.sum(F.when(~F.col("__survive"), 1).otherwise(0)).alias(
-                    "__n_excluded"
-                ),
-                F.sum(
-                    F.when(F.col("__interior"), F.col("num_rows")).otherwise(0)
-                ).alias("__rows"),
+        stat_types = {f.name: f.dataType for f in self.stats_schema.fields}
+        counters = ("n_files", "n_interior", "n_excluded", "row_count")
+        out_schema = T.StructType(
+            [
+                T.StructField("filepath", T.StringType()),
+                T.StructField("boundary", T.BooleanType()),
+                *[
+                    T.StructField(name, T.LongType())
+                    for name in (*counters, *(f"cnt_{c}" for c in count_columns))
+                ],
+                *[
+                    T.StructField(f"{m}_{c}", stat_types[f"{c}_{m}"])
+                    for c in min_max_columns
+                    for m in ("min", "max")
+                ],
             ]
-            for c in min_max_columns:
-                aggs.append(
-                    F.min(
-                        F.when(F.col("__interior"), F.col(f"{c}_min"))
-                    ).alias(f"__min_{c}")
-                )
-                aggs.append(
-                    F.max(
-                        F.when(F.col("__interior"), F.col(f"{c}_max"))
-                    ).alias(f"__max_{c}")
-                )
-            for c in count_columns:
-                aggs.append(
-                    F.sum(
-                        F.when(
-                            F.col("__interior"),
-                            F.col("num_rows") - F.col(f"{c}_nulls"),
-                        ).otherwise(0)
-                    ).alias(f"__cnt_{c}")
-                )
-            row = flagged.agg(*aggs).collect()[0]
-            boundary = sorted(
-                [
-                    r["filepath"]
-                    for r in flagged.filter(
-                        F.col("__survive") & ~F.col("__interior")
-                    )
-                    .select("filepath")
-                    .collect()
-                ]
-                + missing
-            )
-        finally:
-            flagged.unpersist()
-        contrib = dict(empty_contrib)
-        contrib.update(
-            n_files_total=row["__total"] or 0,
-            n_files_interior=row["__n_interior"] or 0,
-            n_files_boundary=len(boundary),
-            n_files_excluded=row["__n_excluded"] or 0,
-            row_count=row["__rows"] or 0,
-            cnt={c: row[f"__cnt_{c}"] or 0 for c in count_columns},
-            min={c: row[f"__min_{c}"] for c in min_max_columns},
-            max={c: row[f"__max_{c}"] for c in min_max_columns},
         )
-        return contrib, boundary
+        partials = self._classify_store(
+            functools.partial(
+                _agg_partial,
+                clauses=clauses,
+                tracked=list(self.tracked_columns),
+                min_max_columns=min_max_columns,
+                count_columns=count_columns,
+                subset=subset,
+            ),
+            out_schema,
+        )
+        return _merge_agg(partials, min_max_columns, count_columns, subset)

@@ -1885,11 +1885,10 @@ def ivf_residuals(
     has to cover the within-cell spread, which is why residual PQ beats
     PQ on raw vectors wherever the corpus clusters. Map-only: the
     centroid lookup folds in as ONE literal long→array map (sparse
-    centroid ids allowed), subtraction is a zip_with."""
+    centroid ids allowed), subtraction is a zip_with. The centroids are
+    collected once and serve both the assignment and the map."""
     entries = _centroid_entries(centroids, centroid_id_col, centroid_vec_col)
-    assigned = ivf_assign(
-        vectors, centroids, id_col, vec_col, centroid_id_col, centroid_vec_col
-    )
+    assigned = _assign_cells_arrow(vectors, entries, vec_col)
     parts = []
     for cid, cv, _cn in entries:
         vec = ",".join("%.17e" % x for x in cv)

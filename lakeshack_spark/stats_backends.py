@@ -104,8 +104,9 @@ class StatsBackend(abc.ABC):
 
     @abc.abstractmethod
     def read_arrow(self, max_rows: int) -> "pa.Table | None":
-        """Driver-side fast-path read; None when the caller should use
-        the distributed path instead (remote store / too large)."""
+        """Driver-side read of the whole store; None when the metastore
+        should classify at the distributed site instead (remote store /
+        more than ``max_rows`` rows)."""
 
     @abc.abstractmethod
     def append(self, df: DataFrame, n_rows: int) -> None: ...

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lakeshack_spark.metastore import FileStatsMetastore
+from lakeshack_spark.stats_backends import ParquetStatsBackend
 
 MID_2021_08_01 = datetime(2021, 8, 1)
 GLOBAL_MIN_TS = datetime.fromtimestamp(1_626_365_594)
@@ -68,6 +69,32 @@ def _maybe_pg(request) -> str | None:
 
 def _dbapi_local_path(store: str) -> str:
     return store.split("://", 1)[1][1:]
+
+
+class _RemoteParquetBackend(ParquetStatsBackend):
+    """The remote-store contract: ``read_arrow`` defers, so every pass
+    runs at the distributed site (``stats_df().mapInArrow``)."""
+
+    def read_arrow(self, max_rows):
+        return None
+
+
+def _distributed_twin(ms, tmp_path_factory):
+    """A metastore over the same stats as ``ms`` that classifies at the
+    distributed site. A non-Parquet store is copied into a Parquet one
+    first: its own backend always serves the driver site."""
+    store = ms.store_path
+    if not isinstance(ms.backend, ParquetStatsBackend):
+        store = str(tmp_path_factory.mktemp("distributed_twin") / "stats")
+        ms.stats_df().write.parquet(store)
+    return FileStatsMetastore(
+        ms.spark,
+        store,
+        ms.data_schema,
+        ms.cluster_column,
+        ms.optional_columns,
+        backend=_RemoteParquetBackend(ms.spark, store),
+    )
 
 
 @pytest.fixture(
@@ -273,25 +300,21 @@ def test_tz_aware_schema_stats_localization(spark, tmp_path_factory):
     assert first(ms3.stats_df(localize=True))["timestamp_min"] == utc_naive
 
 
-def test_distributed_prune_path_matches_driver_path(metastore):
-    """Forcing the Spark interval-join path (as if the stats table were
-    huge) must give identical pruning to the driver-side fast path."""
+def test_distributed_prune_path_matches_driver_path(metastore, tmp_path_factory):
+    """The distributed site (as for a remote or huge stats table) must
+    give identical pruning to the driver site."""
     fast = metastore.prune(TEN_IDS, [("timestamp", ">=", MID_2021_08_01)])
-    old = metastore.DRIVER_PRUNE_MAX_FILES
-    metastore.DRIVER_PRUNE_MAX_FILES = 0
-    try:
-        slow = metastore.prune(TEN_IDS, [("timestamp", ">=", MID_2021_08_01)])
-    finally:
-        metastore.DRIVER_PRUNE_MAX_FILES = old
+    twin = _distributed_twin(metastore, tmp_path_factory)
+    slow = twin.prune(TEN_IDS, [("timestamp", ">=", MID_2021_08_01)])
     assert fast == slow
 
 
-def test_distributed_prune_equivalence_sweep(metastore):
+def test_distributed_prune_equivalence_sweep(metastore, tmp_path_factory):
     """End-to-end driver≡distributed equivalence across the operator ×
     boundary × IN-list grid (every op, values below/at/inside/above the
-    stored ranges, multi-clause AND) — the distributed join otherwise
-    only runs in unit slices, since everything under
-    DRIVER_PRUNE_MAX_FILES takes the arrow fast path."""
+    stored ranges, multi-clause AND) — a local store under
+    DRIVER_PRUNE_MAX_FILES classifies at the driver site, so the
+    distributed site runs here through a backend that defers."""
     beyond = datetime(2022, 1, 1)
     combos = [
         (TEN_IDS, []),
@@ -305,14 +328,10 @@ def test_distributed_prune_equivalence_sweep(metastore):
         (TEN_IDS[:3], [("timestamp", ">=", GLOBAL_MIN_TS), ("timestamp", "<", MID_2021_08_01)]),
         (TEN_IDS, [("x", ">=", 10_000)]),  # untracked column
     ]
-    old = metastore.DRIVER_PRUNE_MAX_FILES
+    twin = _distributed_twin(metastore, tmp_path_factory)
     for values, clauses in combos:
         fast = metastore.prune(values, clauses)
-        metastore.DRIVER_PRUNE_MAX_FILES = 0
-        try:
-            slow = metastore.prune(values, clauses)
-        finally:
-            metastore.DRIVER_PRUNE_MAX_FILES = old
+        slow = twin.prune(values, clauses)
         assert fast == slow, (values, clauses)
 
 
@@ -672,41 +691,50 @@ def test_duckdb_engine_end_to_end(spark, sales_fixture, tmp_path_factory):
     assert len(shack.candidate_files(TEN_IDS[:3])) <= len(files)
 
 
-def test_distributed_clause_filter_matches_interval_keeps(spark, metastore):
-    """The distributed prune predicate must agree with ``interval_keeps``
-    on every partial-NULL stats combination: a row with non-NULL min but
-    NULL max (or vice versa) must survive every clause, exactly like the
-    driver fast path — SQL three-valued logic would otherwise silently
-    prune it (hi >= lit is NULL, not False)."""
-    from lakeshack_spark.metastore import PRUNE_OPS, interval_keeps
-
-    combos = [(1, 9), (None, 9), (1, None), (None, None)]
-    rows = [
-        {"filepath": f"f{i}", "timestamp_min": lo, "timestamp_max": hi}
-        for i, (lo, hi) in enumerate(combos)
-    ]
+def test_distributed_clause_filter_matches_interval_keeps(
+    spark, metastore, tmp_path_factory, request
+):
+    """The one classifier, at both sites, must agree with
+    ``interval_keeps`` on every partial-NULL stats combination: a row
+    with non-NULL min but NULL max (or vice versa) must survive every
+    clause — SQL three-valued logic would otherwise silently prune it
+    (hi >= lit is NULL, not False). The grid store lives in the same
+    backend as ``metastore``, whose own read serves the driver site; the
+    distributed site runs on the Parquet leg (a non-Parquet store's
+    distributed twin is a Parquet copy of these same rows)."""
     from pyspark.sql import types as T
 
+    from lakeshack_spark.metastore import PRUNE_OPS, interval_keeps
+
+    kind = request.node.callspec.params["metastore"]
+    pg = request.getfixturevalue("pg_server") if kind == "pgwire" else None
+    store = _store_path(tmp_path_factory, "grid", kind, pg)
     schema = T.StructType(
         [
-            T.StructField("filepath", T.StringType(), False),
-            T.StructField("timestamp_min", T.IntegerType(), True),
-            T.StructField("timestamp_max", T.IntegerType(), True),
+            T.StructField("id", T.StringType()),
+            T.StructField("timestamp", T.LongType()),
         ]
     )
-    stats = spark.createDataFrame(rows, schema)
+    ms = FileStatsMetastore(spark, store, schema, "id", ["timestamp"])
+    combos = [(1, 9), (None, 9), (1, None), (None, None)]
+    rows = [
+        ("f%d" % i, 1, 1, "a", "z", 0, lo, hi, 0)
+        for i, (lo, hi) in enumerate(combos)
+    ]
+    ms.backend.append(spark.createDataFrame(rows, ms.stats_schema), len(rows))
+    arms = {"driver": ms}
+    if kind == "parquet":
+        arms["distributed"] = _distributed_twin(ms, tmp_path_factory)
     for op in PRUNE_OPS:
         for value in (0, 1, 5, 9, 10):
-            pred = metastore._clause_prune_filter([("timestamp", op, value)])
-            kept = {
-                r["filepath"] for r in stats.filter(pred).collect()
-            }
             want = {
                 f"f{i}"
                 for i, (lo, hi) in enumerate(combos)
                 if interval_keeps(op, lo, hi, value)
             }
-            assert kept == want, (op, value, kept, want)
+            for arm, m in arms.items():
+                kept = set(m.prune(["m"], [("timestamp", op, value)]))
+                assert kept == want, (arm, op, value, kept, want)
 
 
 def test_concurrent_update_duplicate_rows_deduped(spark, sales_fixture, tmp_path_factory):
@@ -821,14 +849,10 @@ def test_fractional_clause_value_on_integer_column_does_not_overprune(
     )
     assert ms.update(str(root)) == 2
     cases = [("<", 10.5), ("<=", 10.5), (">", 39.5), (">=", 39.5), ("=", 20.0)]
+    twin = _distributed_twin(ms, tmp_path_factory)
     for op, val in cases:
         fast = ms.prune(list(range(10)), [("x", op, val)])
-        old = ms.DRIVER_PRUNE_MAX_FILES
-        ms.DRIVER_PRUNE_MAX_FILES = 0
-        try:
-            slow = ms.prune(list(range(10)), [("x", op, val)])
-        finally:
-            ms.DRIVER_PRUNE_MAX_FILES = old
+        slow = twin.prune(list(range(10)), [("x", op, val)])
         assert fast == slow, (op, val)
     # the concrete truncation scenario: x < 10.5 must keep file A
     kept = ms.prune(list(range(10)), [("x", "<", 10.5)])
@@ -963,9 +987,7 @@ def test_classification_details(agg_shack, nulls_lake):
     assert contrib3["row_count"] == 0 and contrib3["min"]["k"] is None
 
 
-def test_plan_agg_distributed_parity(agg_shack):
-    from lakeshack_spark import metastore as ms_mod
-
+def test_plan_agg_distributed_parity(agg_shack, tmp_path_factory):
     ms = agg_shack.metastore
     cases = [
         [("k", ">=", 5), ("k", "<=", 44)],
@@ -978,13 +1000,45 @@ def test_plan_agg_distributed_parity(agg_shack):
         [("v", "is_null", None), ("k", ">=", 22)],
     ]
     fast = [ms.plan_agg(c, **AGG_KW) for c in cases]
-    old = ms.DRIVER_PRUNE_MAX_FILES
-    ms_mod.FileStatsMetastore.DRIVER_PRUNE_MAX_FILES = 0
-    try:
-        slow = [ms.plan_agg(c, **AGG_KW) for c in cases]
-    finally:
-        ms_mod.FileStatsMetastore.DRIVER_PRUNE_MAX_FILES = old
+    twin = _distributed_twin(ms, tmp_path_factory)
+    slow = [twin.plan_agg(c, **AGG_KW) for c in cases]
     assert fast == slow
+
+
+def test_distributed_site_job_count_and_cache_hygiene(
+    spark, agg_shack, tmp_path_factory
+):
+    """The distributed site is one ``mapInArrow`` pass over
+    ``stats_df()``: at most 2 Spark jobs (its filepath dedup is one
+    shuffle) for ``prune_files_with_summary`` and for ``plan_agg``,
+    counted through a job group, and no persisted RDD or cached plan
+    left behind."""
+    twin = _distributed_twin(agg_shack.metastore, tmp_path_factory)
+    sc = spark.sparkContext
+
+    def cache_state():
+        return (
+            sc._jsc.getPersistentRDDs().size(),
+            spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+        )
+
+    before = cache_state()
+    calls = {
+        "prune": lambda: twin.prune_files_with_summary(
+            list(range(0, 50, 3)), [("v", ">=", 110)]
+        ),
+        "plan_agg": lambda: twin.plan_agg([("k", ">=", 5)], **AGG_KW),
+    }
+    for name, call in calls.items():
+        group = f"test_distributed_site_jobs_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= 2, (name, n_jobs)
+    assert cache_state() == before
 
 
 def test_query_agg_scans_only_boundary_files(agg_shack):
@@ -1095,13 +1149,13 @@ def test_nullness_keeps_reference_properties():
         assert nullness_keeps("is_null", nulls, num_rows) is keep_n
 
 
-def test_plan_agg_file_subset_and_unindexed(spark, nulls_lake, agg_shack):
+def test_plan_agg_file_subset_and_unindexed(
+    spark, nulls_lake, agg_shack, tmp_path_factory
+):
     """The files= subset restricts classification to a snapshot's file
     list; subset members the store never indexed are conservatively
-    boundary; driver and distributed paths agree."""
+    boundary; driver and distributed sites agree."""
     import glob as _glob
-
-    from lakeshack_spark import metastore as ms_mod
 
     ms = agg_shack.metastore
     all_files = sorted(_glob.glob(f"{nulls_lake}/*.parquet"))
@@ -1123,15 +1177,10 @@ def test_plan_agg_file_subset_and_unindexed(spark, nulls_lake, agg_shack):
     assert ghost in boundary2 and contrib2 == {
         **contrib, "n_files_boundary": 2,
     }
-    # distributed twin
-    old = ms.DRIVER_PRUNE_MAX_FILES
-    ms_mod.FileStatsMetastore.DRIVER_PRUNE_MAX_FILES = 0
-    try:
-        slow = ms.plan_agg(
-            [("k", ">=", 5)], min_max_columns=["k"], files=subset + [ghost]
-        )
-    finally:
-        ms_mod.FileStatsMetastore.DRIVER_PRUNE_MAX_FILES = old
+    # distributed site
+    slow = _distributed_twin(ms, tmp_path_factory).plan_agg(
+        [("k", ">=", 5)], min_max_columns=["k"], files=subset + [ghost]
+    )
     assert slow == (contrib2, boundary2)
 
 

@@ -3454,6 +3454,22 @@ def test_ivfpq_encode_arrow_is_one_map_in_pandas(spark):
     assert plan.count("MapInPandas") == 1, plan
 
 
+def test_ivf_residuals_collects_centroids_once(spark):
+    """Building the residual frame collects the centroid set once: the
+    same entries assign the cells and build the centroid map, so the
+    build runs exactly one Spark job."""
+    emb = load_table(spark, SF, "embeddings")
+    cents = similarity.sample_centroids(emb, 4)
+    sc = spark.sparkContext
+    group = "test_ivf_residuals_collects_centroids_once"
+    sc.setJobGroup(group, group)
+    try:
+        similarity.ivf_residuals(emb, cents)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_ivfpq_encode_arrow_cells_exact_and_edges(spark):
     """The one-pass encode assigns exactly ivf_assign's cells and equals
     the residual frame's PQ encode in every column (sf0.001 and the

@@ -74,12 +74,11 @@ def test_null_stats_always_keep():
 
 
 # ---------------------------------------------------------------------
-# Vectorized driver-side pruner vs a pure-Python reference: the numpy
-# fast path turns NULL stats into NaN/NaT whose comparisons are False and
-# must be re-kept by the null mask — fixture stores carry no NULL stats,
-# so these properties pin that edge directly on synthetic Arrow tables
-# (int + string cluster columns, timestamp clause columns, single- and
-# double-sided NULLs).
+# The vectorized classifier (driver site) vs a pure-Python reference:
+# NULL stats must keep the file for every clause and every IN-list value
+# — fixture stores carry no NULL stats, so these properties pin that edge
+# directly on synthetic Arrow tables (int + string cluster columns,
+# timestamp clause columns, min-only, max-only and two-sided NULLs).
 # ---------------------------------------------------------------------
 
 from datetime import datetime, timedelta
@@ -138,12 +137,17 @@ _T0 = datetime(2021, 1, 1)
 interval_ints = st.tuples(st.integers(-50, 50), st.integers(-50, 50)).map(
     lambda t: (min(t), max(t))
 )
-maybe_null = st.one_of(st.just((None, None)), st.just(("lo_null",)), interval_ints)
+maybe_null = st.one_of(
+    st.just((None, None)), st.just(("lo_null",)), st.just(("hi_null",)), interval_ints
+)
+ts_days = st.tuples(st.integers(0, 40), st.integers(0, 40)).map(
+    lambda t: (_T0 + timedelta(days=min(t)), _T0 + timedelta(days=max(t)))
+)
 ts_interval = st.one_of(
     st.just((None, None)),
-    st.tuples(st.integers(0, 40), st.integers(0, 40)).map(
-        lambda t: (_T0 + timedelta(days=min(t)), _T0 + timedelta(days=max(t)))
-    ),
+    ts_days,
+    ts_days.map(lambda t: (None, t[1])),  # min-only NULL
+    ts_days.map(lambda t: (t[0], None)),  # max-only NULL
 )
 
 
@@ -164,7 +168,9 @@ def test_vectorized_pruner_matches_python_reference(
     rows = []
     for i, kp in enumerate(k_stats):
         if kp == ("lo_null",):
-            k_lo, k_hi = None, i  # single-sided NULL
+            k_lo, k_hi = None, i  # single-sided NULLs
+        elif kp == ("hi_null",):
+            k_lo, k_hi = i, None
         else:
             k_lo, k_hi = kp
         ts_lo, ts_hi = ts_stats.draw(ts_interval)
@@ -198,7 +204,7 @@ def test_vectorized_pruner_matches_python_reference(
     )
     ms = _fake_metastore(spark_for_props, table, data_schema, "k", ["ts"])
     clauses = [("ts", clause_op, _T0 + timedelta(days=clause_day))]
-    got, _tbl = ms._prune_driver_side(list(values), clauses)
+    got = ms.prune(list(values), clauses)
     want = _ref_prune(rows, sorted(values), clauses, ("k", "ts"), "k")
     assert got == want
 
@@ -226,7 +232,8 @@ def test_vectorized_pruner_matches_python_reference(
 def test_vectorized_pruner_string_cluster_matches_reference(
     spark_for_props, s_stats, values
 ):
-    """String cluster columns take the Arrow-kernel (object-dtype) path."""
+    """String cluster columns: the IN-list search runs on object-dtype
+    stats."""
     import pyarrow as pa
     from pyspark.sql import types as T
 
@@ -251,6 +258,6 @@ def test_vectorized_pruner_string_cluster_matches_reference(
     )
     data_schema = T.StructType([T.StructField("s", T.StringType())])
     ms = _fake_metastore(spark_for_props, table, data_schema, "s", [])
-    got, _tbl = ms._prune_driver_side(list(values), [])
+    got = ms.prune(list(values))
     want = _ref_prune(rows, sorted(values), [], ("s",), "s")
     assert got == want
