@@ -21,7 +21,11 @@ capabilities are expressed as a thin layer over Spark built-ins:
 
 from lakeshack_spark.engine import Lakeshack
 from lakeshack_spark.metastore import FileStatsMetastore
-from lakeshack_spark.session import configure_session, get_spark
+from lakeshack_spark.session import (
+    configure_session,
+    get_spark,
+    reuse_worker_zip_directories,
+)
 
 __version__ = "0.1.0"
 
@@ -32,3 +36,5 @@ __all__ = [
     "configure_session",
     "__version__",
 ]
+
+reuse_worker_zip_directories()

@@ -8,8 +8,60 @@ runtime-settable or a benign default.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+#: The re-read that :func:`_invalidate_zip_if_changed` delegates to.
+_stock_zip_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _invalidate_zip_if_changed(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when ``(st_mtime_ns, st_size, st_ino)`` differs from
+    the signature recorded at this importer's last read, or the stat
+    fails; the re-read itself is the stock method."""
+    try:
+        st = os.stat(self.archive)
+        sig = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        sig = None
+    if sig is None or sig != getattr(self, "_lakeshack_zip_sig", None):
+        _stock_zip_invalidate(self)
+        self._lakeshack_zip_sig = sig
+
+
+def reuse_worker_zip_directories() -> None:
+    """In a PySpark worker on Python < 3.13, stop re-reading unchanged
+    zip archives on every task (idempotent; a no-op anywhere else).
+
+    The worker calls ``importlib.invalidate_caches()`` at the start of
+    every task (``pyspark/worker_util.py`` ``setup_spark_files``). Before
+    CPython 3.13 that makes each ``zipimporter`` on ``sys.path`` re-read
+    its archive's whole central directory: 16 importers over
+    ``pyspark.zip``, the py4j zip and the Spark core jar, 26,672 entries.
+    At local[4] (4 cores) one such call took a median 122 ms in a warm
+    worker, and a 4-task identity stage's tasks ran 260-400 ms where
+    they run 56-136 ms without it. It is a per-task fixed cost on every
+    Python stage: metastore ingest's footer reads and every Arrow kernel.
+    CPython 3.13 made the re-read lazy (``zipimport.zipimporter
+    ._get_files``): ``invalidate_caches`` only drops the cached directory.
+    Here :func:`_invalidate_zip_if_changed` replaces the method, so a
+    changed archive is re-read exactly as before and an unchanged one
+    keeps its directory; the first task of a worker still reads it once.
+
+    The package's ``__init__`` calls this, and every kernel's pickled
+    reference imports the package in the worker. The driver process (no
+    ``SparkFiles._is_running_on_worker``) keeps the stock ``zipimport``.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    files = sys.modules.get("pyspark.core.files")
+    if files is None or not files.SparkFiles._is_running_on_worker:
+        return
+    zipimport.zipimporter.invalidate_caches = _invalidate_zip_if_changed
+
 
 # Confs that are safe (and required) to set on an already-running session,
 # e.g. the driver harness's session which we do not construct ourselves.

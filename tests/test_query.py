@@ -307,6 +307,37 @@ def test_query_input_files_match_plain_read(spark, wide_shack):
         assert sorted(got) == sorted(want)
 
 
+PYTHON_EXEC_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInArrow",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "PythonMapInArrow",
+)
+
+
+def _python_exec_nodes(df) -> list[str]:
+    df.toArrow()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in PYTHON_EXEC_NODES if n in plan]
+
+
+def test_lookups_run_no_python(spark, wide_shack):
+    """A point and a wide lookup execute JVM-only plans: no stage of a
+    lookup starts a Python worker, so lookup latency carries none of the
+    per-task Python fixed cost. The detector does see a ``mapInArrow``."""
+    point = wide_shack.query([7])
+    wide = wide_shack.query(
+        WIDE_KEYS, [("o_orderdate", ">=", datetime(1995, 1, 1))]
+    )
+    for df in (point, wide):
+        assert "Scan parquet" in df._jdf.queryExecution().executedPlan().toString()
+        assert _python_exec_nodes(df) == []
+    control = point.mapInArrow(lambda batches: batches, point.schema)
+    assert "MapInArrow" in _python_exec_nodes(control)
+
+
 def test_missing_candidate_raises_path_not_found(spark, tmp_path_factory):
     """A candidate deleted from disk before this shack first opened it
     fails at query() with PATH_NOT_FOUND, as a plain read of the list
